@@ -904,18 +904,10 @@ object RunOts {
           .select(unix_micros(col("time").cast("timestamp")).as("__rus"),
             col(hv).cast("double").as("__hv"))
           .filter(col("__hv").isNotNull && !isnan(col("__hv")))
-        // the reference's reindex(method="nearest") is UNBOUNDED — absent
-        // an explicit brange_tolerance_sec, derive a tolerance spanning
-        // both series (one tiny agg over two ts columns; the aux series is
-        // small) so every sonar time finds its nearest brange sample
+        // the reference's reindex(method="nearest") is UNBOUNDED unless
+        // brange_tolerance_sec says otherwise
         val tolUs = meta.dbl("brange_tolerance_sec").map(s => (s * 1e6).toLong)
-          .getOrElse {
-            val lr = l.agg(min(col("__tus")), max(col("__tus"))).head()
-            val rr = rGood.agg(min(col("__rus")), max(col("__rus"))).head()
-            if (lr.isNullAt(0) || rr.isNullAt(0)) 1L
-            else math.max(lr.getLong(1), rr.getLong(1)) -
-              math.min(lr.getLong(0), rr.getLong(0)) + 1L
-          }
+          .getOrElse(graft.ops.Align.Unbounded)
         val near = graft.ops.Align.asofNearest(l, rGood, "__tus", "__rus", tolUs)
         df = graft.ops.Align.interpLinear(near, rGood, "__tus", "__rus",
             "__hv", tolUs, "__hvi")

@@ -1,215 +1,230 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Time-alignment operators (SURVEY §2.4): stglib has no general join — it has
  * `reindex_like(method="nearest", tolerance=...)` patterns
  * (stglib/aqd/aqdutils.py:93-118, stglib/core/utils.py:1946-1956) and
  * calendar regularization (stglib/sig/cdf2nc.py:1553-1594). Re-expressed as
- * sub-bucketed equi-joins + a map-side-combinable best-candidate aggregate.
- *
- * Scale design: the right ("aux") side is broadcast — met/boundary series are
- * orders of magnitude smaller than measurement series. Sub-buckets of width
- * tolerance/64 plus per-bucket boundary rows keep the candidate count per
- * left row O(density·width + 1) — independent of how many aux rows fall in
- * the tolerance band (see [[subBucketCandidates]]). Left rows with no
- * candidate within tolerance survive with nulls (reindex semantics, not
- * inner-join semantics).
+ * one sorted sweep over the tagged union of both sides (see [[sweep]]): one
+ * range exchange on the timestamp, then a two-pointer pass per partition.
+ * Neither side is broadcast and no candidate set is built, so the cost is
+ * one shuffle of left ∪ right whatever the tolerance or the aux density.
+ * Left rows with no right row within tolerance survive with nulls (reindex
+ * semantics, not inner-join semantics), and every left row — duplicates
+ * included — gives exactly one output row.
  */
 object Align {
 
-  /** Sub-buckets per tolerance width — candidate count per left row is
-    * O(aux density · tolerance / SubBuckets + 1). */
-  private val SubBuckets = 64L
+  /** Tolerance that admits every right row: the reference's unbounded
+    * `reindex(method="nearest")`. */
+  val Unbounded: Long = Long.MaxValue
 
-  /** For every key in `leftKeys` (distinct BIGINT col `__kk`), the max of
-    * `vals.__v` over val-keys STRICTLY below the left key (Long.MinValue
-    * when none). Scale-safe: [[Index.withRunningMax]] over the BUCKET axis
-    * (bounded by time-span / bucket width, never by data size), the
-    * strictly-below semantics from shifting val keys up by one and making
-    * left keys sort after val rows on the same key. */
-  private def strictPrefixMax(leftKeys: DataFrame, vals: DataFrame): DataFrame = {
-    val tagged = vals
-      .select((col("__kk") + 1).as("__kk"), col("__v"), lit(0).as("__tag"))
-      .unionByName(leftKeys.select(col("__kk"),
-        lit(null).cast("long").as("__v"), lit(1).as("__tag")))
-    Index.withRunningMax(tagged, Seq("__kk", "__tag"), "__v", "__bound")
-      .filter(col("__tag") === 1)
-      .select(col("__kk"), col("__bound"))
-  }
+  private sealed trait Pick
+  /** min (|leftTs − rightTs|, rightTs, other right columns) within tolerance */
+  private case object Nearest extends Pick
+  /** max (rightTs, other right columns) over rightTs ≤ leftTs within tolerance */
+  private case object Backward extends Pick
+  /** min (rightTs, other right columns) over rightTs ≥ leftTs within tolerance */
+  private case object Forward extends Pick
 
   /**
-   * Sub-bucketed as-of core (round-12 scale rework). The old design used
-   * tolerance-wide buckets, so EVERY aux row within the band joined every
-   * left row — candidates grow linearly with aux density (measured 7.5×
-   * bench time on 10× denser aux at sf1). With buckets of width
-   * tolerance/[[SubBuckets]], the best match for a left row is either in
-   * the row's OWN sub-bucket or is exactly the boundary row — the latest
-   * aux ts strictly before the bucket (and, for `nearest`, the earliest
-   * strictly after) — computed once per bucket via the ranged running-max
-   * index, no global window. Exactness: every pre-bucket aux row is ≤ the
-   * pre-bucket boundary ts, so if the boundary row fails the tolerance
-   * every farther row does too; ties at the boundary ts all join and the
-   * final aggregate applies the same tie-break as before.
+   * As-of core. Left rows (tag 1) and right rows (tag 0) are unioned, range
+   * partitioned on the timestamp `__ts` (width `spark.sql.shuffle.partitions`)
+   * and sorted within partitions by (`__ts`, tag, the other right columns), so
+   * at each timestamp the right rows come first, in the order of the picks'
+   * tie-breaks: a run of right rows sharing one timestamp starts with its min
+   * row (Nearest/Forward) and ends with its max row (Backward).
    *
-   * Selection is a map-side-combinable max_by/min_by aggregation over the
-   * (now O(1)-ish) candidate set — no per-left-row sort window at all.
+   * One pass per partition keeps the latest right run. A left row takes its
+   * backward bracket from that run at once; a left row that needs a forward
+   * bracket waits until the next right row arrives, or until a later left row
+   * proves no right row within tolerance can still come. Only those waiting
+   * rows are buffered, so memory is bounded by the tolerance window.
+   * Brackets that cross a partition boundary come from a tiny driver array:
+   * each partition's first right row and last right run, carried forward and
+   * backward over the empty partitions. Equal timestamps never straddle a
+   * range split, so a run is always whole inside one partition.
    *
-   * Returns (left bucket relation, candidate relation keyed by `__k`).
+   * Distances are compared as unsigned differences of ordered timestamps
+   * (`t − lo`, `hi − t`), so [[Unbounded]] tolerance never overflows. The
+   * ranged frame is [[Spread.shared]]: the summary job and the sweep read one
+   * shuffle, and [[Spread.release]] frees it.
+   *
+   * Output: the left columns, then for each pick the right columns renamed to
+   * the pick's names (all null when the pick found no row).
    */
-  private def subBucketCandidates(left: DataFrame, right: DataFrame,
-                                  leftTs: String, rightTs: String,
-                                  tolerance: Long, withBefore: Boolean,
-                                  withAfter: Boolean)
-      : (DataFrame, DataFrame) = {
-    val w = math.max(tolerance / SubBuckets, 1L)
-    val lb = Spread.byKey(left, col(leftTs))
-      .withColumn("__k", expr(s"$leftTs div $w"))
-    val rb = right.withColumn("__k", expr(s"$rightTs div $w"))
-    val leftKeys = lb.select(col("__k").as("__kk")).distinct()
-    val perBucket = rb.groupBy("__k").agg(
-      max(col(rightTs)).as("__bmax"), min(col(rightTs)).as("__bmin"))
-    val own = rb.select(col("__k") +: right.columns.map(col): _*)
-    var cand = own
-    if (withBefore) {
-      // boundary BEFORE: latest aux ts in buckets strictly below k
-      val before = strictPrefixMax(leftKeys,
-          perBucket.select(col("__k").as("__kk"), col("__bmax").as("__v")))
-        .filter(col("__bound") =!= Long.MinValue)
-        .join(rb.drop("__k"), col("__bound") === col(rightTs))
-        .select(col("__kk").as("__k") +: right.columns.map(col): _*)
-      cand = cand.unionByName(before)
+  private def sweep(left: DataFrame, right: DataFrame, leftTs: String,
+                    rightTs: String, tolerance: Long,
+                    picks: Seq[(Pick, Seq[String])]): DataFrame = {
+    require(tolerance >= 0, s"as-of tolerance must be non-negative, got $tolerance")
+    val spark = left.sparkSession
+    val nl = left.columns.length
+    val width = 2 + nl + right.columns.length
+    val tagged = left
+      .select(col(leftTs).cast("long").as("__ts") +: lit(1).as("__tag") +:
+        (left.columns.map(col) ++
+          right.schema.map(f => lit(null).cast(f.dataType).as(f.name))): _*)
+      .union(right.filter(col(rightTs).isNotNull)
+        .select(col(rightTs).cast("long").as("__ts") +: lit(0).as("__tag") +:
+          (left.schema.map(f => lit(null).cast(f.dataType).as(f.name)) ++
+            right.columns.map(col)): _*))
+    val sortKeys = Seq(col("__ts"), col("__tag")) ++
+      right.columns.filter(_ != rightTs).map(col)
+    val rows = Spread.shared(tagged
+        .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("__ts"))
+        .sortWithinPartitions(sortKeys: _*))
+      .queryExecution.toRdd
+
+    // per partition: (first right row, first and last row of its last run)
+    val ends = rows.mapPartitionsWithIndex { (p, it) =>
+      var first, runFirst, runLast: InternalRow = null
+      it.foreach { r =>
+        if (r.getInt(1) == 0) {
+          val c = r.copy()
+          if (runFirst == null || c.getLong(0) != runFirst.getLong(0)) {
+            runFirst = c
+            if (first == null) first = c
+          }
+          runLast = c
+        }
+      }
+      Iterator((p, (first, runFirst, runLast)))
+    }.collect().sortBy(_._1).map(_._2)
+    val n = ends.length
+    val before = new Array[(InternalRow, InternalRow)](n)
+    val after = new Array[InternalRow](n)
+    for (p <- 1 until n)
+      before(p) = if (ends(p - 1)._1 != null) (ends(p - 1)._2, ends(p - 1)._3)
+                  else before(p - 1)
+    for (p <- n - 2 to 0 by -1)
+      after(p) = if (ends(p + 1)._1 != null) ends(p + 1)._1 else after(p + 1)
+
+    val kinds = picks.map(_._1).toArray
+    val waits = kinds.exists(_ != Backward)
+    val rightTypes = right.schema.map(_.dataType)
+    val outExprs =
+      left.schema.zipWithIndex.map { case (f, i) =>
+        BoundReference(2 + i, f.dataType, nullable = true) } ++
+      picks.indices.flatMap(k => rightTypes.zipWithIndex.map { case (t, j) =>
+        BoundReference((k + 1) * width + 2 + nl + j, t, nullable = true) })
+    val schema = StructType(left.schema.fields ++ picks.flatMap { case (_, names) =>
+      right.schema.fields.zip(names).map { case (f, nm) => f.copy(name = nm, nullable = true) } })
+
+    val out = rows.mapPartitionsWithIndex { (p, it) =>
+      val near = (d: Long) => java.lang.Long.compareUnsigned(d, tolerance) <= 0
+      val project = UnsafeProjection.create(outExprs)
+      val noRow = new GenericInternalRow(width)
+      // the latest right run at or before the sweep position
+      var (runFirst, runLast) = Option(before(p)).getOrElse((null, null))
+      var runTs = if (runFirst == null) 0L else runFirst.getLong(0)
+      val pending = new java.util.ArrayDeque[InternalRow]()
+      val ready = new java.util.ArrayDeque[Array[InternalRow]]()
+
+      // resolve a left row against the current run and `next`, the first
+      // row of the following run (null when there is none)
+      def emit(l: InternalRow, next: InternalRow): Unit = {
+        val o = new Array[InternalRow](kinds.length + 1)
+        o(0) = l
+        if (!l.isNullAt(0)) {
+          val t = l.getLong(0)
+          val lo = if (runFirst != null && near(t - runTs)) runFirst else null
+          val hi = if (runFirst != null && runTs == t) runFirst
+                   else if (next != null && near(next.getLong(0) - t)) next else null
+          for (k <- kinds.indices) o(k + 1) = kinds(k) match {
+            case Backward => if (lo == null) null else runLast
+            case Forward => hi
+            case Nearest =>
+              if (lo == null) hi
+              else if (hi == null ||
+                java.lang.Long.compareUnsigned(t - runTs, hi.getLong(0) - t) <= 0) lo
+              else hi
+          }
+        }
+        ready.add(o)
+      }
+
+      def step(r: InternalRow): Unit =
+        if (r.getInt(1) == 0) {
+          val t = r.getLong(0)
+          if (runFirst != null && t == runTs) runLast = r.copy()
+          else {
+            val c = r.copy()
+            while (!pending.isEmpty) emit(pending.poll(), c)
+            runFirst = c; runLast = c; runTs = t
+          }
+        } else if (r.isNullAt(0)) emit(r, null)
+        else {
+          val t = r.getLong(0)
+          while (!pending.isEmpty && !near(t - pending.peek().getLong(0)))
+            emit(pending.poll(), null)
+          if (waits && !(runFirst != null && runTs == t)) pending.add(r.copy())
+          else emit(r, null)
+        }
+
+      new Iterator[InternalRow] {
+        private var ended = false
+        def hasNext: Boolean = {
+          while (ready.isEmpty && it.hasNext) step(it.next())
+          if (ready.isEmpty && !ended) {
+            ended = true
+            while (!pending.isEmpty) emit(pending.poll(), after(p))
+          }
+          !ready.isEmpty
+        }
+        def next(): InternalRow = {
+          if (!hasNext) throw new NoSuchElementException
+          val o = ready.poll()
+          var in: InternalRow = o(0)
+          for (k <- 1 until o.length)
+            in = new JoinedRow(in, if (o(k) == null) noRow else o(k))
+          project(in)
+        }
+      }
     }
-    if (withAfter) {
-      // boundary AFTER: earliest aux ts in buckets strictly above k —
-      // the same strict-prefix machinery on negated keys/values
-      val after = strictPrefixMax(
-          leftKeys.select(negate(col("__kk")).as("__kk")),
-          perBucket.select(negate(col("__k")).as("__kk"),
-            negate(col("__bmin")).as("__v")))
-        .filter(col("__bound") =!= Long.MinValue)
-        .select(negate(col("__kk")).as("__kk"), negate(col("__bound")).as("__next"))
-        .join(rb.drop("__k"), col("__next") === col(rightTs))
-        .select(col("__kk").as("__k") +: right.columns.map(col): _*)
-      cand = cand.unionByName(after)
-    }
-    (lb, cand)
+    GraftColumnBridge.dataFrame(spark, out, schema)
   }
 
   /** As-of nearest: for each left row, the single right row minimizing
-    * |leftTs − rightTs| within tolerance; ties to the earlier right row.
-    * Time columns must share units (we standardize on long microseconds).
-    * Precondition: left rows are distinct (selection groups by the full
-    * left row; duplicated left rows would collapse to one). */
+    * |leftTs − rightTs| within tolerance; ties to the earlier right row,
+    * then to the smaller remaining right columns. Time columns must share
+    * units (we standardize on long microseconds). */
   def asofNearest(left: DataFrame, right: DataFrame,
-                  leftTs: String, rightTs: String, tolerance: Long): DataFrame = {
-    val (lb, cand) = subBucketCandidates(left, right, leftTs, rightTs,
-      tolerance, withBefore = true, withAfter = true)
-    // cand carries the sub-bucketed right SERIES (data-sized in
-    // deployment length) — no forced broadcast; the join is equi on
-    // __k, so AQE broadcasts a small aux series and shuffles a big one
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col(rightTs) >= col(leftTs) - tolerance &&
-        col(rightTs) <= col(leftTs) + tolerance, "left")
-      .drop("__k")
-    val ord = struct(abs(col(leftTs) - col(rightTs)) +: col(rightTs) +:
-      right.columns.filter(_ != rightTs).map(col): _*)
-    bestPerLeft(joined, left, right, min_by(_, ord))
-  }
+                  leftTs: String, rightTs: String, tolerance: Long): DataFrame =
+    sweep(left, right, leftTs, rightTs, tolerance, Seq(Nearest -> right.columns.toSeq))
 
   /** As-of backward: most recent right row at-or-before leftTs within
-    * tolerance (boundary/brange pattern, stglib/aqd/aqdutils.py:550-560). */
+    * tolerance (boundary/brange pattern, stglib/aqd/aqdutils.py:550-560);
+    * ties to the larger remaining right columns. */
   def asofBackward(left: DataFrame, right: DataFrame,
-                   leftTs: String, rightTs: String, tolerance: Long): DataFrame = {
-    val (lb, cand) = subBucketCandidates(left, right, leftTs, rightTs,
-      tolerance, withBefore = true, withAfter = false)
-    // cand carries the sub-bucketed right SERIES (data-sized in
-    // deployment length) — no forced broadcast; the join is equi on
-    // __k, so AQE broadcasts a small aux series and shuffles a big one
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col(rightTs) <= col(leftTs) &&
-        col(rightTs) >= col(leftTs) - tolerance, "left")
-      .drop("__k")
-    val ord = struct(col(rightTs) +:
-      right.columns.filter(_ != rightTs).map(col): _*)
-    bestPerLeft(joined, left, right, max_by(_, ord))
-  }
-
-  /** Shared selection tail: one aggregate row per left row (left rows are
-    * distinct by precondition), payload = the chosen right row's columns
-    * (all null when no candidate survived the tolerance). */
-  private def bestPerLeft(joined: DataFrame, left: DataFrame, right: DataFrame,
-                          pick: org.apache.spark.sql.Column =>
-                            org.apache.spark.sql.Column): DataFrame = {
-    val payload = struct(right.columns.map(col): _*)
-    joined.groupBy(left.columns.map(col): _*)
-      .agg(pick(payload).as("__best"))
-      .select(left.columns.map(col) ++
-        right.columns.map(c => col(s"__best.$c").as(c)): _*)
-  }
+                   leftTs: String, rightTs: String, tolerance: Long): DataFrame =
+    sweep(left, right, leftTs, rightTs, tolerance, Seq(Backward -> right.columns.toSeq))
 
   /** As-of forward: earliest right row at-or-after leftTs within tolerance
-    * (the other bracket of linear interpolation). */
+    * (the other bracket of linear interpolation); ties to the smaller
+    * remaining right columns. */
   def asofForward(left: DataFrame, right: DataFrame,
-                  leftTs: String, rightTs: String, tolerance: Long): DataFrame = {
-    val (lb, cand) = subBucketCandidates(left, right, leftTs, rightTs,
-      tolerance, withBefore = false, withAfter = true)
-    // cand carries the sub-bucketed right SERIES (data-sized in
-    // deployment length) — no forced broadcast; the join is equi on
-    // __k, so AQE broadcasts a small aux series and shuffles a big one
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col(rightTs) >= col(leftTs) &&
-        col(rightTs) <= col(leftTs) + tolerance, "left")
-      .drop("__k")
-    val ord = struct(col(rightTs) +:
-      right.columns.filter(_ != rightTs).map(col): _*)
-    bestPerLeft(joined, left, right, min_by(_, ord))
-  }
+                  leftTs: String, rightTs: String, tolerance: Long): DataFrame =
+    sweep(left, right, leftTs, rightTs, tolerance, Seq(Forward -> right.columns.toSeq))
 
   /** Linear time interpolation of a right-side series onto left timestamps —
     * the reference's `reindex`/`interp` with method="linear" (xarray interp;
     * e.g. stglib met-series alignment): y = y0 + (y1−y0)·(t−t0)/(t1−t0)
     * from the bracketing right rows within tolerance; exact hits return y0;
     * a missing bracket yields null (no extrapolation, like xarray's NaN
-    * outside). Built from the bucketized as-of joins — two broadcast-range
-    * equi-joins, no global sort. */
+    * outside). Both brackets come from one sweep: (t0, y0) is the
+    * [[asofBackward]] pick and (t1, y1) the [[asofForward]] pick. */
   def interpLinear(left: DataFrame, right: DataFrame, leftTs: String,
                    rightTs: String, valCol: String, tolerance: Long,
                    outCol: String): DataFrame = {
-    // BOTH brackets from ONE sub-bucket pass (r17): the chained
-    // asofBackward∘asofForward form ran the whole candidate machinery
-    // (bucket index, boundary rows via two running-max passes, join,
-    // per-left aggregate) twice over the same right series. One joined
-    // candidate set + two conditional struct aggregates select the
-    // identical rows: max(struct(t0, y0)) over rightTs ≤ leftTs is
-    // exactly asofBackward's max_by(payload, struct(rightTs, y)) because
-    // payload and ordering struct have the same fields in the same
-    // order, and min(struct(t1, y1)) over rightTs ≥ leftTs is
-    // asofForward's min_by — InterpSamePathSpec proves row equality
-    // against the chained form on the registered query and edge series.
     val r = right.select(col(rightTs).as("__rt"), col(valCol).as("__rv"))
-    val (lb, cand) = subBucketCandidates(left, r, leftTs, "__rt",
-      tolerance, withBefore = true, withAfter = true)
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col("__rt") >= col(leftTs) - tolerance &&
-        col("__rt") <= col(leftTs) + tolerance, "left")
-      .drop("__k")
-    joined.groupBy(left.columns.map(col): _*)
-      .agg(
-        max(when(col("__rt") <= col(leftTs),
-          struct(col("__rt").as("__t0"), col("__rv").as("__y0")))).as("__lo"),
-        min(when(col("__rt") >= col(leftTs),
-          struct(col("__rt").as("__t1"), col("__rv").as("__y1")))).as("__hi"))
-      .select(left.columns.map(col) :+
-        col("__lo.__t0").as("__t0") :+ col("__lo.__y0").as("__y0") :+
-        col("__hi.__t1").as("__t1") :+ col("__hi.__y1").as("__y1"): _*)
+    sweep(left, r, leftTs, "__rt", tolerance,
+        Seq(Backward -> Seq("__t0", "__y0"), Forward -> Seq("__t1", "__y1")))
       .withColumn(outCol,
         when(col("__t1") === col("__t0"), col("__y0"))
           .otherwise(col("__y0") + (col("__y1") - col("__y0")) *

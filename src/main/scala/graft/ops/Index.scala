@@ -121,37 +121,6 @@ object Index {
       .drop("__p", "__off", "__mid")
   }
 
-  /** Append an INCLUSIVE running max of a BIGINT column in (orderCols)
-    * order — the scale-safe form of `max(v).over(Window.orderBy(...))`.
-    * Max is associative like sum, so the same two-pass shape applies:
-    * partition-local running max from a window PARTITIONED by the ranged
-    * partition id, cross-partition carry from the prefix-combined driver
-    * array (Long.MinValue for the first partition). Rows where `valueCol`
-    * is null contribute nothing. */
-  def withRunningMax(df: DataFrame, orderCols: Seq[String], valueCol: String,
-                     outCol: String, numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ranged = rangedWithMid(df, orderCols, numPartitions)
-    val per = ranged
-      .groupBy(shiftright(col("__mid"), 33).as("__p"))
-      .agg(max(col(valueCol).cast("long")).as("__m"))
-      .collect()
-      .map(r => (r.getLong(0),
-        if (r.isNullAt(1)) Long.MinValue else r.getLong(1)))
-      .sortBy(_._1)
-    var acc = Long.MinValue
-    val offs = per.map { case (p, m) => val o = (p, acc); acc = math.max(acc, m); o }
-    val offsDf = offs.toSeq.toDF("__p", "__carry")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__p").orderBy(orderCols.map(col): _*)
-    ranged.withColumn("__p", shiftright(col("__mid"), 33))
-      .join(broadcast(offsDf), "__p")
-      .withColumn(outCol, greatest(col("__carry"),
-        coalesce(max(col(valueCol).cast("long")).over(w), lit(Long.MinValue))))
-      .drop("__p", "__carry", "__mid")
-  }
-
   /** Append the previous row's value of `valueCol` (BIGINT) in (orderCols)
     * order — the scale-safe form of `lag(v, 1).over(Window.orderBy(...))`,
     * whose empty partitioning serializes the series through one task.

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
  * re-expressed over the synthetic events table. All timestamps are compared
  * as BIGINT microseconds on both engines (see Relational's ts convention).
  *
- * Scale notes: the aux ("met") side of every alignment is small relative to
- * the measurement series (hourly means vs raw samples), so each join is
- * explicitly broadcast — no shuffle of the big side. The as-of pattern is a
- * bounded range join + per-left-row rank, which AQE handles without a
- * cartesian explosion because the tolerance bounds the band.
+ * Scale notes: the met equi-join is a plain join that AQE broadcasts when
+ * the hourly series fits. The as-of patterns run through `Align`'s sorted
+ * sweep — one range exchange of both sides, no join and no per-left-row
+ * rank; the oracles state the same selection as a bounded range join +
+ * `row_number`.
  */
 object Alignment {
   import Tables._

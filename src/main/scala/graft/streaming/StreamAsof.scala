@@ -39,7 +39,9 @@ private[streaming] case class ArrivalId()
  * stglib/aqd/aqdutils.py:93-118), for live atmospheric-correction /
  * sensor-fusion feeds.
  *
- * Shape: the batch sub-bucket candidate design made watermark-evictable.
+ * Shape: a bucketed candidate join, not the batch operator's sorted sweep —
+ * a sweep needs the whole ordered series, while watermark eviction needs
+ * join state keyed by bounded time buckets.
  * Both sides bucket by ⌊ts / tolerance⌋; the right side replicates into
  * its bucket and both neighbors (any right row within tolerance of a left
  * row lands in the left row's bucket by construction), the stream-stream

@@ -62,20 +62,4 @@ class IndexSpec extends AnyFunSuite {
     assert(ok.toSeq == Seq((3L, 300L, None), (7L, 100L, Some(300L)),
       (7L, 200L, Some(100L)), (9L, 400L, Some(200L))))
   }
-
-  test("withRunningMax == max over global order, nulls contribute nothing") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(21)
-    val rows = (1 to 3000).map { i =>
-      (i.toLong, if (rnd.nextInt(10) == 0) None else Some(rnd.nextLong() % 100000L))
-    }
-    val df = rows.toDF("k", "v").repartition(7)
-    val got = Index.withRunningMax(df, Seq("k"), "v", "rm")
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    var acc = Long.MinValue
-    for ((k, v) <- rows) {
-      acc = v.fold(acc)(x => math.max(acc, x))
-      assert(got(k) == acc, s"k=$k")
-    }
-  }
 }
