@@ -17,6 +17,7 @@ import graft.functions.{AdjacentWordPairs, DotProduct, DupNgramFraction, IntDotP
  *  - `graft_dot(a, b)`               — dot product of two DOUBLE arrays
  *  - `graft_int_dot(a, b)`           — BIGINT dot product of two INT arrays
  *  - `graft_sorted_intersect(a, b)`  — |a ∩ b| of two sorted BIGINT arrays
+ *  - `graft_jaro_winkler(a, b)`      — Jaro-Winkler similarity of two strings
  *  - `graft_nfc(s)`                  — Unicode NFC normalization
  *  - `graft_quality(s)`              — single-pass text-quality score
  *  - `graft_dup_ngram_frac(s, n)`    — duplicate word-n-gram fraction
@@ -24,9 +25,11 @@ import graft.functions.{AdjacentWordPairs, DotProduct, DupNgramFraction, IntDotP
  *  - `graft_adjacent_pairs(s)`       — adjacent (w1, w2) token structs
  *  - `graft_shingle_keys3(s)`        — sorted distinct packed 3-shingles
  *
- * Both are full Catalyst `Expression`s with `doGenCode`, so they stay
+ * All are full Catalyst `Expression`s with `doGenCode`, so they stay
  * inside whole-stage codegen (Spark's lambda HOFs are interpreted per
  * element and measured ~10x slower on the same workloads — NOTES round 1).
+ * The r17/r18 kernels (SimhashSig, MinhashSigs, KmArgmin, JlProject,
+ * Md5Prefix, BloomContainsAll) are not registered as SQL functions.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

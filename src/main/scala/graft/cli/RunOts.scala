@@ -77,9 +77,6 @@ object RunOts {
     val scaled = math.max(prevWidth.toInt,
       math.min(inBytes / (10L << 20) + 1L, 4096L).toInt)
     spark.conf.set("spark.sql.shuffle.partitions", scaled)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_WIDTH"))
-      System.err.println(s"[width] step $instrument/$step: $inBytes input B" +
-        s" -> shuffle width $scaled")
     try step match {
       case "ingest" => ingest(spark, meta, input, output, instrument)
       case "clean"  => clean(spark, meta, input, output, instrument)

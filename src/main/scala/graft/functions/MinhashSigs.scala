@@ -84,20 +84,8 @@ object MinhashSigs {
     val cps = new Array[Int](b.length)
     var i = 0
     while (i < b.length) {
-      val b0 = b(i) & 0xFF
-      var cp = 0
-      var nb = 1
-      if (b0 < 0x80) cp = b0
-      else if ((b0 & 0xE0) == 0xC0) {
-        cp = ((b0 & 0x1F) << 6) | (b(i + 1) & 0x3F); nb = 2
-      } else if ((b0 & 0xF0) == 0xE0) {
-        cp = ((b0 & 0x0F) << 12) | ((b(i + 1) & 0x3F) << 6) | (b(i + 2) & 0x3F)
-        nb = 3
-      } else {
-        cp = ((b0 & 0x07) << 18) | ((b(i + 1) & 0x3F) << 12) |
-          ((b(i + 2) & 0x3F) << 6) | (b(i + 3) & 0x3F); nb = 4
-      }
-      cps(n) = cp; n += 1; i += nb
+      cps(n) = Utf8.codepoint(b, i, b.length); n += 1
+      i += Utf8.seqLen(b(i) & 0xFF)
     }
     // windows: substr(text, w, 3) for w = 1 .. max(len-2, 1) — one short
     // window for len < 3 (missing chars pack as 0)

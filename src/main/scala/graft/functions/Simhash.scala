@@ -117,25 +117,13 @@ object Simhash {
         var x = 0L
         var ci = 0
         while (i < len && b(i) != 0x20) {
-          val b0 = b(i) & 0xFF
-          var cp = 0
-          var nb = 1
-          if (b0 < 0x80) cp = b0
-          else if ((b0 & 0xE0) == 0xC0) {
-            cp = ((b0 & 0x1F) << 6) | (b(i + 1) & 0x3F); nb = 2
-          } else if ((b0 & 0xF0) == 0xE0) {
-            cp = ((b0 & 0x0F) << 12) | ((b(i + 1) & 0x3F) << 6) |
-              (b(i + 2) & 0x3F); nb = 3
-          } else {
-            cp = ((b0 & 0x07) << 18) | ((b(i + 1) & 0x3F) << 12) |
-              ((b(i + 2) & 0x3F) << 6) | (b(i + 3) & 0x3F); nb = 4
-          }
+          val cp = Utf8.codepoint(b, i, len)
           if (ci == 0) x += cp.toLong * 16777216L
           else if (ci == 1) x += cp.toLong * 65536L
           else if (ci == 2) x += cp.toLong * 256L
           else if (ci == 3) x += cp.toLong
           ci += 1
-          i += nb
+          i += Utf8.seqLen(b(i) & 0xFF)
         }
         any = true
         val hi = x >> 22

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * executed plan evaluates `filter(split(text))` ~15× and the 3-gram
  * `transform` 4× per row, all as interpreted higher-order functions
  * (measured: the quality_rank_fusion signal projection was a 3.8 s
- * broadcast-build stage at sf0.1 for 5 000 docs — `tools/ProbeQrf`).
+ * broadcast-build stage at sf0.1 for 5 000 docs — NOTES.md).
  * Each kernel here walks the UTF-8 bytes once inside whole-stage codegen.
  *
  * Cross-engine parity is preserved operation-for-operation: character

@@ -13,8 +13,6 @@ package graft.ops
   * release). */
 private[graft] final class BoundedMemo[K, V](cap: Int)(onEvict: V => Unit) {
 
-  BoundedMemo.register(this)
-
   private final class Cell(compute: () => V) {
     @volatile var computed = false
     lazy val value: V = { val v = compute(); computed = true; v }
@@ -28,6 +26,9 @@ private[graft] final class BoundedMemo[K, V](cap: Int)(onEvict: V => Unit) {
         true
       } else false
   }
+
+  // published only once `map` is set: a racing clearAll() must not see null
+  BoundedMemo.register(this)
 
   /** True iff `key` holds an already-computed value (refreshes LRU order).
     * Used by fused trainers to find which sub-problems still need work. */

@@ -689,8 +689,9 @@ object Curation {
         // division; the driver fit would silently emit NaN/Infinity (and
         // NPE on a null bin). Unreachable from nb_isotonic — bins come
         // from groupBy counts ≥ 1 — but isotonicFit is a public op.
-        require(!r.isNullAt(0) && !r.isNullAt(1) && r.getLong(1) > 0,
-          "isotonicFit: bin must be non-null and n_docs > 0 per interval")
+        require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
+          r.getLong(1) > 0,
+          "isotonicFit: bin and n_pos must be non-null and n_docs > 0 per interval")
         (r.getInt(0), r.getLong(1), r.getLong(2))
       }
       .sortBy(_._1)

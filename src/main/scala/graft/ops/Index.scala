@@ -29,19 +29,17 @@ object Index {
     * into a growing per-task sort — measured at the ×100 hobo probe
     * (50 M rows, 32 partitions): the position pass + join-back spill
     * under the 8 GiB local heap and the chain goes super-linear, while
-    * the same plan at 256 partitions runs 2.4× faster (ProbeFiltWl,
-    * same session). ~32 MB of estimated input per partition, capped at
-    * 4096; plans whose stats are the unknown-size default (≥ 2^50) fall
-    * back to the session width rather than exploding the exchange. */
+    * the same plan at 256 partitions runs 2.4× faster (SCALING.md,
+    * round 20, same session). ~32 MB of estimated input per partition,
+    * capped at 4096; plans whose stats are the unknown-size default
+    * (≥ 2^50) fall back to the session width rather than exploding the
+    * exchange. */
   private[graft] def scaledPartitions(df: DataFrame): Int = {
     val base = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = if (bytes <= 0 || bytes >= (BigInt(1L) << 50)) base
+    if (bytes <= 0 || bytes >= (BigInt(1L) << 50)) base
     else math.max(base,
       math.min((bytes / (32L << 20)).toLong + 1L, 4096L).toInt)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_WIDTH"))
-      System.err.println(s"[width] ranged: est ${bytes} B -> $n partitions")
-    n
   }
 
   private def rangedWithMid(df: DataFrame, orderCols: Seq[String],

@@ -309,45 +309,16 @@ object Spectra {
     * config-keyed filter (qaqc butter filters, filter_vel, filtered water
     * level) rides.
     *
-    * Shape (r17, measured via ProbeFiltWl — one 50 M-row session, all
-    * forms, so co-tenant noise cancels): the narrow (pos, v) projection
-    * rides the overlap-save segment kernel and the filtered values JOIN
-    * back on `__pos`, UNFORCED — the planner/AQE picks the algorithm.
-    * Two attempted "improvements" both lost to the plain join at ×100:
-    *  - hint("shuffle_hash") on the narrow side CRASHES at 50 M ×
-    *    32 partitions under the 8 GiB local heap ("Can't acquire
-    *    67108864 bytes to build hash relation") — 32 concurrent ~1.5 M
-    *    -entry builds compete with the ranged-frame cache for unified
-    *    memory. A forced data-sized build is the same trap as a forced
-    *    data-sized broadcast; kept only as an env opt-in for probes.
-    *  - the fused wide-row segment pass (explode + sort + RowEncoder
-    *    mapPartitions, no join at all) loses whole-stage codegen on the
-    *    full width; interpreted Row handling cost ~3× the join it saved
-    *    (ProbeChainTail ×100: hobo 301 s fused vs 94 s r16 smj).
-    * All forms produce bit-identical output (same fixed 65536 grid,
-    * same margins, same kernel); SPARK_GRAFT_FILTWL_FORM picks one for
-    * A/B probes. */
+    * The narrow (pos, v) projection rides the overlap-save segment kernel
+    * ([[segmentFilt]]) and the filtered values join back on `__pos`,
+    * unforced, so the planner picks the join algorithm. Every exchange is
+    * widened with the exact series length (~256k rows per task), taken from
+    * the position op's own counts pass with no extra action. A forced
+    * shuffled-hash join-back and a fused wide-row segment pass both lost to
+    * this shape; SCALING.md (round 20, r17) records the measurements. */
   def filterColumnWholeSeries(df: DataFrame, orderCols: Seq[String],
                               valueCol: String,
-                              sos: Array[Butterworth.Sos]): DataFrame =
-    sys.env.getOrElse("SPARK_GRAFT_FILTWL_FORM", "smj") match {
-      case "fused" => filterColumnWholeSeriesFused(df, orderCols, valueCol, sos)
-      case "hash" => filterColumnWholeSeriesJoin(df, orderCols, valueCol, sos,
-        hashHint = true)
-      case _ => filterColumnWholeSeriesJoin(df, orderCols, valueCol, sos,
-        hashHint = false)
-    }
-
-  /** Narrow segment kernel + join-back on `__pos`. `hashHint` forces a
-    * shuffled hash build on the narrow filtered side (probe-only: at
-    * 50 M × 32 partitions the 32 concurrent builds exhaust unified
-    * memory and the query DIES — see [[filterColumnWholeSeries]]);
-    * unforced, the planner's sort-merge join sorts both sides but
-    * spills gracefully, and partition count is the scale knob. */
-  private[graft] def filterColumnWholeSeriesJoin(df: DataFrame, orderCols: Seq[String],
-                                          valueCol: String,
-                                          sos: Array[Butterworth.Sos],
-                                          hashHint: Boolean): DataFrame = {
+                              sos: Array[Butterworth.Sos]): DataFrame = {
     // ONE withGlobalPosition call: its internal ranged frame is cached
     // (Index.rangedWithMid -> Spread.shared), so the segment-filter
     // projection and the join-back side both read that single exchange.
@@ -365,96 +336,14 @@ object Spectra {
       Index.withGlobalPositionCounted(df, orderCols, "__pos")
     val base = df.sparkSession.sessionState.conf.numShufflePartitions
     val n = math.max(base, math.min(total / 262144L + 1L, 4096L).toInt)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_WIDTH"))
-      System.err.println(s"[width] filtwl: $total rows -> $n partitions")
-    val filt0 = segmentFilt(pos, valueCol, sos, 65536, n).toDF()
+    val filt = segmentFilt(pos, valueCol, sos, 65536, n).toDF()
       .select(col("sample").as("__pos"), col("value_filt").as("__vf"))
     // explicit same-width same-key repartitions on both join sides
     // satisfy the join's required distribution: no extra exchange planned
     pos.repartition(n, col("__pos"))
-      .join(if (hashHint) filt0.hint("shuffle_hash")
-            else filt0.repartition(n, col("__pos")), Seq("__pos"), "left")
+      .join(filt.repartition(n, col("__pos")), Seq("__pos"), "left")
       .withColumn(valueCol, col("__vf"))
       .drop("__pos", "__vf")
-  }
-
-  /** FUSED overlap-save (kept for the A/B probe; see
-    * [[filterColumnWholeSeries]] — measured 3.4× slower than the hash
-    * join-back at ×100): the wide rows themselves ride the segment
-    * pass — explode duplicates only the margin rows into the neighboring
-    * segment, one AQE-exempt hash exchange on the segment id, a
-    * partition-local (seg, pos) sort, then one mapPartitions runs
-    * filtfilt per contiguous segment run and emits each row with the
-    * filtered value written through. Loses whole-stage codegen for the
-    * full width (RowEncoder round-trip per row), which costs more than
-    * the join it saves. */
-  private[graft] def filterColumnWholeSeriesFused(
-      df: DataFrame, orderCols: Seq[String], valueCol: String,
-      sos: Array[Butterworth.Sos]): DataFrame = {
-    val margin = Butterworth.marginFor(sos)
-    val segLen = 65536
-    require(segLen > 2 * margin, s"segLen $segLen must exceed 2x margin $margin")
-    val spark = df.sparkSession
-    // value column normalized to non-null DOUBLE up front (the kernel
-    // contract), which also fixes the output slot the kernel writes into
-    val pos = Index.withGlobalPosition(df, orderCols, "__pos")
-      .withColumn(valueCol,
-        coalesce(col(valueCol).cast("double"), lit(Double.NaN)))
-    val segd = pos
-      .withColumn("__segs", array_compact(array(
-        expr(s"__pos div $segLen"),
-        when(col("__pos") % segLen < margin, expr(s"__pos div $segLen - 1")),
-        when(col("__pos") % segLen >= segLen - margin,
-          expr(s"__pos div $segLen + 1")))))
-      .withColumn("__seg", explode(col("__segs")))
-      .drop("__segs")
-      .filter(col("__seg") >= 0)
-    val inSchema = segd.schema
-    val vIdx = inSchema.fieldIndex(valueCol)
-    val posIdx = inSchema.fieldIndex("__pos")
-    val segIdx = inSchema.fieldIndex("__seg")
-    val outFields = inSchema.fields.zipWithIndex
-      .filter { case (_, i) => i != posIdx && i != segIdx }
-    val outSchema = org.apache.spark.sql.types.StructType(outFields.map(_._1))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val n = spark.sparkContext.defaultParallelism
-    // lit(0) keeps the exchange AQE-exempt (same trick as perGroup): an
-    // upstream hash partitioning on a colliding key set must not elide
-    // the repartition and serialize the kernel through one task
-    segd.repartition(n, col("__seg"), lit(0))
-      .sortWithinPartitions("__seg", "__pos")
-      .mapPartitions { it =>
-        val b = it.buffered
-        new Iterator[org.apache.spark.sql.Row] {
-          private var out: Iterator[org.apache.spark.sql.Row] = Iterator.empty
-          private def advance(): Unit = {
-            while (!out.hasNext && b.hasNext) {
-              val seg = b.head.getLong(segIdx)
-              val buf = scala.collection.mutable.ArrayBuffer
-                .empty[org.apache.spark.sql.Row]
-              while (b.hasNext && b.head.getLong(segIdx) == seg) buf += b.next()
-              val y = Butterworth.filtfilt(sos,
-                buf.map(_.getDouble(vIdx)).toArray)
-              out = buf.indices.iterator
-                .filter(i => buf(i).getLong(posIdx) / segLen == seg)
-                .map { i =>
-                  val r = buf(i)
-                  val vals = new Array[Any](outFields.length)
-                  var j = 0
-                  while (j < outFields.length) {
-                    val srcIdx = outFields(j)._2
-                    vals(j) = if (srcIdx == vIdx) y(i) else r.get(srcIdx)
-                    j += 1
-                  }
-                  new org.apache.spark.sql.catalyst.expressions
-                    .GenericRowWithSchema(vals, outSchema)
-                }
-            }
-          }
-          def hasNext: Boolean = { advance(); out.hasNext }
-          def next(): org.apache.spark.sql.Row = { advance(); out.next() }
-        }
-      }(enc)
   }
 
   /** Zero-phase Butterworth filtering per series/burst/bin group

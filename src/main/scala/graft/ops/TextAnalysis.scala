@@ -120,7 +120,7 @@ object TextAnalysis {
   /** Single-pass codegen form of `duplicateNgramFraction(tokens(text), n)`
     * for hot projections: the HOF formulation re-evaluates the
     * tokenization and the n-gram `transform` several times once Catalyst
-    * inlines the projection (ProbeQrf measured the fused signal projection
+    * inlines the projection (NOTES.md records the fused signal projection
     * at 3.8 s for 5 000 docs), while [[graft.functions.DupNgramFraction]]
     * walks the UTF-8 bytes once. Value-identical (QualityKernelSpec proves
     * bitwise agreement on the corpus + edge shapes). */

@@ -3220,7 +3220,7 @@ object PipelineQueries {
         // materialization point before the final top-k window: with the
         // filter(rank<=50) above a live 4-window tree, Spark re-executes
         // the whole LM sub-pipeline instead of reusing its cache (measured
-        // 14 s vs 0.3 s at sf1 — tools/ProbeFusion); sharing the fused
+        // 14 s vs 0.3 s at sf1 — SCALING.md); sharing the fused
         // scores (1 row/doc) makes the final ranking read 50k rows, not
         // 15M bigrams
         val fused = graft.ops.Spread.shared(sig

@@ -198,16 +198,12 @@ object AuditAll {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE wraps the physical plan in AdaptiveSparkPlanExec, whose
-      // children are hidden from foreach — with it on, every check below
-      // silently sees only the wrapper node. The static plan has the same
-      // window/join shapes the audit is looking for.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4)
+    // AQE wraps the physical plan in AdaptiveSparkPlanExec, whose
+    // children are hidden from foreach — with it on, every check below
+    // silently sees only the wrapper node. The static plan has the same
+    // window/join shapes the audit is looking for.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     // Justified non-1-row BNL exemptions (each bounded by MODEL cardinality,
     // not data size — re-justify before adding entries):

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Chain-level scaling harness (dev tool): generates deployment-shaped
   * synthetic inputs for every per-family CLI chain at a given size
   * multiplier (fixtures shared with [[FuzzChains]] via [[ChainFixtures]]),
@@ -14,11 +12,7 @@ object ChainScale {
     val mults = args.headOption.map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 10))
     val only = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val results =

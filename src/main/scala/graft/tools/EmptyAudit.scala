@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev audit: every registered query must survive 0-row inputs (schema
   * present, no data) — degenerate deployments and empty partitions are
@@ -13,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   * any `fit` on an empty training set, not a crash. */
 object EmptyAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.001"
     val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString

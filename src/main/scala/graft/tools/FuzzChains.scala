@@ -145,11 +145,8 @@ object FuzzChains {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toDouble).getOrElse(0.05)
     val only = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed at 32, not SPARK_GRAFT_CPUS: the gate's outcomes are taken at it
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     var pass = 0

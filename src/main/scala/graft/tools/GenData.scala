@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-run data generator (dev tool): synthesizes the driver's table set
   * at an arbitrary scale factor, matching the sf0.1 schemas and the
@@ -111,15 +110,11 @@ object GenData {
     val rnSrc = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     require(!outDir.startsWith("/root/testdata"), "refusing to write into /root/testdata")
 
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // int64 µs on disk (not INT96): the driver's events.parquet is
-      // timestamp[us] — replicate the same physical type
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed at 32, not SPARK_GRAFT_CPUS: the tables must not vary by machine
+    val spark = graft.Sessions.local(32)
+    // int64 µs on disk (not INT96): the shipped events.parquet is
+    // timestamp[us] — replicate the same physical type
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

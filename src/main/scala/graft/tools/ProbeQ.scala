@@ -1,18 +1,13 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
-/** Dev probe: time ANY registered query exactly as Bench invokes it
-  * (fresh fn call, count() action, Spread release between runs), with
-  * stage-level attribution of the steady-state (3rd) run. Args: query
-  * names. Env: SPARK_GRAFT_SF_DIR. */
+/** The per-query profiler: times ANY registered query exactly as Bench
+  * invokes it (fresh fn call, count() action, Spread release and trainer
+  * memo clear between runs), then prints the formatted physical plan and
+  * the stage-level attribution of the steady-state (3rd) run. Args: query
+  * names. Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (see [[graft.Sessions]]). */
 object ProbeQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -33,8 +28,11 @@ object ProbeQ {
     for (name <- args) {
       def once(tag: String): Unit = {
         val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, dir).count()
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        df.count()
         println(f"PROBE $name $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        // the attributed run's plan, explained while its caches are live
+        if (tag == "run3") df.explain("formatted")
         graft.ops.Spread.release(spark)
         // match Bench's cold-cost basis (r18): trainer memos cleared at
         // the query boundary, so run3 stage attribution covers training

@@ -240,8 +240,8 @@ class CutoffSpec extends AnyFunSuite {
 }
 
 /** Golden cross-validation against numpy: PSD values computed by an
-  * independent numpy implementation (same LCG-deterministic signal; see
-  * tools/WelchX.scala for the generator) must match to double precision. */
+  * independent numpy implementation (same LCG-deterministic signal; the
+  * generator is inline below) must match to double precision. */
 class WelchGoldenSpec extends AnyFunSuite {
   test("PSD matches numpy rfft implementation on a deterministic signal") {
     var s = 123456789L

@@ -44,4 +44,16 @@ class IsotonicSpec extends AnyFunSuite {
       Spread.release(spark)
     }
   }
+
+  test("a null bin or a null n_pos fails with the same message") {
+    import spark.implicits._
+    def fit(rows: Seq[(Option[Int], Long, Option[Long])]): String =
+      intercept[IllegalArgumentException] {
+        Curation.isotonicFit(rows.toDF("bin", "n_docs", "n_pos"))
+      }.getMessage
+    val nullBin = fit(Seq((Some(0), 5L, Some(1L)), (None, 5L, Some(2L))))
+    val nullPos = fit(Seq((Some(0), 5L, Some(1L)), (Some(1), 5L, None)))
+    assert(nullBin.contains("must be non-null"))
+    assert(nullPos == nullBin)
+  }
 }

@@ -44,29 +44,33 @@ class QaqcFilterSpec extends AnyFunSuite {
     assert(rms < 0.1, s"high-frequency energy survived: rms $rms")
   }
 
-  test("all three whole-series filter forms are value-identical") {
-    // the smj join-back is the shipped default; the hash-hint and fused
-    // forms are kept for A/B probes (SCALING.md r17) and must not rot:
-    // same fixed 65536 grid, same margins, same kernel => same bits
+  test("whole-series filter across segments == segmented kernel, shuffled input") {
+    // 150,000 rows span three 65,536-row segments, so the distributed
+    // margin duplication and the join-back meet two segment boundaries
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val rows = series(3000)
-    val df = rows.toDF("t", "P_1")
+    val n = 150000
+    val x = Array.tabulate(n)(i =>
+      10.0 + 0.5 * math.sin(2 * math.Pi * 0.002 * i) +
+        0.2 * math.sin(2 * math.Pi * 0.11 * i) +
+        ((i * 2654435761L % 1000) - 500) / 5000.0)
+    val df = new scala.util.Random(17).shuffle((0 until n).toVector)
+      .map(i => (i.toLong, x(i))).toDF("t", "P_1")
       .withColumn("other", col("t") % 7)
     val sos = Butterworth.lowpass(4, 1.0 / 10.0, 1.0)
-    def vals(d: org.apache.spark.sql.DataFrame): Seq[Double] =
-      d.orderBy("t").collect().map(_.getAs[Double]("P_1")).toSeq
-    val smj = vals(Spectra.filterColumnWholeSeriesJoin(
-      df, Seq("t"), "P_1", sos, hashHint = false))
-    val hash = vals(Spectra.filterColumnWholeSeriesJoin(
-      df, Seq("t"), "P_1", sos, hashHint = true))
-    val fused = vals(Spectra.filterColumnWholeSeriesFused(
-      df, Seq("t"), "P_1", sos))
-    assert(smj == hash, "hash-hint form diverged from smj")
-    assert(smj == fused, "fused form diverged from smj")
-    // and the schema round-trips: same columns, filtered col is double
-    val out = Spectra.filterColumnWholeSeriesFused(df, Seq("t"), "P_1", sos)
+    val out = Spectra.filterColumnWholeSeries(df, Seq("t"), "P_1", sos)
     assert(out.columns.toSet == Set("t", "P_1", "other"))
+    val rows = out.orderBy("t").collect()
+    assert(rows.length == n)
+    assert(rows.indices.forall(i => rows(i).getAs[Long]("t") == i &&
+      rows(i).getAs[Long]("other") == i % 7))
+    val got = rows.map(_.getAs[Double]("P_1"))
+    // same grid, same margins, same kernel => same bits
+    val seg = Butterworth.filtfiltSegmented(sos, x, 65536)
+    (0 until n).foreach(i => assert(got(i) == seg(i), s"row $i"))
+    val single = Butterworth.filtfilt(sos, x)
+    val maxDiff = (0 until n).map(i => math.abs(got(i) - single(i))).max
+    assert(maxDiff < 1e-12, s"max segment-boundary error $maxDiff")
   }
 
   test("{var}_med_filt smooths with scipy's zero-padded median") {

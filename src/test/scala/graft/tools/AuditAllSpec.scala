@@ -89,6 +89,26 @@ class AuditAllSpec extends AnyFunSuite {
     assert(AuditAll.auditCollectSites() == 0)
   }
 
+  test("library layers read no environment variables or system properties") {
+    // only entry points (cli, tools, Bench, Verify, Sessions) may read them
+    val read = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
+    val hits = Seq("core", "functions", "io", "kernels", "ops", "queries",
+        "streaming").flatMap { layer =>
+      val dir = java.nio.file.Paths.get("src/main/scala/graft", layer)
+      assert(java.nio.file.Files.isDirectory(dir), s"missing $dir")
+      val it = java.nio.file.Files.walk(dir).iterator()
+      val files = scala.collection.mutable.Buffer[java.nio.file.Path]()
+      while (it.hasNext) files += it.next()
+      files.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
+        lines.indices.collect {
+          case i if read.findFirstIn(lines(i)).isDefined => s"$f:${i + 1}"
+        }
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("an unhinted equi-join is not flagged even when the planner " +
        "broadcasts it by size") {
     val data = spark.range(100)
