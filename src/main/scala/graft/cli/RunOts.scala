@@ -16,10 +16,16 @@ import org.apache.spark.sql.functions._
  *   ingest : instrument file → EPIC/CF long-format parquet ("-raw")
  *   clean  : raw → clip → atmos-correct → call_qaqc → stats → parquet ("b")
  *   waves  : clean → burst reshape → Welch wave statistics → trims ("s-a")
+ *   diwasp : clean → burst reshape → DIWASP directional statistics (+ grid)
+ *   export : any product → netCDF-3 classic / CDF-5 / netCDF-4 file
+ *   turnaround : instrument file → quick-look netCDF + QA summary parquet
+ *   nc2xy  : sweep-averaged sonar product → x/y-regridded images
  *
- * `runPipeline` is the minimum end-to-end slice of SURVEY §7.3 (the RBR
- * pressure-logger wave chain: stglib/rsk/csv2cdf.py:11 → rsk/cdf2nc.py:8 →
- * rsk/nc2waves.py:9 → core/waves.py:571).
+ * Every parquet product goes through one sink, [[write]].
+ *
+ * rsk ingest → clean → waves is the minimum end-to-end slice of SURVEY
+ * §7.3 (the RBR pressure-logger wave chain: stglib/rsk/csv2cdf.py:11 →
+ * rsk/cdf2nc.py:8 → rsk/nc2waves.py:9 → core/waves.py:571).
  */
 object RunOts {
 
@@ -183,6 +189,34 @@ object RunOts {
     renamed
   }
 
+  /** The one product sink: full-precision parquet whose attrs sidecar
+    * stamps `note` onto `history` (stglib/core/utils.py:238-250) at a
+    * fixed epoch, so reruns are byte-identical. */
+  private def write(df: DataFrame, path: String, meta: Meta,
+                    note: String): Unit =
+    Sink.writeParquet(df, path,
+      Sink.insertHistory(meta, note, "1970-01-01T00:00:00Z"), float32 = false)
+
+  /** One raw ingest product: config renames → `shift` → clock error →
+    * [[write]] with sidecar attrs `side`. Only the IQ family shifts (to
+    * the flow-sample middle); a frame with no `time` column (burst-indexed
+    * .wad) has no clock to correct. */
+  private def writeRaw(df: DataFrame, shift: DataFrame => DataFrame,
+                       path: String, meta: Meta, side: Meta,
+                       note: String): Unit = {
+    val renamed = shift(applyRenames(df, meta))
+    write(if (renamed.columns.contains("time"))
+        Readers.applyClockError(renamed, "time", meta) else renamed,
+      path, side, note)
+  }
+
+  /** A derived product's path: `tag` goes before a `.parquet` suffix
+    * (`out.parquet` → `out-a.parquet`), else after the path. */
+  private def sibling(output: String, tag: String): String =
+    if (output.endsWith(".parquet"))
+      output.stripSuffix(".parquet") + tag + ".parquet"
+    else output + tag
+
   /** Instrument file → renamed, clock-corrected long-format raw parquet.
     * Native `.rsk` (SQLite) deployments route to the binary reader; binary
     * instrument families (.pd0/.81R/.hdr/.vhd/.wad/.mat) route to their
@@ -215,10 +249,8 @@ object RunOts {
         readText(base + ".ctl"),
         if (java.nio.file.Files.exists(datPath)) Some(readText(base + ".dat"))
         else None)
-      Sink.writeParquet(
-        Readers.applyClockError(applyRenames(df, meta), "time", meta),
-        output, Sink.insertHistory(meta, s"Ingested $input (Argonaut profiles).",
-          "1970-01-01T00:00:00Z"), float32 = false)
+      writeRaw(df, identity, output, meta, meta,
+        s"Ingested $input (Argonaut profiles).")
       return
     }
     if (lower.endsWith(".log") &&
@@ -234,18 +266,14 @@ object RunOts {
       val em = graft.io.Eofe.instMeta(text.linesIterator)
       val point = graft.io.Eofe.readPoint(spark, bytes)
         .withColumn("time", to_timestamp(col("timeUtc"))).drop("timeUtc")
-      val sideMeta = Sink.insertHistory(Meta(meta.attrs ++ em),
-        s"Ingested $input.", "1970-01-01T00:00:00Z")
-      Sink.writeParquet(
-        Readers.applyClockError(applyRenames(point, meta), "time", meta),
-        output, sideMeta, float32 = false)
+      val side = Meta(meta.attrs ++ em)
+      writeRaw(point, identity, output, meta, side, s"Ingested $input.")
       if (text.contains("##DataStart")) {
         // per-bin echo counts keyed back to the ping times
         val prof = graft.io.Eofe.readProfile(spark, bytes)
           .join(point.select("burst", "sample", "time"), Seq("burst", "sample"))
-        Sink.writeParquet(
-          Readers.applyClockError(applyRenames(prof, meta), "time", meta),
-          output + "_profiles", sideMeta, float32 = false)
+        writeRaw(prof, identity, output + "_profiles", meta, side,
+          s"Ingested $input.")
       }
       return
     }
@@ -256,14 +284,10 @@ object RunOts {
       val inFile = probeFile(input, "ABS deployment-directory")
       val dir = if (inFile.isDirectory) inFile.getPath else inFile.getParent
       val abss = graft.io.Abss.ingest(spark, dir)
-      Sink.writeParquet(
-        Readers.applyClockError(applyRenames(abss.abs, meta), "time", meta),
-        output, Sink.insertHistory(meta,
-          s"Ingested $dir (ABS bursts).", "1970-01-01T00:00:00Z"), float32 = false)
-      Sink.writeParquet(
-        Readers.applyClockError(applyRenames(abss.aux, meta), "time", meta),
-        output + "_aux", Sink.insertHistory(meta,
-          s"Ingested $dir (ABS aux).", "1970-01-01T00:00:00Z"), float32 = false)
+      writeRaw(abss.abs, identity, output, meta, meta,
+        s"Ingested $dir (ABS bursts).")
+      writeRaw(abss.aux, identity, output + "_aux", meta, meta,
+        s"Ingested $dir (ABS aux).")
       return
     }
     var sidecarExtra: Map[String, Any] = Map.empty
@@ -313,7 +337,7 @@ object RunOts {
         // MAT5 instrument families (sig/iq/rdi/abss mat2cdf)
         matIngest(spark, meta, input, instrument)
       } else if (lower.endsWith(".rsk")) {
-        val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(input))
+        val bytes = readBytes(input)
         // tstamp is ms epoch (rsk2cdf.py); channelNN→EPIC names come from
         // config keys `rename_<channel>` (the reference hardcodes channel01=
         // pressure per instrument family)
@@ -321,22 +345,17 @@ object RunOts {
           .withColumn("time", expr("timestamp_millis(tstamp)")).drop("tstamp")
         // renames must precede CF metadata: cfAttrs is keyed by EPIC names
         Readers.withCfMetadata(applyRenames(d, meta))
-      } else if (input.toLowerCase.endsWith(".tid")) {
-        val text = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(input)), "US-ASCII")
-        graft.io.Seagauge.readTid(spark, text)
+      } else if (lower.endsWith(".tid")) {
+        graft.io.Seagauge.readTid(spark, new String(readBytes(input), "US-ASCII"))
           .withColumn("time", to_timestamp(col("time"), "MM/dd/yyyy HH:mm:ss"))
           .withColumnRenamed("p_dbar", "P_1").withColumnRenamed("temp_c", "T_28")
-      } else if (lower.endsWith(".nc") || lower.endsWith(".cdf") ||
-                 lower.endsWith(".h5")) {
+      } else if (isNetcdfPath(input)) {
         // re-open a netCDF product of either family — netCDF-4/HDF5
         // (incl. chunked/DEFLATE) or classic CDF-1/CDF-5 — the reference's
         // xr.load_dataset round trip (stglib/core/utils.py:862-877)
         Readers.readNetcdf(spark, input)
-      } else if (input.toLowerCase.endsWith(".wb")) {
-        val text = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(input)), "US-ASCII")
-        graft.io.Seagauge.readWb(spark, text)
+      } else if (lower.endsWith(".wb")) {
+        graft.io.Seagauge.readWb(spark, new String(readBytes(input), "US-ASCII"))
           .withColumn("time", expr("timestamp_seconds(startTime)"))
           .withColumnRenamed("p_dbar", "P_1")
       } else if (instrument == "lisst") {
@@ -344,19 +363,10 @@ object RunOts {
         // (time, ring, vc) with the broadcast ring-size dim table to
         // `output`_vc (stglib/lisst.py:92-165 + get_ringsizes)
         val text = readText(input)
-        val scal = Readers.applyClockError(
-          applyRenames(graft.io.Lisst.readScalars(spark, text), meta),
-          "time", meta)
-        Sink.writeParquet(scal, output, Sink.insertHistory(meta,
-          s"Ingested $input (LISST scalars).", "1970-01-01T00:00:00Z"),
-          float32 = false)
-        Sink.writeParquet(
-          Readers.applyClockError(applyRenames(
-            graft.io.Lisst.readVolumeConcentration(spark, text), meta),
-            "time", meta),
-          output + "_vc",
-          Sink.insertHistory(meta, s"Ingested $input (LISST vc rings).",
-            "1970-01-01T00:00:00Z"), float32 = false)
+        writeRaw(graft.io.Lisst.readScalars(spark, text), identity, output,
+          meta, meta, s"Ingested $input (LISST scalars).")
+        writeRaw(graft.io.Lisst.readVolumeConcentration(spark, text), identity,
+          output + "_vc", meta, meta, s"Ingested $input (LISST vc rings).")
         return
       } else instrument match {
         // instrument-keyed CSV dialects (the reference's per-instrument
@@ -391,14 +401,8 @@ object RunOts {
             skipRows = meta.int("skiprows").getOrElse(7))
         case _ => Readers.readInstrumentCsv(spark, input, meta)
       }
-    val renamed = applyRenames(df, meta)
-    val shifted =
-      if (renamed.columns.contains("time"))
-        Readers.applyClockError(renamed, "time", meta)
-      else renamed // burst-indexed inputs (.wad) carry no per-sample timestamps
-    Sink.writeParquet(shifted, output,
-      Sink.insertHistory(Meta(meta.attrs ++ sidecarExtra),
-        s"Ingested $input.", "1970-01-01T00:00:00Z"), float32 = false)
+    writeRaw(df, identity, output, meta, Meta(meta.attrs ++ sidecarExtra),
+      s"Ingested $input.")
   }
 
   /** Aquadopp .hdr deployment: scrape the header keywords, read the .sen
@@ -467,10 +471,8 @@ object RunOts {
       val attrs = meta.attrs ++
         Map("data_type" -> g.dataType) ++
         g.beam2xyz.map(m => "Beam2xyz" -> m.mkString(",")).toMap
-      val shifted = Readers.applyClockError(applyRenames(g.df, meta), "time", meta)
-      Sink.writeParquet(shifted, dest, Sink.insertHistory(Meta(attrs),
-        s"Ingested $basefile (${g.dataType}).", "1970-01-01T00:00:00Z"),
-        float32 = false)
+      writeRaw(g.df, identity, dest, meta, Meta(attrs),
+        s"Ingested $basefile (${g.dataType}).")
     }
   }
 
@@ -484,19 +486,13 @@ object RunOts {
     val mat = graft.io.Mat5.parse(readBytes(input))
     val iq = graft.io.Iq.read(spark, mat)
     val shiftUs = math.round(meta.dbl("flowSampleDuration").getOrElse(0.0) / 2 * 1e6)
-    def shift(df: DataFrame): DataFrame = {
-      val shifted =
-        if (shiftUs == 0) df
-        else df.withColumn("time",
-          col("time") + expr(s"INTERVAL $shiftUs MICROSECOND"))
-      Readers.applyClockError(shifted, "time", meta)
-    }
-    Sink.writeParquet(shift(applyRenames(iq.flow, meta)), output,
-      Sink.insertHistory(meta,
-        s"Ingested $input (IQ flow).", "1970-01-01T00:00:00Z"), float32 = false)
-    Sink.writeParquet(shift(applyRenames(iq.profiles, meta)), output + "_profiles",
-      Sink.insertHistory(meta, s"Ingested $input (IQ profiles).",
-        "1970-01-01T00:00:00Z"), float32 = false)
+    def shift(df: DataFrame): DataFrame =
+      if (shiftUs == 0) df
+      else df.withColumn("time",
+        col("time") + expr(s"INTERVAL $shiftUs MICROSECOND"))
+    writeRaw(iq.flow, shift, output, meta, meta, s"Ingested $input (IQ flow).")
+    writeRaw(iq.profiles, shift, output + "_profiles", meta, meta,
+      s"Ingested $input (IQ profiles).")
   }
 
   /** Generic MAT5 ingest: equal-length top-level numeric vectors become
@@ -620,8 +616,7 @@ object RunOts {
     // (aqdturnaround.py:50) — export re-reads the sidecar, so the removal
     // must happen where the attrs live, not just in the passed config
     val sideOut = Meta(side.attrs - "AQDTransMatrix")
-    Sink.writeParquet(df, tpath, Sink.insertHistory(sideOut,
-      s"Turnaround QA for $input.", "1970-01-01T00:00:00Z"), float32 = false)
+    write(df, tpath, sideOut, s"Turnaround QA for $input.")
     export(spark, sideOut, tpath, output + "_turnaround.nc")
     val numCols = df.schema.fields.collect {
       case f if Set("double", "float", "integer", "long")(f.dataType.typeName) =>
@@ -643,9 +638,8 @@ object RunOts {
           s"'$c', `${c}__n`, `${c}__nulls`, `${c}__min`, `${c}__mean`, " +
             s"`${c}__max`, `${c}__q05`, `${c}__q95`").mkString(", ") +
           ") AS (variable, n, nulls, min, mean, max, q05, q95)"))
-      Sink.writeParquet(qa, output + "_turnaround_qa", Sink.insertHistory(side,
-        s"Turnaround QA summary for $input.", "1970-01-01T00:00:00Z"),
-        float32 = false)
+      write(qa, output + "_turnaround_qa", side,
+        s"Turnaround QA summary for $input.")
     }
   }
 
@@ -662,14 +656,6 @@ object RunOts {
   private def mul3(a: Array[Array[Double]], b: Array[Array[Double]]): Array[Array[Double]] =
     Array.tabulate(3, 3)((i, j) => (0 until 3).map(k => a(i)(k) * b(k)(j)).sum)
 
-  /** Aquadopp / HR-Aquadopp cdf2nc velocity chain
-    * (stglib/aqd/hrcdf2nc.py:23-118; aqdutils.py coord_transform:156-214,
-    * set_orientation down-flip:291-294, magvar_correct:372-432,
-    * fill_agc/fill_cor:1631-1699, make_bin_depth:337-369): per-row
-    * BEAM/XYZ→ENU rotation with the header's 3×3 geometry matrix, magnetic
-    * declination rotation, beam-averaged AGC/correlation with threshold
-    * fills, raw beam-variable drop, and bin_depth. Everything is
-    * column-expression arithmetic — one codegen'd projection, no shuffle. */
   /** BEAM/XYZ→ENU rotation only — the shared front of the velocity chain and
     * the turnaround QA path (scripts/aqdturnaround.py:20-49 copies T, applies
     * the DOWN-orientation row flip, and rotates with per-row
@@ -752,14 +738,13 @@ object RunOts {
       "user_id", "odo_%_cb", "depth_m")
   }
 
-  /** EXO post-qaqc half: turbidity -> suspended-sediment concentration
-    * (utils.turbidity_to_ssc, stglib/core/utils.py:2006-2041 — np.polyval
-    * of `Turb_ssc_calibration`, highest order first). The reference's exo
-    * cdf_to_nc calls turbidity_to_ssc for "Turb" ONLY (exo.py:221), after
-    * call_qaqc — so this runs after the common clean qaqc tail. */
-  private[cli] def exoChain(df0: DataFrame, meta: Meta): DataFrame = {
+  /** turbidity_to_ssc (stglib/core/utils.py:2006-2041): `ssc` = np.polyval
+    * of each present var's `<var>_ssc_calibration` coefficients, highest
+    * order first; a later var overwrites an earlier one's `ssc`. */
+  private def turbidityToSsc(df0: DataFrame, meta: Meta,
+                             vars: Seq[String]): DataFrame = {
     var df = df0
-    for (v <- Seq("Turb") if df.columns.contains(v))
+    for (v <- vars if df.columns.contains(v))
       meta.dblSeq(s"${v}_ssc_calibration").foreach { coef =>
         val poly = coef.zipWithIndex.map { case (c, i) =>
           val pw = coef.length - 1 - i
@@ -849,12 +834,9 @@ object RunOts {
     val out = withSweep.join(setTime, col("__set") === col("__set2"))
       .drop("__set", "__set2", "__fname", "timeRaw", "__md", "__t")
     val cols = "time" +: out.columns.filter(_ != "time").toSeq
-    Sink.writeParquet(
-      Readers.applyClockError(applyRenames(out.select(cols.map(col): _*), meta),
-        "time", meta),
-      output, Sink.insertHistory(meta,
-        s"Ingested $input (${files.length} .81R sweep files, " +
-          s"$nSweeps sweeps/set).", "1970-01-01T00:00:00Z"), float32 = false)
+    writeRaw(out.select(cols.map(col): _*), identity, output, meta, meta,
+      s"Ingested $input (${files.length} .81R sweep files, " +
+        s"$nSweeps sweeps/set).")
   }
 
   /** Imagenex rotary-sonar clean ordering (stglib/son/cdf2nc.py:7-100):
@@ -1064,9 +1046,7 @@ object RunOts {
       .toDF("timeUs", "x", "sonar_image")
       .withColumn("time", expr("timestamp_micros(timeUs)"))
       .select("time", "x", "sonar_image")
-    Sink.writeParquet(out, output, Sink.insertHistory(meta,
-      "Sonar image regridded to x/y.", "1970-01-01T00:00:00Z"),
-      float32 = false)
+    write(out, output, meta, "Sonar image regridded to x/y.")
   }
 
   /** Compass-convention rotation angle (son/cdf2nc.py:154-171): reverse
@@ -1297,32 +1277,21 @@ object RunOts {
     // come from the PD0 fixed-leader attrs via config, cdf2nc.py:66-67)
     df = aqdTrimVel(df, meta, Seq("u_1205", "v_1206", "w_1204",
       "AGC1_1221", "AGC2_1222", "AGC3_1223", "AGC4_1224"))
-    // make_bin_depth: pressure preferred, transducer depth as fallback
-    val down = meta.str("orientation").exists(_.equalsIgnoreCase("down"))
-    Seq("P_1ac", "P_1", "xducerDepthM").find(df.columns.contains).foreach { p =>
-      if (df.columns.contains("bindist"))
-        df = df.withColumn("bin_depth",
-          if (down) col(p) + col("bindist") else col(p) - col("bindist"))
-    }
-    df
+    // pressure preferred, transducer depth as fallback
+    binDepth(df, meta, Seq("P_1ac", "P_1", "xducerDepthM"))
   }
 
+  /** Aquadopp / HR-Aquadopp cdf2nc velocity chain
+    * (stglib/aqd/hrcdf2nc.py:23-118; aqdutils.py coord_transform:156-214,
+    * set_orientation down-flip:291-294, magvar_correct:372-432,
+    * fill_agc/fill_cor:1631-1699, make_bin_depth:337-369): per-row
+    * BEAM/XYZ→ENU rotation with the header's 3×3 geometry matrix, magnetic
+    * declination rotation, beam-averaged AGC/correlation with threshold
+    * fills, raw beam-variable drop, and bin_depth. Everything is
+    * column-expression arithmetic — one codegen'd projection, no shuffle. */
   private def aqdVelocityChain(df0: DataFrame, meta: Meta): DataFrame = {
-    val down = meta.str("orientation").exists(_.equalsIgnoreCase("down"))
-    var df = aqdCoordTransform(df0, meta)
-    // magnetic declination: rotate horizontal velocities + heading
-    val magvar = meta.dbl("magnetic_variation_at_site")
-      .orElse(meta.dbl("magnetic_variation")).getOrElse(0.0)
-    if (magvar != 0 && df.columns.contains("u_1205") && df.columns.contains("v_1206")) {
-      val rad = math.toRadians(magvar)
-      val (cosv, sinv) = (math.cos(rad), math.sin(rad))
-      df = df
-        .withColumn("__u2", col("u_1205") * cosv + col("v_1206") * sinv)
-        .withColumn("v_1206", -col("u_1205") * sinv + col("v_1206") * cosv)
-        .withColumn("u_1205", col("__u2")).drop("__u2")
-      if (df.columns.contains("heading"))
-        df = df.withColumn("heading", pmod(col("heading") + magvar, lit(360.0)))
-    }
+    var df = magvarRotate(aqdCoordTransform(df0, meta), meta,
+      "u_1205", "v_1206", Some("heading"))
     // beam-averaged echo intensity / correlation
     if (Seq("amp1", "amp2", "amp3").forall(df.columns.contains))
       df = df.withColumn("AGC_1202", (col("amp1") + col("amp2") + col("amp3")) / 3)
@@ -1330,27 +1299,30 @@ object RunOts {
       df = df.withColumn("cor_avg", (col("cor1") + col("cor2") + col("cor3")) / 3)
     // threshold fills over the transformed velocities
     val uvw = Seq("u_1205", "v_1206", "w_1204").filter(df.columns.contains)
-    meta.dbl("velocity_agc_min").foreach { m =>
-      if (df.columns.contains("AGC_1202"))
-        uvw.foreach(c => df = df.withColumn(c,
-          when(col("AGC_1202") > m, col(c))))
-    }
-    meta.dbl("velocity_cor_min").foreach { m =>
-      if (df.columns.contains("cor_avg"))
-        uvw.foreach(c => df = df.withColumn(c,
-          when(col("cor_avg") > m, col(c))))
-    }
+    df = velGate(df, meta, "velocity_agc_min", "AGC_1202", uvw)
+    df = velGate(df, meta, "velocity_cor_min", "cor_avg", uvw)
     // drop raw beam data (hrcdf2nc.ds_drop)
     df = df.drop("amp1", "amp2", "amp3", "cor1", "cor2", "cor3")
-    // bin_depth (make_bin_depth): atmos-corrected pressure preferred
-    val pres = Seq("P_1ac", "P_1", "pressure").find(df.columns.contains)
-    pres match {
-      case Some(p) if df.columns.contains("bindist") =>
-        df = df.withColumn("bin_depth",
-          if (down) col(p) + col("bindist") else col(p) - col("bindist"))
-      case _ =>
-    }
-    aqdTrimVel(df, meta)
+    // atmos-corrected pressure preferred
+    aqdTrimVel(binDepth(df, meta, Seq("P_1ac", "P_1", "pressure")), meta)
+  }
+
+  /** Threshold fill (fill_agc/fill_cor, stglib/aqd/aqdutils.py:1631-1699):
+    * null each of `vels` wherever the beam-averaged `gate` column is not
+    * above the configured `key` minimum. */
+  private def velGate(df: DataFrame, meta: Meta, key: String, gate: String,
+                      vels: Seq[String]): DataFrame =
+    meta.dbl(key).filter(_ => df.columns.contains(gate)).fold(df)(m =>
+      vels.foldLeft(df)((d, c) => d.withColumn(c, when(col(gate) > m, col(c)))))
+
+  /** make_bin_depth (stglib/aqd/aqdutils.py:337-369): the first present
+    * pressure candidate minus bindist for an UP-looking profiler, plus it
+    * for a DOWN-looking one. */
+  private def binDepth(df: DataFrame, meta: Meta, pres: Seq[String]): DataFrame = {
+    val down = meta.str("orientation").exists(_.equalsIgnoreCase("down"))
+    pres.find(df.columns.contains).filter(_ => df.columns.contains("bindist"))
+      .fold(df)(p => df.withColumn("bin_depth",
+        if (down) col(p) + col("bindist") else col(p) - col("bindist")))
   }
 
   /** trim_vel (stglib/aqd/aqdutils.py:435-620): the config-driven
@@ -1405,7 +1377,8 @@ object RunOts {
         val aux = Readers.readNetcdf(df.sparkSession, fpath)
           .select(unix_micros(col("time").cast("timestamp")).as("__rus"),
             col("brange").cast("double").as("__R"))
-        val head2 = aux.orderBy("__rus").limit(2).collect()
+        val head2 = aux.filter(col("__rus").isNotNull)
+          .orderBy("__rus").limit(2).collect()
         val tol = if (head2.length == 2) head2(1).getLong(0) - head2(0).getLong(0)
                   else 1L
         df = graft.ops.Align.asofNearest(
@@ -1449,10 +1422,6 @@ object RunOts {
     ProfileTrims.dropTrailingNullBins(df, vars.head, "bindist")
   }
 
-  /** Raw parquet → deployment clip → atmospheric correction → instrument
-    * velocity chain (when header attrs are present) → call_qaqc → clean
-    * parquet. The input's attrs sidecar merges UNDER the config (config
-    * wins) — the reference re-opens raw-.cdf attrs at each cdf2nc step. */
   /** Magnetic-declination rotation of a horizontal velocity pair (+
     * heading wrap), the shared magvar_correct step
     * (stglib/aqd/aqdutils.py:372-432). */
@@ -1528,21 +1497,10 @@ object RunOts {
       df = df.withColumn("cor_avg",
         corBeams.map(col).reduce(_ + _) / corBeams.length)
     val vels = Seq("U", "V", "W1", "W2").filter(df.columns.contains)
-    meta.dbl("velocity_cor_min").foreach { m =>
-      if (df.columns.contains("cor_avg"))
-        vels.foreach(c => df = df.withColumn(c, when(col("cor_avg") > m, col(c))))
-    }
-    meta.dbl("velocity_agc_min").foreach { m =>
-      if (df.columns.contains("amp_avg"))
-        vels.foreach(c => df = df.withColumn(c, when(col("amp_avg") > m, col(c))))
-    }
-    // bin_depth for profile groups (make_bin_depth)
-    val down = meta.str("orientation").exists(_.equalsIgnoreCase("down"))
-    val pres = Seq("P_1ac", "P_1", "Pressure", "pressure").find(df.columns.contains)
-    pres.filter(_ => df.columns.contains("bindist")).foreach { p =>
-      df = df.withColumn("bin_depth",
-        if (down) col(p) + col("bindist") else col(p) - col("bindist"))
-    }
+    df = velGate(df, meta, "velocity_cor_min", "cor_avg", vels)
+    df = velGate(df, meta, "velocity_agc_min", "amp_avg", vels)
+    // bin_depth for profile groups
+    df = binDepth(df, meta, Seq("P_1ac", "P_1", "Pressure", "pressure"))
     // altimeter quality units to dB (cdf2nc.py:119-123) — the quality
     // variable may already carry its renamed name (ds_rename_sig runs as
     // config renames at ingest here)
@@ -1611,18 +1569,7 @@ object RunOts {
     }
     meta.dbl("snr_threshold").foreach(beamFill("snr", _))
     meta.dbl("cor_threshold").foreach(beamFill("cor", _))
-    // turbidity_to_ssc (core/utils.py:2006-2040): polyval of the
-    // calibration coefficients (highest order first)
-    for (v <- Seq("AnalogInput1", "AnalogInput2", "Turb")
-         if df.columns.contains(v))
-      meta.dblSeq(s"${v}_ssc_calibration").foreach { coef =>
-        val poly = coef.zipWithIndex.map { case (c, i) =>
-          val pw = coef.length - 1 - i
-          if (pw == 0) lit(c) else lit(c) * pow(col(v), pw)
-        }.reduce(_ + _)
-        df = df.withColumn("ssc", poly)
-      }
-    df
+    turbidityToSsc(df, meta, Seq("AnalogInput1", "AnalogInput2", "Turb"))
   }
 
   /** atmos_correct (stglib/aqd/aqdutils.py:93-118 + core/utils.py:1386-1414):
@@ -1640,15 +1587,13 @@ object RunOts {
       case Some(f) if df.columns.contains(srcCol) =>
         val met0 = if (f.toLowerCase.endsWith(".csv"))
           spark.read.option("header", "true").option("inferSchema", "true").csv(f)
-        else if (f.toLowerCase.endsWith(".cdf") || f.toLowerCase.endsWith(".nc") ||
-                 f.toLowerCase.endsWith(".h5"))
+        else if (isNetcdfPath(f))
           Readers.readNetcdf(spark, f) // the reference's atmpres.cdf shape
         else spark.read.parquet(f)
         // the reference applies the atmpres VARIABLE's own `offset` attr
         // (utils.py:1390); config atmpres_offset overrides when present
         val fileOffset =
-          if (f.toLowerCase.endsWith(".cdf") || f.toLowerCase.endsWith(".nc") ||
-              f.toLowerCase.endsWith(".h5"))
+          if (isNetcdfPath(f))
             Readers.netcdfVarAttrs(f, "atmpres").get("offset")
               .flatMap(v => scala.util.Try(v.toDouble).toOption)
           else None
@@ -1668,6 +1613,21 @@ object RunOts {
     }
     df
   }
+
+  /** call_qaqc over `vars`: double NaNs become nulls first, then
+    * Qaqc.applyAll's config-keyed trims ordered by `order` within `part`. */
+  private def qaqc(df0: DataFrame, meta: Meta, vars: Seq[String],
+                   order: Seq[String], part: Seq[String]): DataFrame = {
+    val df = Trims.nanToNull(df0, vars.filter(c =>
+      df0.schema(c).dataType.typeName == "double"))
+    Qaqc.applyAll(df, meta, vars, order = order, part = part)
+  }
+
+  /** utils.create_z: a scalar sensor `z` = height_above_geopotential_datum
+    * + initial_instrument_height, when the datum is configured. */
+  private def createZ(df: DataFrame, meta: Meta): DataFrame =
+    meta.dbl("height_above_geopotential_datum").fold(df)(d => df.withColumn("z",
+      lit(d + meta.dbl("initial_instrument_height").getOrElse(0.0))))
 
   /** EPIC renames for the IQ flow series (iq.py:771-816 rename_vars,
     * restricted to the per-sample vars; the per-beam Profile_* renames
@@ -1832,17 +1792,11 @@ object RunOts {
 
     // call_qaqc (iq.py:84): config-keyed trims per frame; profile trims
     // partition by (beam, bin) so neighbor-sensitive passes run down time
-    val flowVars = flow.columns.filterNot(_ == "time").toSeq
-    flow = Trims.nanToNull(flow, flowVars.filter(c =>
-      flow.schema(c).dataType.typeName == "double"))
-    flow = Qaqc.applyAll(flow, meta, flowVars, order = Seq("time"), part = Nil)
-    val profVars = prof.columns
+    flow = qaqc(flow, meta, flow.columns.filterNot(_ == "time").toSeq,
+      Seq("time"), Nil)
+    prof = qaqc(prof, meta, prof.columns
       .filterNot(c => Seq("time", "beam", "bin").contains(c) || c.startsWith("__f_"))
-      .toSeq
-    prof = Trims.nanToNull(prof, profVars.filter(c =>
-      prof.schema(c).dataType.typeName == "double"))
-    prof = Qaqc.applyAll(prof, meta, profVars, order = Seq("time"),
-      part = Seq("beam", "bin"))
+      .toSeq, Seq("time"), Seq("beam", "bin"))
 
     // fill_velmean (iq.py:744-768): Vel_Mean masked wherever ANY
     // component velocity is missing
@@ -1855,9 +1809,7 @@ object RunOts {
           when(velVars.map(col(_).isNotNull).reduce(_ && _), col("Vel_Mean")))
     }
     // utils.create_z (iq.py:88): scalar sensor z for the flow series
-    for (datum <- meta.dbl("height_above_geopotential_datum"))
-      flow = flow.withColumn("z",
-        lit(datum + meta.dbl("initial_instrument_height").getOrElse(0.0)))
+    flow = createZ(flow, meta)
 
     // the flow/profiles split (iq.py:102-153): dropvars from both; the
     // long-format profile frame drops the flow-side join columns
@@ -1865,12 +1817,9 @@ object RunOts {
     prof = Clip.dropVars(prof, iqDropVars.filterNot(_ == "Vel"))
     prof = prof.drop(prof.columns.filter(_.startsWith("__f_")).toSeq: _*)
 
-    Sink.writeParquet(flow, output, Sink.insertHistory(meta,
-      "Clipped, corrected, QA/QC applied (IQ flow).", "1970-01-01T00:00:00Z"),
-      float32 = false)
-    Sink.writeParquet(prof, output + "_profiles", Sink.insertHistory(meta,
-      "Clipped, corrected, QA/QC applied (IQ profiles).",
-      "1970-01-01T00:00:00Z"), float32 = false)
+    write(flow, output, meta, "Clipped, corrected, QA/QC applied (IQ flow).")
+    write(prof, output + "_profiles", meta,
+      "Clipped, corrected, QA/QC applied (IQ profiles).")
   }
 
   /** EofE ECHOLOGGER clean (stglib/eofe.py:66-155 cdf_to_nc, point-data
@@ -1965,19 +1914,16 @@ object RunOts {
           if (orient == "UP") lit(iih) + col("bindist")
           else lit(iih) - col("bindist"))
       }
-      val svNomP = meta.dbl("EASoundSpeed_mps")
-      val salP = meta.dbl("average_salinity")
-      val wdP = meta.dbl("WATER_DEPTH")
-      if (svNomP.isDefined && salP.isDefined && wdP.isDefined &&
+      if (svNom.isDefined && salAvg.isDefined && wd.isDefined &&
           pf.columns.contains("bin_height") && df.columns.contains("temperatureC")) {
         val tmean = df.groupBy("burst").agg(avg("temperatureC").as("__tm"))
         // tmean is one row per burst (data-sized) — no forced broadcast;
         // AQE picks the build side when it fits
         pf = pf.join(tmean, Seq("burst"), "left")
         val spd = graft.functions.Physics.soundSpeedMackenzie(
-          lit(salP.get), col("__tm"), lit(wdP.get) - col("bin_height"))
+          lit(salAvg.get), col("__tm"), lit(wd.get) - col("bin_height"))
         pf = pf.withColumn("cor_bin_height",
-          round(col("bin_height") / svNomP.get * spd, 3)).drop("__tm")
+          round(col("bin_height") / svNom.get * spd, 3)).drop("__tm")
       }
       // trim_alt on Counts against the PRE-trim altitude of the same ping
       if (trimMethods.contains("altitude") && pf.columns.contains("counts"))
@@ -2013,9 +1959,8 @@ object RunOts {
       if (pf.columns.contains("counts"))
         pf = pf.withColumnRenamed("counts", "AGC_1202")
       pf = Clip.clipDs(pf, meta)
-      Sink.writeParquet(pf, output + "_profiles", Sink.insertHistory(meta,
-        "Trimmed profile echo data, corrected bin heights.",
-        "1970-01-01T00:00:00Z"), float32 = false)
+      write(pf, output + "_profiles", meta,
+        "Trimmed profile echo data, corrected bin heights.")
       // sample-dim burst average of the profile counts (the reference's
       // single-ds mean("sample") covers Counts too). Averaging reads the
       // JUST-WRITTEN product back: two actions on the pf lineage would
@@ -2028,13 +1973,8 @@ object RunOts {
         val paggs = pvars.map(c => avg(col(c)).as(c))
         val pavg = pfSaved.groupBy("burst", "bin")
           .agg(min("time").as("time"), paggs: _*).drop("burst")
-        val pAvgOut =
-          if (output.endsWith(".parquet"))
-            output.stripSuffix(".parquet") + "-a_profiles.parquet"
-          else output + "-a_profiles"
-        Sink.writeParquet(pavg, pAvgOut, Sink.insertHistory(meta,
-          "Burst-averaged profile echo product.", "1970-01-01T00:00:00Z"),
-          float32 = false)
+        write(pavg, sibling(output, "-a_profiles"), meta,
+          "Burst-averaged profile echo product.")
       }
     }
     // ds_rename_vars (eofe.py:286-302) on the long-format names
@@ -2047,9 +1987,8 @@ object RunOts {
     df = Clip.dropVars(df, Seq("ping", "pingNumInSeries", "batteryMV") ++
       (if (df.columns.contains("brange")) Seq("altitudeM") else Nil))
     df = Clip.clipDs(df, meta)
-    Sink.writeParquet(df, output, Sink.insertHistory(meta,
-      "Trimmed altimeter data, sound-speed-corrected brange.",
-      "1970-01-01T00:00:00Z"), float32 = false)
+    write(df, output, meta,
+      "Trimmed altimeter data, sound-speed-corrected brange.")
     // average_burst (eofe.py:572-585): mean across the sample dim, then
     // call_qaqc on the averaged product (the reference's qaqc placement).
     // Reads the just-written burst product back rather than re-running
@@ -2067,12 +2006,8 @@ object RunOts {
       avgDf = avgDf.withColumn("brange", round(col("brange"), 3))
     avgDf = Qaqc.applyAll(avgDf, meta,
       avgDf.columns.filterNot(_ == "time").toSeq, order = Seq("time"), part = Nil)
-    val avgOut =
-      if (output.endsWith(".parquet")) output.stripSuffix(".parquet") + "-a.parquet"
-      else output + "-a"
-    Sink.writeParquet(avgDf, avgOut, Sink.insertHistory(meta,
-      "Burst-averaged altimeter product, QA/QC applied.",
-      "1970-01-01T00:00:00Z"), float32 = false)
+    write(avgDf, sibling(output, "-a"), meta,
+      "Burst-averaged altimeter product, QA/QC applied.")
   }
 
   /** AQUAscat ABSS clean (stglib/abss.py:58-145 cdf2nc): aux-channel
@@ -2128,10 +2063,7 @@ object RunOts {
         if (orient == "DOWN") col("__P") + col("bindist")
         else col("__P") - col("bindist")).drop("__P")
     }
-    // utils.create_z
-    for (d <- meta.dbl("height_above_geopotential_datum"))
-      abs = abs.withColumn("z",
-        lit(d + meta.dbl("initial_instrument_height").getOrElse(0.0)))
+    abs = createZ(abs, meta)
     // call_qaqc over both frames
     abs = Qaqc.applyAll(abs, meta,
       abs.columns.filterNot(c => Seq("time", "xdcr_freq", "bin", "sample")
@@ -2140,12 +2072,9 @@ object RunOts {
     aux = Qaqc.applyAll(aux, meta,
       aux.columns.filterNot(c => Seq("time", "sample").contains(c)).toSeq,
       order = Seq("time"), part = Nil)
-    Sink.writeParquet(abs, output, Sink.insertHistory(meta,
-      "Scaled, corrected, QA/QC applied (ABS bursts).",
-      "1970-01-01T00:00:00Z"), float32 = false)
-    Sink.writeParquet(aux, output + "_aux", Sink.insertHistory(meta,
-      "Scaled, corrected, QA/QC applied (ABS aux).",
-      "1970-01-01T00:00:00Z"), float32 = false)
+    write(abs, output, meta, "Scaled, corrected, QA/QC applied (ABS bursts).")
+    write(aux, output + "_aux", meta,
+      "Scaled, corrected, QA/QC applied (ABS aux).")
     // burst average (abss.py:117-135): optional average_duration window
     // (samples_per_burst = duration · sample_rate), then mean over sample.
     // Reads the just-written burst product back — two actions on the abs
@@ -2181,18 +2110,12 @@ object RunOts {
         aux.drop("Battery").groupBy("time").agg(aggs.head, aggs.tail: _*)
       } else aux.drop("Battery").select("time").distinct()
     }
-    val avgOut =
-      if (output.endsWith(".parquet")) output.stripSuffix(".parquet") + "-a.parquet"
-      else output + "-a"
-    Sink.writeParquet(Qaqc.applyAll(avgDf, meta,
+    val avgOut = sibling(output, "-a")
+    write(Qaqc.applyAll(avgDf, meta,
         avgDf.columns.filterNot(c => Seq("time", "xdcr_freq", "bin").contains(c)).toSeq,
         order = Seq("time"), part = Seq("xdcr_freq", "bin")),
-      avgOut, Sink.insertHistory(meta,
-        "Created burst averaged data product", "1970-01-01T00:00:00Z"),
-      float32 = false)
-    Sink.writeParquet(avgAux, avgOut + "_aux", Sink.insertHistory(meta,
-      "Created burst averaged aux product", "1970-01-01T00:00:00Z"),
-      float32 = false)
+      avgOut, meta, "Created burst averaged data product")
+    write(avgAux, avgOut + "_aux", meta, "Created burst averaged aux product")
   }
 
   /** check_and_reshape_burst's INFERENCE (stglib/lisst.py:427-444): from
@@ -2210,7 +2133,9 @@ object RunOts {
     * PARTITIONED by burst id. */
   private def lisstBurstMap(df: DataFrame): Option[DataFrame] = {
     import org.apache.spark.sql.expressions.Window
-    val times = df.select(unix_micros(col("time")).as("__us")).distinct()
+    // null times (clock dropouts) sort first and join to no burst
+    val times = df.select(unix_micros(col("time")).as("__us"))
+      .filter(col("__us").isNotNull).distinct()
     val head = times.orderBy("__us").limit(2).collect()
     if (head.length < 2) return None
     val us0 = head(0).getLong(0)
@@ -2265,16 +2190,10 @@ object RunOts {
     }
     def qaqcOut(d0: DataFrame, keyCols: Seq[String], part: Seq[String],
                 out: String, what: String): Unit = {
-      var d = Clip.clipDs(reshape(d0), meta)
-      val vars = d.columns.filterNot(keyCols.contains).toSeq
-      d = Trims.nanToNull(d, vars.filter(c =>
-        d.schema(c).dataType.typeName == "double"))
-      d = Qaqc.applyAll(d, meta, vars,
-        order = Seq("time") ++ (if (d.columns.contains("sample"))
-          Seq("sample") else Nil), part = part)
-      Sink.writeParquet(d, out, Sink.insertHistory(meta,
-        s"Clipped, QA/QC applied ($what).", "1970-01-01T00:00:00Z"),
-        float32 = false)
+      val d = Clip.clipDs(reshape(d0), meta)
+      write(qaqc(d, meta, d.columns.filterNot(keyCols.contains).toSeq,
+        Seq("time") ++ (if (d.columns.contains("sample")) Seq("sample") else Nil),
+        part), out, meta, s"Clipped, QA/QC applied ($what).")
     }
     qaqcOut(df, Seq("time", "sample"), Nil, output, "LISST scalars")
     if (vcFile.exists)
@@ -2295,6 +2214,10 @@ object RunOts {
     cleanCommon(spark, meta0, input, output, instrument)
   }
 
+  /** Raw parquet → deployment clip → atmospheric correction → instrument
+    * velocity chain (when header attrs are present) → call_qaqc → clean
+    * parquet. The input's attrs sidecar merges UNDER the config (config
+    * wins) — the reference re-opens raw-.cdf attrs at each cdf2nc step. */
   private def cleanCommon(spark: SparkSession, meta0: Meta, input: String,
                           output: String, instrument: String): Unit = {
     val meta = stepMeta(meta0, input)
@@ -2322,36 +2245,27 @@ object RunOts {
       case _ => if (meta.has("AQDTransMatrix")) df = aqdVelocityChain(df, meta)
     }
     df = waterLevelVars(df, meta, instrument)
-    val dataVars = df.columns.filterNot(Seq("time").contains).toSeq
-    df = Trims.nanToNull(df, dataVars.filter(c =>
-      df.schema(c).dataType.typeName == "double"))
-    df = Qaqc.applyAll(df, meta, dataVars, order = Seq("time"), part = Nil)
+    df = qaqc(df, meta, df.columns.filterNot(Seq("time").contains).toSeq,
+      Seq("time"), Nil)
     if (clipAfterQaqc) df = Clip.clipDs(df, meta)
     // EXO turbidity->SSC runs after call_qaqc in the reference
-    // (exo.py:219-221), i.e. after the common qaqc tail here
-    if (instrument == "exo") df = exoChain(df, meta)
+    // (exo.py:219-221), i.e. after the common qaqc tail here, and for
+    // "Turb" only
+    if (instrument == "exo") df = turbidityToSsc(df, meta, Seq("Turb"))
     // met wind-direction corrections also run after call_qaqc
     // (met.py:102-161: "remove bad rows ... before direction corrections")
     if (instrument == "met") df = metDirCorrections(df, meta)
     // glx filtered water level runs AFTER the water_level trims
     // (glx.py:114-128 ordering)
     if (instrument == "glx") df = glxFilteredWaterLevel(df, meta)
-    Sink.writeParquet(df, output, Sink.insertHistory(meta,
-      "Clipped, corrected, QA/QC applied.", "1970-01-01T00:00:00Z"), float32 = false)
+    write(df, output, meta, "Clipped, corrected, QA/QC applied.")
     // the sonar family writes TWO products (son/cdf2nc.py:96-134): the
-    // full sweep-resolved file above and a sweep-averaged sibling
-    if (instrument == "son") {
-      val avgOut =
-        if (output.endsWith(".parquet"))
-          output.stripSuffix(".parquet") + "-a.parquet"
-        else output + "-a"
-      // averaging reads the just-written product back instead of
-      // re-running the whole clean lineage for the second action
-      Sink.writeParquet(sonAvg(spark.read.parquet(output), meta), avgOut,
-        Sink.insertHistory(meta,
-          "Sweep-averaged sonar product.", "1970-01-01T00:00:00Z"),
-        float32 = false)
-    }
+    // full sweep-resolved file above and a sweep-averaged sibling;
+    // averaging reads the just-written product back instead of re-running
+    // the whole clean lineage for the second action
+    if (instrument == "son")
+      write(sonAvg(spark.read.parquet(output), meta), sibling(output, "-a"),
+        meta, "Sweep-averaged sonar product.")
   }
 
   /** NAVD88 water-level products. The families differ
@@ -2484,7 +2398,8 @@ object RunOts {
     val sr = meta.dbl("sample_rate")
       .orElse(meta.dbl("sample_interval").map(1.0 / _))
       .getOrElse {
-        val ts = dd.orderBy("time").limit(10)
+        // nulls sort first: a clock dropout must not become sample 0
+        val ts = dd.filter(col("time").isNotNull).orderBy("time").limit(10)
           .select(unix_micros(col("time"))).collect().map(_.getLong(0))
         require(ts.length >= 2, "cannot infer sample_rate from < 2 samples")
         val diffs = ts.sliding(2).map(p => p(1) - p(0)).toArray.sorted
@@ -2525,11 +2440,6 @@ object RunOts {
           lit(null).cast("double")).otherwise(col("water_level_filt")))
   }
 
-  /** Clean parquet → burst reshape → wave statistics → stat trims.
-    * Already-burst-indexed inputs (.wad ingest output) skip the reshape;
-    * inputs with u/v velocity columns route through the PUV path (the
-    * reference's vec/aqdwvs nc2waves, stglib/core/waves.py:1847-1989)
-    * when `wave_vars: puv` is configured. */
   /** Shared waves/diwasp input resolution: read the clean parquet, pick the
     * pressure variable (P_1ac → P_1 → `pressure`, the .wad ingest naming,
     * stglib/aqd/wvswad2cdf.py), and burst-reshape continuous inputs.
@@ -2552,6 +2462,11 @@ object RunOts {
     (bursts, presVar, nsamps, fs, z)
   }
 
+  /** Clean parquet → burst reshape → wave statistics → stat trims.
+    * Already-burst-indexed inputs (.wad ingest output) skip the reshape;
+    * inputs with u/v velocity columns route through the PUV path (the
+    * reference's vec/aqdwvs nc2waves, stglib/core/waves.py:1847-1989)
+    * when `wave_vars: puv` is configured. */
   def waves(spark: SparkSession, meta0: Meta, input: String, output: String): Unit = {
     val meta = stepMeta(meta0, input)
     val (bursts, presVar, nsamps, fs, z) = waveInput(spark, meta, input)
@@ -2592,8 +2507,7 @@ object RunOts {
       stats = stats.withColumn("wp_peak", when(c, col("wp_peak")))
         .withColumn("wp_4060", when(c, col("wp_4060")))
     }
-    Sink.writeParquet(stats, output, Sink.insertHistory(meta,
-      "Wave statistics computed.", "1970-01-01T00:00:00Z"), float32 = false)
+    write(stats, output, meta, "Wave statistics computed.")
   }
 
   /** Directional wave analysis — the reference's `nc2diwasp` step
@@ -2618,8 +2532,7 @@ object RunOts {
       .getOrElse(if (method.equalsIgnoreCase("IMLM")) 5 else 0)
     val fmin = meta.dbl("diwasp_fmin").getOrElse(0.05)
     val fmax = meta.dbl("diwasp_fmax").getOrElse(0.45)
-    def note(what: String) = Sink.insertHistory(meta,
-      s"DIWASP $method $what computed.", "1970-01-01T00:00:00Z")
+    def note(what: String) = s"DIWASP $method $what computed."
     if (meta.bool("diwasp_dspec").contains(true)) {
       // one kernel run per burst serves BOTH outputs: the grid rows carry
       // the per-burst stats, so the estimator isn't executed twice
@@ -2628,17 +2541,16 @@ object RunOts {
           "u", "v", depth = depth, zp = z, zuv = zuv, fs = fs, nfft = nfft,
           dres = dres, method = method, miter = miter,
           fmin = fmin, fmax = fmax).toDF())
-      Sink.writeParquet(
+      write(
         grid.select("burst", "hs", "tp", "dtp", "dp", "nfreq", "ndir").distinct(),
-        output, note("directional statistics"), float32 = false)
-      Sink.writeParquet(grid.select("burst", "freq", "dir", "s"),
-        output + "_dspec", note("directional spectrum grid"), float32 = false)
+        output, meta, note("directional statistics"))
+      write(grid.select("burst", "freq", "dir", "s"), output + "_dspec", meta,
+        note("directional spectrum grid"))
     } else {
       val stats = Spectra.diwaspStats(bursts, "burst", "sample", presVar, "u", "v",
         depth = depth, zp = z, zuv = zuv, fs = fs, nfft = nfft, dres = dres,
         method = method, miter = miter, fmin = fmin, fmax = fmax).toDF()
-      Sink.writeParquet(stats, output, note("directional statistics"),
-        float32 = false)
+      write(stats, output, meta, note("directional statistics"))
     }
   }
 }

@@ -125,16 +125,10 @@ object Qaqc {
 
 /**
  * Profiler-specific trims (SURVEY §2.3 side-lobe family,
- * stglib/aqd/aqdutils.py:435-672): water-level / side-lobe bin masking and
+ * stglib/aqd/aqdutils.py:435-672): side-lobe bin masking and
  * trailing all-null bin removal, plus velocity quality gating.
  */
 object ProfileTrims {
-
-  /** trim_method="water level": null profile vars where bindist >= P. */
-  def trimWaterLevel(df: DataFrame, vars: Seq[String], bindistCol: String,
-                     pCol: String): DataFrame =
-    vars.foldLeft(df)((d, v) =>
-      d.withColumn(v, when(col(bindistCol) < col(pCol), col(v))))
 
   /** trim_method="water level sl": side-lobe contamination cutoff
     * bindist >= P·cos(beam_angle) − bin_size·surf_bins

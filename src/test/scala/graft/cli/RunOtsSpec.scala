@@ -12,6 +12,17 @@ class RunOtsSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false").getOrCreate()
 
+  /** The contract of RunOts' one product writer: a parquet product at
+    * `path` whose sidecar's last `history` line stamps `note` at the fixed
+    * epoch. */
+  private def assertProduct(path: String, note: String): Unit = {
+    assert(new java.io.File(path, "_graft_attrs.json").isFile,
+      s"no product at $path")
+    val history = graft.io.Sink.readSidecar(path).getOrElse("history", "")
+    assert(history.linesIterator.toSeq.lastOption
+      .contains(s"1970-01-01T00:00:00Z: $note"), s"$path history: $history")
+  }
+
   test("full RBR wave chain: csv -> raw -> clean -> wave statistics") {
     val dir = java.nio.file.Files.createTempDirectory("runots").toFile
     // 2048 samples at 1 Hz: 10 m column + 8 s wave + spikes outside range
@@ -464,6 +475,12 @@ class RunOtsSpec extends AnyFunSuite {
     val aa = avgAux.orderBy("time").collect()(0)
     assert(math.abs(aa.getAs[Double]("Pressure") - 2.5) < 1e-9)
     assert(math.abs(aa.getAs[Double]("Tx_1211") - 21.15) < 1e-9)
+    assertProduct(raw, s"Ingested ${dir.getAbsolutePath} (ABS bursts).")
+    assertProduct(raw + "_aux", s"Ingested ${dir.getAbsolutePath} (ABS aux).")
+    assertProduct(clean, "Scaled, corrected, QA/QC applied (ABS bursts).")
+    assertProduct(clean + "_aux", "Scaled, corrected, QA/QC applied (ABS aux).")
+    assertProduct(clean + "-a", "Created burst averaged data product")
+    assertProduct(clean + "-a_aux", "Created burst averaged aux product")
   }
 
   test("EofE clean: sound-speed-corrected brange + NAVD88 boundary elevation") {
@@ -548,6 +565,13 @@ class RunOtsSpec extends AnyFunSuite {
     val pavg = spark.read.parquet(clean + "-a_profiles")
     assert(pavg.count() == 30)
     assert(pavg.columns.contains("AGC_1202") && !pavg.columns.contains("burst"))
+    assertProduct(raw, s"Ingested ${log.getAbsolutePath}.")
+    assertProduct(raw + "_profiles", s"Ingested ${log.getAbsolutePath}.")
+    assertProduct(clean, "Trimmed altimeter data, sound-speed-corrected brange.")
+    assertProduct(clean + "-a", "Burst-averaged altimeter product, QA/QC applied.")
+    assertProduct(clean + "_profiles",
+      "Trimmed profile echo data, corrected bin heights.")
+    assertProduct(clean + "-a_profiles", "Burst-averaged profile echo product.")
   }
 
   test("Aquadopp waves chain: .wad burst ingest -> wave stats (no reshape)") {
@@ -895,6 +919,9 @@ class RunOtsSpec extends AnyFunSuite {
     val ring1 = lv.filter("ring = 1").head()
     assert(ring1.getAs[Double]("vc") == 11.0)
     assert(ring1.getAs[Double]("RSlower") == 1.00)
+    assertProduct(lisstOut, s"Ingested ${lisst.getAbsolutePath} (LISST scalars).")
+    assertProduct(lisstOut + "_vc",
+      s"Ingested ${lisst.getAbsolutePath} (LISST vc rings).")
   }
 
 
@@ -1037,6 +1064,8 @@ class RunOtsSpec extends AnyFunSuite {
     // arrays averaged elementwise over the sweep (identical here)
     val asl = a0.getAs[scala.collection.Seq[java.lang.Double]]("SlantRange")
     assert(asl.take(3).forall(_ == null) && asl(3) == 4.0 && asl(4) == 5.0)
+    assertProduct(clean, "Clipped, corrected, QA/QC applied.")
+    assertProduct(clean + "-a", "Sweep-averaged sonar product.")
   }
 
   test("aqdTrimVel: DOWN-looking brange / inst_ht methods and bin range") {
@@ -1192,6 +1221,29 @@ class RunOtsSpec extends AnyFunSuite {
           s"row $i")
       }
     }
+  }
+
+  test("glx clean: a null-time row leaves the inferred-rate product unchanged") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("glxnull").toFile
+    val t0 = java.time.Instant.parse("2024-06-01T00:00:00Z")
+    val rows = (0 until 600).map(i => (
+      Option(new java.sql.Timestamp(t0.plusSeconds(i).toEpochMilli)),
+      if (i >= 100 && i < 130) None else Some(2.0)))
+    // no sample_rate/sample_interval: the rate comes from the first deltas
+    val meta = graft.core.Meta(Map[String, Any]("filtered_wl" -> "true"))
+    def cleaned(name: String,
+                in: Seq[(Option[java.sql.Timestamp], Option[Double])]) = {
+      val raw = new java.io.File(dir, s"${name}_raw").getAbsolutePath
+      in.toDF("time", "water_level").write.parquet(raw)
+      val clean = new java.io.File(dir, name).getAbsolutePath
+      RunOts.runStep(spark, "glx", "clean", meta, raw, clean)
+      spark.read.parquet(clean).orderBy("time").collect().toSeq
+    }
+    val plain = cleaned("plain", rows)
+    assert(plain.length == 600)
+    // a clock dropout: the null time sorts first in the rate probe
+    assert(cleaned("dropout", rows :+ ((None, Some(2.0)))) == plain)
   }
 
   test("glx clean: missing ROWS reindex onto the grid and count against tolerance") {
@@ -1414,6 +1466,11 @@ class RunOtsSpec extends AnyFunSuite {
     assert(!pr(7).isNullAt(pc.indexOf("Vel")))
     // flow-side join scaffolding does not leak into the product
     assert(!pc.exists(_.startsWith("__f_")))
+    assertProduct(raw, s"Ingested ${mat.getAbsolutePath} (IQ flow).")
+    assertProduct(raw + "_profiles", s"Ingested ${mat.getAbsolutePath} (IQ profiles).")
+    assertProduct(clean, "Clipped, corrected, QA/QC applied (IQ flow).")
+    assertProduct(clean + "_profiles",
+      "Clipped, corrected, QA/QC applied (IQ profiles).")
   }
 
   test("lisst clean: burst inference reshapes both frames, truncates the" +
@@ -1457,6 +1514,34 @@ class RunOtsSpec extends AnyFunSuite {
     val vc = spark.read.parquet(clean + "_vc")
     assert(vc.count() == 16)
     assert(vc.columns.contains("sample"))
+    assertProduct(clean, "Clipped, QA/QC applied (LISST scalars).")
+    assertProduct(clean + "_vc", "Clipped, QA/QC applied (LISST vc rings).")
+  }
+
+  test("lisst clean: a null-time row leaves the burst-mode products unchanged") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lisst_null").toFile
+    // 2 bursts of 4 samples at 1 s cadence, 10 min apart
+    val t0 = java.time.Instant.parse("2024-02-01T00:00:00Z").getEpochSecond
+    val times = ((0 until 4).map(t0 + _) ++ (0 until 4).map(t0 + 600 + _))
+      .map(s => Option(new java.sql.Timestamp(s * 1000)))
+    val meta = graft.core.Meta(Map("operating_mode" -> "burst"))
+    def cleaned(name: String, ts: Seq[Option[java.sql.Timestamp]]) = {
+      val raw = new java.io.File(dir, s"${name}_raw").getAbsolutePath
+      ts.zipWithIndex.map { case (t, i) => (t, 2.0 + 0.01 * i) }
+        .toDF("time", "depth").write.parquet(raw)
+      ts.flatMap(t => Seq(1, 2).map(r => (t, r, 0.5 * r)))
+        .toDF("time", "ring", "vc").write.parquet(raw + "_vc")
+      val clean = new java.io.File(dir, name).getAbsolutePath
+      RunOts.runStep(spark, "lisst", "clean", meta, raw, clean)
+      (spark.read.parquet(clean).orderBy("time", "sample").collect().toSeq,
+        spark.read.parquet(clean + "_vc").orderBy("time", "sample", "ring")
+          .collect().toSeq)
+    }
+    val plain = cleaned("plain", times)
+    assert(plain._1.length == 8 && plain._2.length == 16)
+    // a clock dropout: the null time sorts first in the cadence probe
+    assert(cleaned("dropout", times :+ None) == plain)
   }
 
   test("lisst clean on a remote-scheme input fails loudly instead of" +

@@ -109,6 +109,15 @@ class AuditAllSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("every RunOts product goes through its one parquet writer") {
+    // the history stamp and full-precision encoding live in that writer;
+    // a second call site would bypass them
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/cli/RunOts.scala"))
+    val sites = "Sink\\.writeParquet\\(".r.findAllIn(src).size
+    assert(sites == 1, s"$sites Sink.writeParquet( call sites in RunOts")
+  }
+
   test("an unhinted equi-join is not flagged even when the planner " +
        "broadcasts it by size") {
     val data = spark.range(100)
