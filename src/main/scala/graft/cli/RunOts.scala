@@ -1194,7 +1194,7 @@ object RunOts {
     }
     if (!df.columns.contains("time") || df.head(1).isEmpty) return df
     // mode of the consecutive time diffs (met.py:93-96) — the ordered lag
-    // goes through Index.withOrderedLag (ranged two-pass), never an
+    // goes through Index.withOrderedLag (one ordered sweep), never an
     // unpartitioned Window.orderBy over the series
     val diffs = graft.ops.Index.withOrderedLag(
         df.select(unix_micros(col("time")).as("__us")),
@@ -2126,7 +2126,7 @@ object RunOts {
     * scalar and the (time, ring) frames. None when the cadence never
     * breaks (continuous deployment) or the series is shorter than two
     * samples. Scale shape: positions come from Index.withGlobalPosition
-    * (ranged two-pass — no single-partition window); the first cadence
+    * (one ordered sweep — no single-partition window); the first cadence
     * break is a scan aggregate, exploiting that before the first break
     * the series is an exact arithmetic progression us0 + pos·dt0, so no
     * ordered lag is needed at all; burst start times come from a window

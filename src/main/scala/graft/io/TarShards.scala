@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
  * Pure-JVM ustar writer (512-byte header blocks, octal size fields,
  * checksum-over-spaces, zero-padded payloads, two terminator blocks) —
  * no archive library, same spirit as the repo's own netCDF/HDF5
- * containers. Shard assignment is a running byte total via the ranged
- * two-pass index (no corpus-sized window); each shard's samples are
+ * containers. Shard assignment is a running byte total via one ordered
+ * sweep (no corpus-sized window); each shard's samples are
  * assembled by one partitioned aggregation and written by its own task.
  *
  * Deterministic: shard membership and in-shard order follow the key
@@ -125,7 +125,7 @@ object TarShards {
       array(parts.map { case (ext, c) =>
         struct(lit(ext).as("ext"), col(c).cast("binary").as("data"))
       }: _*).as("__parts"))
-    // running payload total in key order via the ranged two-pass index,
+    // running payload total in key order via one ordered sweep,
     // then shard = start-offset div maxShardBytes (offset buckets; see
     // the scaladoc contract)
     val withTotal = graft.ops.Index.withRunningTotal(

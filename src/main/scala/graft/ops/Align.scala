@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
@@ -53,8 +53,7 @@ object Align {
    *
    * Distances are compared as unsigned differences of ordered timestamps
    * (`t − lo`, `hi − t`), so [[Unbounded]] tolerance never overflows. The
-   * ranged frame is [[Spread.shared]]: the summary job and the sweep read one
-   * shuffle, and [[Spread.release]] frees it.
+   * exchange, the boundary summary and the pass are one [[Sweep]].
    *
    * Output: the left columns, then for each pick the right columns renamed to
    * the pick's names (all null when the pick found no row).
@@ -76,35 +75,6 @@ object Align {
             right.columns.map(col)): _*))
     val sortKeys = Seq(col("__ts"), col("__tag")) ++
       right.columns.filter(_ != rightTs).map(col)
-    val rows = Spread.shared(tagged
-        .repartitionByRange(spark.sessionState.conf.numShufflePartitions, col("__ts"))
-        .sortWithinPartitions(sortKeys: _*))
-      .queryExecution.toRdd
-
-    // per partition: (first right row, first and last row of its last run)
-    val ends = rows.mapPartitionsWithIndex { (p, it) =>
-      var first, runFirst, runLast: InternalRow = null
-      it.foreach { r =>
-        if (r.getInt(1) == 0) {
-          val c = r.copy()
-          if (runFirst == null || c.getLong(0) != runFirst.getLong(0)) {
-            runFirst = c
-            if (first == null) first = c
-          }
-          runLast = c
-        }
-      }
-      Iterator((p, (first, runFirst, runLast)))
-    }.collect().sortBy(_._1).map(_._2)
-    val n = ends.length
-    val before = new Array[(InternalRow, InternalRow)](n)
-    val after = new Array[InternalRow](n)
-    for (p <- 1 until n)
-      before(p) = if (ends(p - 1)._1 != null) (ends(p - 1)._2, ends(p - 1)._3)
-                  else before(p - 1)
-    for (p <- n - 2 to 0 by -1)
-      after(p) = if (ends(p + 1)._1 != null) ends(p + 1)._1 else after(p + 1)
-
     val kinds = picks.map(_._1).toArray
     val waits = kinds.exists(_ != Backward)
     val rightTypes = right.schema.map(_.dataType)
@@ -116,12 +86,31 @@ object Align {
     val schema = StructType(left.schema.fields ++ picks.flatMap { case (_, names) =>
       right.schema.fields.zip(names).map { case (f, nm) => f.copy(name = nm, nullable = true) } })
 
-    val out = rows.mapPartitionsWithIndex { (p, it) =>
+    // per partition: (first right row, first and last row of its last run)
+    val summarize = (it: Iterator[InternalRow]) => {
+      var first, runFirst, runLast: InternalRow = null
+      it.foreach { r =>
+        if (r.getInt(1) == 0) {
+          val c = r.copy()
+          if (runFirst == null || c.getLong(0) != runFirst.getLong(0)) {
+            runFirst = c
+            if (first == null) first = c
+          }
+          runLast = c
+        }
+      }
+      (first, runFirst, runLast)
+    }
+    Sweep(tagged, spark.sessionState.conf.numShufflePartitions, Seq(col("__ts")),
+        sortKeys, schema)(summarize) { (p, ends, it) =>
       val near = (d: Long) => java.lang.Long.compareUnsigned(d, tolerance) <= 0
       val project = UnsafeProjection.create(outExprs)
       val noRow = new GenericInternalRow(width)
-      // the latest right run at or before the sweep position
-      var (runFirst, runLast) = Option(before(p)).getOrElse((null, null))
+      // the latest right run at or before the sweep position, and the
+      // first right row after this partition
+      var (runFirst, runLast) = ends.take(p).reverseIterator
+        .collectFirst { case (f, rf, rl) if f != null => (rf, rl) }.getOrElse((null, null))
+      val after = ends.drop(p + 1).collectFirst { case (f, _, _) if f != null => f }.orNull
       var runTs = if (runFirst == null) 0L else runFirst.getLong(0)
       val pending = new java.util.ArrayDeque[InternalRow]()
       val ready = new java.util.ArrayDeque[Array[InternalRow]]()
@@ -173,7 +162,7 @@ object Align {
           while (ready.isEmpty && it.hasNext) step(it.next())
           if (ready.isEmpty && !ended) {
             ended = true
-            while (!pending.isEmpty) emit(pending.poll(), after(p))
+            while (!pending.isEmpty) emit(pending.poll(), after)
           }
           !ready.isEmpty
         }
@@ -186,8 +175,7 @@ object Align {
           project(in)
         }
       }
-    }
-    GraftColumnBridge.dataFrame(spark, out, schema)
+    }._1
   }
 
   /** As-of nearest: for each left row, the single right row minimizing

@@ -35,24 +35,26 @@ object Burst {
     * complete bursts. */
   def fromContinuous(df: DataFrame, order: Seq[String], part: Seq[String],
                      nsamps: Int, burstCol: String, sampleCol: String): DataFrame = {
-    // whole-series (part empty): ranged two-pass index, not an unpartitioned
-    // window (which would serialize the series through one task). The
-    // position stays LONG — an int cast would wrap past 2^31 rows, exactly
-    // the regime the index exists for (burst/sample types differ from the
-    // partitioned path's int row_number; no oracle depends on this branch)
-    val indexed =
-      if (part.isEmpty)
-        Index.withGlobalPosition(df, order, "__rn")
-      else {
-        val w = Window.partitionBy(part.map(col): _*).orderBy(order.map(col): _*)
-        df.withColumn("__rn", row_number().over(w) - 1)
-      }
-    val withIds = indexed
+    def ids(indexed: DataFrame) = indexed
       .withColumn(burstCol, expr(s"__rn div $nsamps"))
       .withColumn(sampleCol, col("__rn") % nsamps)
       .drop("__rn")
-    val counts = Window.partitionBy((part.map(col) :+ col(burstCol)): _*)
-    withIds.withColumn("__n", count(lit(1)).over(counts))
-      .filter(col("__n") === nsamps).drop("__n")
+    if (part.isEmpty) {
+      // whole series: one ordered sweep, not an unpartitioned window (which
+      // would serialize the series through one task). Positions are
+      // contiguous, so only the last burst can be short: keep the rows
+      // before it, counted by the sweep itself. The position stays LONG —
+      // an int cast would wrap past 2^31 rows, exactly the regime the
+      // index exists for (burst/sample types differ from the partitioned
+      // path's int row_number; no oracle depends on this branch)
+      val (pos, total) = Index.withGlobalPositionCounted(df, order, "__rn")
+      ids(pos.filter(col("__rn") < total - total % nsamps))
+    } else {
+      val w = Window.partitionBy(part.map(col): _*).orderBy(order.map(col): _*)
+      val counts = Window.partitionBy((part.map(col) :+ col(burstCol)): _*)
+      ids(df.withColumn("__rn", row_number().over(w) - 1))
+        .withColumn("__n", count(lit(1)).over(counts))
+        .filter(col("__n") === nsamps).drop("__n")
+    }
   }
 }

@@ -43,8 +43,8 @@ object Clip {
 
   /** clip by positional index ranges good_ens: union of half-open [a, b)
     * 0-based positions in series order (np.arange, stglib/core/utils.py:95-105).
-    * Whole-series positions come from [[Index.withGlobalPosition]] (ranged
-    * two-pass — no single-partition window); per-group positions use a
+    * Whole-series positions come from [[Index.withGlobalPosition]] (one
+    * ordered sweep — no single-partition window); per-group positions use a
     * partitioned row_number. */
   def clipGoodEns(df: DataFrame, ranges: Seq[(Int, Int)],
                   order: Seq[String], part: Seq[String] = Nil): DataFrame = {

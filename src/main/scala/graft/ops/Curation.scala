@@ -17,7 +17,7 @@ import graft.ops.{TextAnalysis => TA}
  *  - n-gram explosion is the dominant row amplification (×~doclen); each
  *    exploded relation is immediately reduced (distinct / groupBy) so the
  *    shuffle carries (key, id) pairs, never document text.
- *  - sequence packing uses the ranged two-pass global index
+ *  - sequence packing uses the ordered-sweep running total
  *    ([[Index.withRunningTotal]]) — no single-partition window anywhere.
  */
 object Curation {
@@ -191,7 +191,7 @@ object Curation {
    * slice starts and n_toks is the slice length (a document spanning a
    * chunk boundary emits one row per chunk it touches).
    *
-   * Global token offsets come from the ranged two-pass running total
+   * Global token offsets come from the ordered-sweep running total
    * ([[Index.withRunningTotal]]) — scale-safe, no global window. The
    * chunk-range explode fans each doc out to ceil(len/seqLen)+1 rows max.
    */
@@ -200,7 +200,7 @@ object Curation {
     * of ~shardTokens tokens (a document belongs to the shard containing
     * its FIRST token, like [[packSequences]]' chunk rule), and the
     * manifest row per shard carries counts and id bounds. The cumulative
-    * token offset comes from the ranged two-pass running total
+    * token offset comes from the ordered-sweep running total
     * ([[Index.withRunningTotal]]) — no corpus-sized window. */
   def shardManifest(docs: DataFrame, idCol: String, textCol: String,
                     shardTokens: Long): DataFrame = {

@@ -59,6 +59,29 @@ object Spectra {
       }
   }
 
+  /** The per-group kernels' input: (group, sample) as longs, then each
+    * value column as a double with nulls as NaN. */
+  private def kernelInput[T: Encoder](df: DataFrame, groupCol: String,
+                                      sampleCol: String, valueCols: String*): Dataset[T] =
+    df.select(col(groupCol).cast("long").as("_1") +:
+      col(sampleCol).cast("long").as("_2") +:
+      valueCols.zipWithIndex.map { case (v, i) =>
+        coalesce(col(v).cast("double"), lit(Double.NaN)).as(s"_${i + 3}") }: _*)
+      .as[T]
+
+  /** DIWASP over one burst's (p, u, v) samples: pressure at height zp,
+    * colocated velocities at zuv. */
+  private def dirspec(rows: Array[(Long, Long, Double, Double, Double)],
+                      depth: Double, zp: Double, zuv: Double, fs: Double,
+                      nfft: Int, dres: Int, method: String, miter: Int,
+                      fmin: Double, fmax: Double, smooth: Boolean,
+                      interpTo: Option[(Array[Double], Array[Double])]) =
+    graft.kernels.Diwasp.dirspec(
+      Array(rows.map(_._3), rows.map(_._4), rows.map(_._5)),
+      Array("pres", "velx", "vely"),
+      Array(Array(0.0, 0.0, 0.0), Array(0.0, 0.0, 0.0), Array(zp, zuv, zuv)),
+      depth, fs, nfft, dres, method, miter, fmin, fmax, smooth, interpTo)
+
   final case class WaveStatsRow(
       burst: Long, h: Double, wh_4061: Double, wp_4060: Double,
       wp_peak: Double, m0: Double, m2: Double, tailind: Int)
@@ -71,10 +94,7 @@ object Spectra {
                             kpmin: Option[Double] = None): Dataset[WaveStatsRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(presCol).cast("double"), lit(Double.NaN)).as("_3"))
-      .as[(Long, Long, Double)]
+    val ds = kernelInput[(Long, Long, Double)](df, burstCol, sampleCol, presCol)
     perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
       val p = rows.map(_._3)
       val w = Spectral.waveStatsFromPressure(p, fs, z, nsegs, noise, fcut, kpmin)
@@ -89,10 +109,7 @@ object Spectra {
                              nsegs: Int = 16): Dataset[WaveStatsRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(elevCol).cast("double"), lit(Double.NaN)).as("_3"))
-      .as[(Long, Long, Double)]
+    val ds = kernelInput[(Long, Long, Double)](df, burstCol, sampleCol, elevCol)
     perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
       val w = Spectral.waveStatsFromElevation(rows.map(_._3), fs, nsegs)
       Iterator.single(
@@ -111,10 +128,7 @@ object Spectra {
                       kpmin: Option[Double] = None): Dataset[SpectrumRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(presCol).cast("double"), lit(Double.NaN)).as("_3"))
-      .as[(Long, Long, Double)]
+    val ds = kernelInput[(Long, Long, Double)](df, burstCol, sampleCol, presCol)
     perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
       val w = Spectral.waveStatsFromPressure(rows.map(_._3), fs, z, nsegs,
         fcut = fcut, kpmin = kpmin)
@@ -137,12 +151,8 @@ object Spectra {
                fftLength: Int = 512): Dataset[PuvRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(pCol).cast("double"), lit(Double.NaN)).as("_3"),
-        coalesce(col(uCol).cast("double"), lit(Double.NaN)).as("_4"),
-        coalesce(col(vCol).cast("double"), lit(Double.NaN)).as("_5"))
-      .as[(Long, Long, Double, Double, Double)]
+    val ds = kernelInput[(Long, Long, Double, Double, Double)](
+      df, burstCol, sampleCol, pCol, uCol, vCol)
     perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
       val r = graft.kernels.Puv.puvQuick(
         rows.map(_._3), rows.map(_._4), rows.map(_._5),
@@ -169,18 +179,11 @@ object Spectra {
       : Dataset[DirSpecRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(pCol).cast("double"), lit(Double.NaN)).as("_3"),
-        coalesce(col(uCol).cast("double"), lit(Double.NaN)).as("_4"),
-        coalesce(col(vCol).cast("double"), lit(Double.NaN)).as("_5"))
-      .as[(Long, Long, Double, Double, Double)]
+    val ds = kernelInput[(Long, Long, Double, Double, Double)](
+      df, burstCol, sampleCol, pCol, uCol, vCol)
     perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
-      val d = graft.kernels.Diwasp.dirspec(
-        Array(rows.map(_._3), rows.map(_._4), rows.map(_._5)),
-        Array("pres", "velx", "vely"),
-        Array(Array(0.0, 0.0, 0.0), Array(0.0, 0.0, 0.0), Array(zp, zuv, zuv)),
-        depth, fs, nfft, dres, method, miter, fmin, fmax, smooth, interpTo)
+      val d = dirspec(rows, depth, zp, zuv, fs, nfft, dres, method, miter,
+        fmin, fmax, smooth, interpTo)
       Iterator.single(
         DirSpecRow(k, d.hs, d.tp, d.dtp, d.dp, d.freqs.length, d.dirs.length))
     }
@@ -203,18 +206,11 @@ object Spectra {
       : Dataset[DspecStatRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(pCol).cast("double"), lit(Double.NaN)).as("_3"),
-        coalesce(col(uCol).cast("double"), lit(Double.NaN)).as("_4"),
-        coalesce(col(vCol).cast("double"), lit(Double.NaN)).as("_5"))
-      .as[(Long, Long, Double, Double, Double)]
+    val ds = kernelInput[(Long, Long, Double, Double, Double)](
+      df, burstCol, sampleCol, pCol, uCol, vCol)
     perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
-      val d = graft.kernels.Diwasp.dirspec(
-        Array(rows.map(_._3), rows.map(_._4), rows.map(_._5)),
-        Array("pres", "velx", "vely"),
-        Array(Array(0.0, 0.0, 0.0), Array(0.0, 0.0, 0.0), Array(zp, zuv, zuv)),
-        depth, fs, nfft, dres, method, miter, fmin, fmax, smooth, None)
+      val d = dirspec(rows, depth, zp, zuv, fs, nfft, dres, method, miter,
+        fmin, fmax, smooth, None)
       for {
         fi <- d.freqs.indices.iterator
         di <- d.dirs.indices.iterator
@@ -236,18 +232,11 @@ object Spectra {
       : Dataset[DspecRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(burstCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(pCol).cast("double"), lit(Double.NaN)).as("_3"),
-        coalesce(col(uCol).cast("double"), lit(Double.NaN)).as("_4"),
-        coalesce(col(vCol).cast("double"), lit(Double.NaN)).as("_5"))
-      .as[(Long, Long, Double, Double, Double)]
+    val ds = kernelInput[(Long, Long, Double, Double, Double)](
+      df, burstCol, sampleCol, pCol, uCol, vCol)
     perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
-      val d = graft.kernels.Diwasp.dirspec(
-        Array(rows.map(_._3), rows.map(_._4), rows.map(_._5)),
-        Array("pres", "velx", "vely"),
-        Array(Array(0.0, 0.0, 0.0), Array(0.0, 0.0, 0.0), Array(zp, zuv, zuv)),
-        depth, fs, nfft, dres, method, miter, fmin, fmax, smooth, interpTo)
+      val d = dirspec(rows, depth, zp, zuv, fs, nfft, dres, method, miter,
+        fmin, fmax, smooth, interpTo)
       for {
         fi <- d.freqs.indices.iterator
         di <- d.dirs.indices.iterator
@@ -265,8 +254,8 @@ object Spectra {
     * margin) samples and keeps only its own. The IIR edge transient decays
     * below ~1e-12 inside the margin ([[Butterworth.marginFor]],
     * ButterworthSpec), so no task ever holds the series and the result
-    * matches the single-pass filter. One ranged shuffle + one segment
-    * shuffle. */
+    * matches the single-pass filter. One ranged shuffle (the position
+    * sweep) + one segment shuffle. */
   def filtfiltWholeSeries(df: DataFrame, orderCols: Seq[String], valueCol: String,
                           sos: Array[Butterworth.Sos],
                           segLen: Int = 65536): Dataset[FiltRow] = {
@@ -313,25 +302,24 @@ object Spectra {
     * ([[segmentFilt]]) and the filtered values join back on `__pos`,
     * unforced, so the planner picks the join algorithm. Every exchange is
     * widened with the exact series length (~256k rows per task), taken from
-    * the position op's own counts pass with no extra action. A forced
+    * the position sweep's own counts with no extra action. A forced
     * shuffled-hash join-back and a fused wide-row segment pass both lost to
     * this shape; SCALING.md (round 20, r17) records the measurements. */
   def filterColumnWholeSeries(df: DataFrame, orderCols: Seq[String],
                               valueCol: String,
                               sos: Array[Butterworth.Sos]): DataFrame = {
-    // ONE withGlobalPosition call: its internal ranged frame is cached
-    // (Index.rangedWithMid -> Spread.shared), so the segment-filter
-    // projection and the join-back side both read that single exchange.
-    // Do NOT add another full-width persist here — at 50M rows a second
-    // full-width cache thrashes the executor heap (measured: hobo ×100
-    // 546 s with the extra persist vs the shared-exchange-only form).
-    // every exchange below is widened with the SERIES LENGTH for the same
-    // reason the position pass is (Index.scaledPartitions): a fixed
-    // session width turns a growing series into a growing per-task sort.
-    // The exact count rides the position op's own counts pass — NO extra
-    // action (an extra full scan can tip the two full-width caches into
-    // LRU recompute cascades). ~256k rows / task => ~6 MB narrow segment
-    // sorts, ~26 MB wide join sorts.
+    // ONE position sweep: its ranged frame is the only cache (Sweep ->
+    // Spread.shared), and the segment-filter projection and the join-back
+    // side both stream from it. Do NOT add a full-width persist here — at
+    // 50M rows a second full-width cache thrashes the executor heap
+    // (measured: hobo ×100 546 s with an extra persist vs the
+    // shared-exchange-only form). Every exchange below is widened with the
+    // SERIES LENGTH for the same reason the position pass is
+    // (Index.scaledPartitions): a fixed session width turns a growing
+    // series into a growing per-task sort. The exact count is the sum of
+    // the sweep's per-partition counts, so it costs no extra action.
+    // ~256k rows / task => ~6 MB narrow segment sorts, ~26 MB wide join
+    // sorts.
     val (pos, total) =
       Index.withGlobalPositionCounted(df, orderCols, "__pos")
     val base = df.sparkSession.sessionState.conf.numShufflePartitions
@@ -352,10 +340,7 @@ object Spectra {
                        valueCol: String, sos: Array[Butterworth.Sos]): Dataset[FiltRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ds = df.select(col(groupCol).cast("long").as("_1"),
-        col(sampleCol).cast("long").as("_2"),
-        coalesce(col(valueCol).cast("double"), lit(Double.NaN)).as("_3"))
-      .as[(Long, Long, Double)]
+    val ds = kernelInput[(Long, Long, Double)](df, groupCol, sampleCol, valueCol)
     perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
       val y = Butterworth.filtfilt(sos, rows.map(_._3))
       rows.indices.iterator.map(i => FiltRow(k, rows(i)._2, y(i)))

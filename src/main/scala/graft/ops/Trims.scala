@@ -237,7 +237,7 @@ object Trims {
                       order: Seq[String], part: Seq[String] = Nil): DataFrame =
     if (ranges.isEmpty) df
     else if (part.isEmpty) {
-      // whole-series positions via the ranged two-pass index — a
+      // whole-series positions via one ordered sweep — a
       // row_number over an unpartitioned window serializes the table
       val cond = (pos: Column) =>
         ranges.map { case (a, b) => pos >= lit(a) && pos < lit(b) }.reduce(_ || _)

@@ -84,7 +84,7 @@ object CurationQueries {
               |FROM j""".stripMargin)),
 
     // concat-and-chunk sequence packing (seqLen = 512): global token
-    // offsets via the ranged two-pass running total, then each doc explodes
+    // offsets via the ordered-sweep running total, then each doc explodes
     // to the chunks its token span touches.
     Q("pack_sequences",
       (s, dir) => Curation.packSequences(documents(s, dir), "doc_id", "text", 512),

@@ -2241,8 +2241,8 @@ object PipelineQueries {
 
     // deterministic per-epoch shuffling — the training-data ordering
     // primitive: each epoch reads the corpus in a different reproducible
-    // pseudo-random order. Within-epoch ranks come from the ranged
-    // two-pass global index over (epoch, hash) MINUS the epoch offset —
+    // pseudo-random order. Within-epoch ranks come from the ordered-sweep
+    // global index over (epoch, hash) MINUS the epoch offset —
     // a per-epoch window would serialize the whole corpus through one
     // task; this stays one range exchange
     Q("epoch_shuffle",

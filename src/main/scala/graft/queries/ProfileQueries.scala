@@ -133,7 +133,7 @@ object ProfileQueries {
       // event order — (l_orderkey, l_linenumber) is not unique, and tied
       // window orderings are engine-nondeterministic
       (s, dir) => {
-        // grid positions via the ranged two-pass index (no single-partition
+        // grid positions via one ordered sweep (no single-partition
         // window); int cast keeps the row_number()-1 schema the oracle sees
         val grid = graft.ops.Index.withGlobalPosition(
             events(s, dir), Seq("event_id"), "__pos")
@@ -202,7 +202,7 @@ object ProfileQueries {
       (s, dir) => {
         val sizes = lineitem(s, dir).groupBy("l_orderkey")
           .agg(count(lit(1)).as("row_size"))
-        // scale-safe prefix sum (ranged two-pass) — a global-ORDER BY
+        // scale-safe prefix sum (one ordered sweep) — a global-ORDER BY
         // window would serialize all profiles through one task
         graft.ops.Index.withRunningTotal(sizes, Seq("l_orderkey"),
             "row_size", "__cum")

@@ -34,16 +34,12 @@ object WaveQueries {
 
   /** Global-order bursts of n samples (for kernels needing long bursts:
     * the elev variant's flo = 32-cycles band requires nsamps >> 64).
-    * Whole-series positions come from the ranged two-pass
-    * [[graft.ops.Index.withGlobalPosition]] — an unpartitioned row_number
-    * window would serialize the events table through one task. */
-  private def burstsGlobal(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) = {
-    graft.ops.Index.withGlobalPosition(events(s, dir), Seq("ts", "event_id"), "rn")
-      .withColumn("burst", (col("rn") / n).cast("long"))
-      .withColumn("sample", col("rn") % n)
-      .withColumn("nb", count(lit(1)).over(Window.partitionBy("burst")))
-      .filter(col("nb") === n)
-  }
+    * [[graft.ops.Burst.fromContinuous]]'s whole-series branch: one ordered
+    * sweep, where an unpartitioned row_number window would serialize the
+    * events table through one task. */
+  private def burstsGlobal(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
+    graft.ops.Burst.fromContinuous(events(s, dir), Seq("ts", "event_id"), Nil, n,
+      "burst", "sample")
 
   /** Shared synthetic PUV bursts: 8 s wave toward 30 deg (trig convention)
     * with linear-theory-consistent amplitudes. */

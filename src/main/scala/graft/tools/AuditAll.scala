@@ -107,10 +107,8 @@ object AuditAll {
     * (file relative to the lint root, statement marker, cardinality bound).
     * Re-justify before adding entries. */
   val collectAllowlist: Seq[(String, String, String)] = Seq(
-      ("ops/Index.scala", "shiftright(col(\"__mid\"), 33)",
-        "per-partition offset/last arrays: one row per shuffle partition"),
-      ("ops/Align.scala", "Iterator((p, (first, runFirst, runLast)))",
-        "as-of sweep boundary rows: one row per shuffle partition"),
+      ("ops/Sweep.scala", "Iterator(summarize(it))",
+        "ordered-sweep summaries: one per shuffle partition"),
       ("ops/Curation.scala", "groupBy(\"__w\").agg(sum(\"__v\")",
         "bloom bit-words: bounded at BloomBits/63 registers"),
       ("ops/Curation.scala", "bins.select(col(\"bin\").cast(\"int\")",
