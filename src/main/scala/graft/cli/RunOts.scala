@@ -923,7 +923,9 @@ object RunOts {
     * set, each var keeping a `{var}_unfiltered` copy. Burst data (a
     * `sample` column) filters along the sample axis per time step
     * (filter.py:58-66); profile data (a `bin` column) filters per bin;
-    * series data filters whole-series via the distributed overlap-save.
+    * series data filters whole-series in place
+    * (Spectra.filterColumnWholeSeries: one ordered sweep whose partitions
+    * read their overlap-save margins from their neighbours).
     * Configured filtering with no sample rate raises, like the
     * reference's ValueError (filter.py:275-278). */
   private[cli] def velFilter(df0: DataFrame, meta: Meta,
@@ -1019,31 +1021,15 @@ object RunOts {
         expr("transform(sonar_image, v -> coalesce(CAST(v AS DOUBLE)," +
           " CAST('NaN' AS DOUBLE)))").as("_5"))
       .as[(Long, Long, Double, Seq[Double], Seq[Double])]
-    val n = spark.sparkContext.defaultParallelism
-    val out = rows.repartition(n, col("_1"), lit(0))
-      .sortWithinPartitions("_1", "_2")
-      .mapPartitions { it =>
-        val b = it.buffered
-        new Iterator[Seq[(Long, Long, Double, Seq[Double], Seq[Double])]] {
-          def hasNext: Boolean = b.hasNext
-          def next() = {
-            val k = b.head._1
-            val buf = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, Long, Double, Seq[Double], Seq[Double])]
-            while (b.hasNext && b.head._1 == k) buf += b.next()
-            buf.toSeq
-          }
-        }.flatMap { scans =>
-          val t = scans.head._1
-          val thetaDeg = scans.map(s => math.toDegrees(s._3)).toArray
-          val horzRng = scans.head._4.toArray
-          val image = scans.map(_._5.toArray).toArray
-          val (axis, img) = graft.kernels.SonarRegrid.regrid(
-            thetaDeg, horzRng, image, totalRange, dxy)
-          axis.indices.map(i => (t, axis(i), img(i).toSeq))
-        }
-      }
-      .toDF("timeUs", "x", "sonar_image")
+    val out = graft.ops.Spectra.perGroup(rows,
+        (r: (Long, Long, Double, Seq[Double], Seq[Double])) => r._1) { (t, scans) =>
+      val thetaDeg = scans.map(s => math.toDegrees(s._3))
+      val horzRng = scans.head._4.toArray
+      val image = scans.map(_._5.toArray)
+      val (axis, img) = graft.kernels.SonarRegrid.regrid(
+        thetaDeg, horzRng, image, totalRange, dxy)
+      axis.indices.iterator.map(i => (t, axis(i), img(i).toSeq))
+    }.toDF("timeUs", "x", "sonar_image")
       .withColumn("time", expr("timestamp_micros(timeUs)"))
       .select("time", "x", "sonar_image")
     write(out, output, meta, "Sonar image regridded to x/y.")

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 /**
  * Output encoding + write conventions (SURVEY §2.2). Parquet is the
  * canonical clean-data format (the reference's netCDF role); encodings
- * mirror the reference's dtype rules: float data stored float32, overflow-
- * guarded int32, coordinates never null, naming conventions preserved.
+ * mirror the reference's dtype rules: float data stored float32,
+ * coordinates never null, naming conventions preserved.
  */
 object Sink {
 
@@ -21,21 +21,6 @@ object Sink {
         d.withColumn(f.name, col(f.name).cast(FloatType))
       else d
     }
-
-  /** int32 encode with overflow guard: stays int64 when the value range
-    * exceeds Int.MaxValue (stglib/core/utils.py:1535-1553). This inspects
-    * min/max in one aggregate pass. */
-  def encodeInt32Guarded(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val present = cols.filter(df.columns.contains)
-    if (present.isEmpty) return df
-    val stats = df.agg(
-      greatest(present.map(c => abs(max(col(c)))) ++
-               present.map(c => abs(min(col(c)))): _*).as("mx")).head()
-    val mx = Option(stats.get(0)).map(_.toString.toDouble).getOrElse(0.0)
-    if (mx <= Int.MaxValue.toDouble)
-      present.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(IntegerType)))
-    else df
-  }
 
   /** Output naming convention (stglib/rsk/cdf2nc.py:127-149 and co.):
     * -raw (ingest), b (burst clean), -a (averaged clean), s-a (stats). */

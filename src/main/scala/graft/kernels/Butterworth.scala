@@ -206,8 +206,9 @@ object Butterworth {
   /** Zero-phase forward-backward filtering with odd-reflection padding —
     * scipy sosfiltfilt semantics (padlen = 3 * 2 * nsections, padtype="odd").
     * The reference applies this whole-series, per burst, or per bin
-    * (stglib/core/filter.py:60-153); at scale, whole-series use segments
-    * via [[filtfiltSegmented]] / Spectra.filtfiltWholeSeries. */
+    * (stglib/core/filter.py:60-153); at scale, whole-series filtering runs
+    * it once per overlap-save segment: [[filtfiltSegmented]] in one task,
+    * Spectra.filterColumnWholeSeries across partitions. */
   def filtfilt(sos: Array[Sos], x: Array[Double]): Array[Double] = {
     val padlen = math.min(3 * 2 * sos.length, x.length - 1)
     val n = x.length

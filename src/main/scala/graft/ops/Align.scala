@@ -102,7 +102,7 @@ object Align {
       (first, runFirst, runLast)
     }
     Sweep(tagged, spark.sessionState.conf.numShufflePartitions, Seq(col("__ts")),
-        sortKeys, schema)(summarize) { (p, ends, it) =>
+        sortKeys, schema)(summarize)((_, _) => Nil) { (p, ends, it, _) =>
       val near = (d: Long) => java.lang.Long.compareUnsigned(d, tolerance) <= 0
       val project = UnsafeProjection.create(outExprs)
       val noRow = new GenericInternalRow(width)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * Scalable global positional index (SURVEY §7.5 risk 3 + the clip_good_ens /
@@ -25,13 +25,12 @@ object Index {
     * (never below the session setting): the ranged exchange sorts
     * full-width rows, so a fixed session width turns a growing series
     * into a growing per-task sort — measured at the ×100 hobo probe
-    * (50 M rows, 32 partitions): the position pass + join-back spill
-    * under the 8 GiB local heap and the chain goes super-linear, while
-    * the same plan at 256 partitions runs 2.4× faster (SCALING.md,
-    * round 20, same session). ~32 MB of estimated input per partition,
-    * capped at 4096; plans whose stats are the unknown-size default
-    * (≥ 2^50) fall back to the session width rather than exploding the
-    * exchange. */
+    * (50 M rows, 32 partitions): the whole-series passes spilled under
+    * the 8 GiB local heap and the chain went super-linear, while the same
+    * plan at 256 partitions ran 2.4× faster (SCALING.md, round 20, same
+    * session). ~32 MB of estimated input per partition, capped at 4096;
+    * plans whose stats are the unknown-size default (≥ 2^50) fall back to
+    * the session width rather than exploding the exchange. */
   private[graft] def scaledPartitions(df: DataFrame): Int = {
     val base = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -40,23 +39,28 @@ object Index {
       math.min((bytes / (32L << 20)).toLong + 1L, 4096L).toInt)
   }
 
-  /** One [[Sweep]] of `df` in (orderCols) order that sets the BIGINT column
-    * `outCol` row by row. The column is first set to `seed` (in place when
-    * `df` has it, else appended), so `summarize(o)` and `value(p, summaries,
-    * o)` read the seed at ordinal `o`, where the new value is written. */
-  private def sweepColumn[S: ClassTag](df: DataFrame, orderCols: Seq[String],
+  /** One [[Sweep]] of `df` in (orderCols) order that sets the column
+    * `outCol`, typed as the seed, row by row. The column is first set to
+    * `seed` (in place when `df` has it, else appended), so `summarize(o)`
+    * and `value(p, summaries, o, read)` read the seed at ordinal `o`, where
+    * the new value is written; `reads` and `read` are [[Sweep]]'s. */
+  private[graft] def sweepColumn[S: ClassTag](df: DataFrame, orderCols: Seq[String],
       outCol: String, seed: Column, nullable: Boolean)(
       summarize: Int => Iterator[InternalRow] => S)(
-      value: (Int, Array[S], Int) => InternalRow => Any): (DataFrame, Array[S]) = {
+      reads: (Int, Array[S]) => Seq[Int])(
+      value: (Int, Array[S], Int, Int => Iterator[InternalRow]) => InternalRow => Any)
+      : (DataFrame, Array[S]) = {
     val in = df.withColumn(outCol, seed)
     val o = in.columns.indexOf(outCol)
-    val schema = StructType(in.schema.fields.updated(o, StructField(outCol, LongType, nullable)))
+    val t = in.schema(o).dataType
+    val schema = StructType(in.schema.fields.updated(o, StructField(outCol, t, nullable)))
     val outExprs = schema.indices.map(i =>
-      if (i == o) BoundReference(schema.length, LongType, nullable)
+      if (i == o) BoundReference(schema.length, t, nullable)
       else BoundReference(i, schema(i).dataType, schema(i).nullable))
     val keys = orderCols.map(col)
-    Sweep(in, scaledPartitions(df), keys, keys, schema)(summarize(o)) { (p, summaries, rows) =>
-      val next = value(p, summaries, o)
+    Sweep(in, scaledPartitions(df), keys, keys, schema)(summarize(o))(reads) {
+        (p, summaries, rows, read) =>
+      val next = value(p, summaries, o, read)
       val project = UnsafeProjection.create(outExprs)
       val v = new GenericInternalRow(1)
       val joined = new JoinedRow
@@ -75,12 +79,12 @@ object Index {
 
   /** [[withGlobalPosition]] plus the TOTAL row count, summed from the
     * per-partition counts the sweep already collected — callers sizing
-    * downstream work by series length (filterColumnWholeSeries,
-    * Burst.fromContinuous) use it instead of an extra count action. */
+    * downstream work by series length (Burst.fromContinuous) use it
+    * instead of an extra count action. */
   def withGlobalPositionCounted(df: DataFrame, orderCols: Seq[String],
                                 posCol: String): (DataFrame, Long) = {
     val (out, counts) = sweepColumn(df, orderCols, posCol, lit(0L), nullable = false)(
-        _ => (it: Iterator[InternalRow]) => it.size.toLong) { (p, counts, _) =>
+        _ => (it: Iterator[InternalRow]) => it.size.toLong)((_, _) => Nil) { (p, counts, _, _) =>
       var pos = counts.take(p).sum - 1
       _ => { pos += 1; pos }
     }
@@ -100,10 +104,10 @@ object Index {
     def plus(a: java.lang.Long, b: java.lang.Long): java.lang.Long =
       if (a == null) b else if (b == null) a else a + b
     sweepColumn(df, orderCols, outCol, col(valueCol).cast("long"), nullable = true)(
-        o => _.foldLeft(null: java.lang.Long)((a, r) => plus(a, valueAt(r, o)))) {
-      (p, sums, o) =>
-        var acc = sums.take(p).foldLeft(null: java.lang.Long)(plus)
-        r => { acc = plus(acc, valueAt(r, o)); acc }
+        o => _.foldLeft(null: java.lang.Long)((a, r) => plus(a, valueAt(r, o))))(
+        (_, _) => Nil) { (p, sums, o, _) =>
+      var acc = sums.take(p).foldLeft(null: java.lang.Long)(plus)
+      r => { acc = plus(acc, valueAt(r, o)); acc }
     }._1
   }
 
@@ -150,7 +154,7 @@ object Index {
         n += 1
       }
       (n, last, tied)
-    }) { (p, ends, o) =>
+    })((_, _) => Nil) { (p, ends, o, _) =>
       var prev = ends.take(p).reverseIterator
         .collectFirst { case (n, l, _) if n > 0 => l }.orNull
       r => { val lagged = prev; prev = valueAt(r, o); lagged }

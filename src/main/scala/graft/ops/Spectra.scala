@@ -4,6 +4,7 @@ import scala.reflect.ClassTag
 
 import graft.kernels.{Butterworth, Spectral}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /**
@@ -23,11 +24,17 @@ import org.apache.spark.sql.functions._
  *
  * Scale: burst groups are small (≤4096 samples × few vars), so per-run
  * state is bounded; skew is impossible by construction (equal-size bursts).
+ *
+ * The whole-series filter ([[filterColumnWholeSeries]]) is no per-group
+ * fan-out: it is one ordered [[Sweep]] in which each partition reads its
+ * overlap-save margins from its neighbours.
  */
 object Spectra {
 
-  /** Repartition by group key (AQE-exempt), sort (key, sample) within
-    * partitions, and run `f` once per contiguous equal-key run.
+  /** Repartition by group key `_1` (AQE-exempt), sort (`_1`, `_2`) within
+    * partitions, and run `f` once per contiguous equal-key run: the one
+    * per-group kernel fan-out, also under `runots son nc2xy` and
+    * `sonar_regrid`.
     *
     * The extra `lit(0)` hash column is load-bearing: when the input is
     * already hash-partitioned on the key (e.g. a window PARTITION BY the
@@ -37,12 +44,9 @@ object Spectra {
     * through one task (measured 195 IMLM bursts on a single core). A
     * distinct expression set keeps the REPARTITION_BY_NUM exchange, which
     * AQE must honor. */
-  private def perGroup[T: ClassTag, R](ds: Dataset[T], keyOf: T => Long,
-      numPartitions: Int = 0)(
-      f: (Long, Array[T]) => Iterator[R])(implicit enc: Encoder[R]): Dataset[R] = {
-    val n = if (numPartitions > 0) numPartitions
-            else ds.sparkSession.sparkContext.defaultParallelism
-    ds.repartition(n, col("_1"), lit(0))
+  private[graft] def perGroup[T: ClassTag, R](ds: Dataset[T], keyOf: T => Long)(
+      f: (Long, Array[T]) => Iterator[R])(implicit enc: Encoder[R]): Dataset[R] =
+    ds.repartition(ds.sparkSession.sparkContext.defaultParallelism, col("_1"), lit(0))
       .sortWithinPartitions("_1", "_2")
       .mapPartitions { it =>
         val b = it.buffered
@@ -57,7 +61,6 @@ object Spectra {
         }
         runs.flatMap { case (k, arr) => f(k, arr) }
       }
-  }
 
   /** The per-group kernels' input: (group, sample) as longs, then each
     * value column as a double with nulls as NaN. */
@@ -246,92 +249,86 @@ object Spectra {
 
   final case class FiltRow(series: Long, sample: Long, value_filt: Double)
 
-  /** Whole-series zero-phase Butterworth filtering via DISTRIBUTED
-    * overlap-save (filtered water level, stglib/core/utils.py:1715-1756):
-    * global positions come from [[Index.withGlobalPosition]]; rows within
-    * `margin` of a segment boundary are duplicated into the neighboring
-    * segment; each segment task then runs filtfilt over (margin + segLen +
-    * margin) samples and keeps only its own. The IIR edge transient decays
-    * below ~1e-12 inside the margin ([[Butterworth.marginFor]],
-    * ButterworthSpec), so no task ever holds the series and the result
-    * matches the single-pass filter. One ranged shuffle (the position
-    * sweep) + one segment shuffle. */
+  /** Whole-series zero-phase Butterworth filtering in `segLen`-sample
+    * overlap-save segments, long format: `sample` is the global position
+    * ([[Index.withGlobalPosition]]), `series` its segment (`sample div
+    * segLen`) and `value_filt` the filtered value — the filter of
+    * [[filterColumnWholeSeries]] run over the positions. Two range
+    * exchanges: the position sweep and the filter sweep. */
   def filtfiltWholeSeries(df: DataFrame, orderCols: Seq[String], valueCol: String,
                           sos: Array[Butterworth.Sos],
                           segLen: Int = 65536): Dataset[FiltRow] = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val pos = Index.withGlobalPosition(
       df.select((orderCols.map(col) :+ col(valueCol)): _*), orderCols, "__pos")
-    segmentFilt(pos, valueCol, sos, segLen)
-  }
-
-  /** Overlap-save segment pass over an ALREADY-POSITIONED frame (`__pos`
-    * global order column): rows within `margin` of a segment boundary are
-    * duplicated into the neighboring segment; each segment task runs
-    * filtfilt over (margin + segLen + margin) samples and keeps its own. */
-  private[graft] def segmentFilt(pos: DataFrame, valueCol: String,
-                          sos: Array[Butterworth.Sos],
-                          segLen: Int,
-                          numPartitions: Int = 0): Dataset[FiltRow] = {
-    val margin = Butterworth.marginFor(sos)
-    require(segLen > 2 * margin, s"segLen $segLen must exceed 2x margin $margin")
-    val spark = pos.sparkSession
-    import spark.implicits._
-    val segd = pos.select(col("__pos").as("pos"),
-        coalesce(col(valueCol).cast("double"), lit(Double.NaN)).as("v"))
-      .withColumn("segs", array_compact(array(
-        expr(s"pos div $segLen"),
-        when(col("pos") % segLen < margin, expr(s"pos div $segLen - 1")),
-        when(col("pos") % segLen >= segLen - margin, expr(s"pos div $segLen + 1")))))
-      .select(explode(col("segs")).as("_1"), col("pos").as("_2"), col("v").as("_3"))
-      .filter(col("_1") >= 0)
-      .as[(Long, Long, Double)]
-    perGroup(segd, (t: (Long, Long, Double)) => t._1, numPartitions) { (seg, rows) =>
-      val y = Butterworth.filtfilt(sos, rows.map(_._3))
-      rows.indices.iterator
-        .filter(i => rows(i)._2 / segLen == seg) // keep own samples only
-        .map(i => FiltRow(seg, rows(i)._2, y(i)))
-    }
+    filterInPlace(pos, Seq("__pos"), valueCol, sos, segLen)
+      .select(expr(s"__pos div $segLen").as("series"), col("__pos").as("sample"),
+        col(valueCol).as("value_filt"))
+      .as[FiltRow]
   }
 
   /** Replace `valueCol` with its whole-series zero-phase filtered values
     * IN PLACE on the full frame — the shared in-place filter every
     * config-keyed filter (qaqc butter filters, filter_vel, filtered water
-    * level) rides.
-    *
-    * The narrow (pos, v) projection rides the overlap-save segment kernel
-    * ([[segmentFilt]]) and the filtered values join back on `__pos`,
-    * unforced, so the planner picks the join algorithm. Every exchange is
-    * widened with the exact series length (~256k rows per task), taken from
-    * the position sweep's own counts with no extra action. A forced
-    * shuffled-hash join-back and a fused wide-row segment pass both lost to
-    * this shape; SCALING.md (round 20, r17) records the measurements. */
+    * level) rides. Bit-equal to [[Butterworth.filtfiltSegmented]] with
+    * 65,536-sample segments over the series in (orderCols) order, which
+    * must be a total order. The value column becomes a nullable DOUBLE;
+    * nulls go in as NaN. */
   def filterColumnWholeSeries(df: DataFrame, orderCols: Seq[String],
                               valueCol: String,
-                              sos: Array[Butterworth.Sos]): DataFrame = {
-    // ONE position sweep: its ranged frame is the only cache (Sweep ->
-    // Spread.shared), and the segment-filter projection and the join-back
-    // side both stream from it. Do NOT add a full-width persist here — at
-    // 50M rows a second full-width cache thrashes the executor heap
-    // (measured: hobo ×100 546 s with an extra persist vs the
-    // shared-exchange-only form). Every exchange below is widened with the
-    // SERIES LENGTH for the same reason the position pass is
-    // (Index.scaledPartitions): a fixed session width turns a growing
-    // series into a growing per-task sort. The exact count is the sum of
-    // the sweep's per-partition counts, so it costs no extra action.
-    // ~256k rows / task => ~6 MB narrow segment sorts, ~26 MB wide join
-    // sorts.
-    val (pos, total) =
-      Index.withGlobalPositionCounted(df, orderCols, "__pos")
-    val base = df.sparkSession.sessionState.conf.numShufflePartitions
-    val n = math.max(base, math.min(total / 262144L + 1L, 4096L).toInt)
-    val filt = segmentFilt(pos, valueCol, sos, 65536, n).toDF()
-      .select(col("sample").as("__pos"), col("value_filt").as("__vf"))
-    // explicit same-width same-key repartitions on both join sides
-    // satisfy the join's required distribution: no extra exchange planned
-    pos.repartition(n, col("__pos"))
-      .join(filt.repartition(n, col("__pos")), Seq("__pos"), "left")
-      .withColumn(valueCol, col("__vf"))
-      .drop("__pos", "__vf")
+                              sos: Array[Butterworth.Sos]): DataFrame =
+    filterInPlace(df, orderCols, valueCol, sos, 65536)
+
+  /** Overlap-save filtfilt (SURVEY §7.5 risk 2) as one [[Sweep]]: one range
+    * exchange and nothing else, and no task ever holds the series. Each
+    * partition's summary is its row count, so partition `p` knows its
+    * positions [at(p), at(p + 1)) and the span [lo, hi) its segments read:
+    * each segment with [[Butterworth.marginFor]] samples of context on
+    * either side, cut at the series ends, as `filtfiltSegmented` windows
+    * it. The pass reads the span from its own and its neighbours' rows
+    * (Sweep's `reads`), runs filtfilt once per segment and rewrites its own
+    * values. A task cannot seek into a cached block, so reaching the
+    * previous partition's tail decodes that whole block. */
+  private def filterInPlace(df: DataFrame, orderCols: Seq[String], valueCol: String,
+                            sos: Array[Butterworth.Sos], segLen: Int): DataFrame = {
+    require(segLen > 0, s"segLen $segLen must be positive")
+    val m = Butterworth.marginFor(sos)
+    def span(at: Array[Long], p: Int): (Long, Long) =
+      (math.max(0L, at(p) / segLen * segLen - m),
+        math.min(at.last, ((at(p + 1) - 1) / segLen + 1) * segLen + m))
+    // the partitions holding some of that span (none for an empty partition)
+    def reads(at: Array[Long], p: Int): Seq[Int] = if (at(p) == at(p + 1)) Nil else {
+      val (lo, hi) = span(at, p)
+      at.indices.init.filter(q => math.max(at(q), lo) < math.min(at(q + 1), hi))
+    }
+    Index.sweepColumn(df, orderCols, valueCol, col(valueCol).cast("double"),
+        nullable = true)(_ => (it: Iterator[InternalRow]) => it.size.toLong)(
+        (p, counts) => reads(counts.scanLeft(0L)(_ + _), p)) { (p, counts, o, read) =>
+      val at = counts.scanLeft(0L)(_ + _)
+      val (a, b) = (at(p), at(p + 1))
+      val y = new Array[Double]((b - a).toInt)
+      val qs = reads(at, p)
+      if (qs.nonEmpty) {
+        val (lo, hi) = span(at, p)
+        val x = new Array[Double]((hi - lo).toInt)
+        var k = 0
+        for (q <- qs) read(q)
+          .slice((math.max(lo, at(q)) - at(q)).toInt, (math.min(hi, at(q + 1)) - at(q)).toInt)
+          .foreach { r => x(k) = if (r.isNullAt(o)) Double.NaN else r.getDouble(o); k += 1 }
+        var s = a / segLen * segLen
+        while (s < b) {
+          val (c0, c1) = (math.max(0L, s - m), math.min(at.last, s + segLen + m))
+          val f = Butterworth.filtfilt(sos,
+            java.util.Arrays.copyOfRange(x, (c0 - lo).toInt, (c1 - lo).toInt))
+          val (from, until) = (math.max(s, a), math.min(s + segLen, b))
+          System.arraycopy(f, (from - c0).toInt, y, (from - a).toInt, (until - from).toInt)
+          s += segLen
+        }
+      }
+      var i = -1
+      _ => { i += 1; y(i) }
+    }._1
   }
 
   /** Zero-phase Butterworth filtering per series/burst/bin group

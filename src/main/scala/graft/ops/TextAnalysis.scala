@@ -41,13 +41,6 @@ object TextAnalysis {
     try_divide(hits.cast("double"), size(toks))
   }
 
-  /** Fraction of non-space characters that are not lowercase alphanumerics. */
-  def punctRatio(text: Column): Column = {
-    val nonSpace = length(regexp_replace(text, " ", ""))
-    val alnum = length(regexp_replace(text, "[^a-z0-9]", ""))
-    try_divide((nonSpace - alnum).cast("double"), nonSpace)
-  }
-
   /** Language-ID by marker-token voting: per-language stopword lists scored
     * over the token set; returns the argmax label ('und' when no marker
     * hits). N-gram-frequency heuristic in the same shape as public langid

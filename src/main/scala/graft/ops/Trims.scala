@@ -122,15 +122,6 @@ object Trims {
                      order: Seq[String], part: Seq[String] = Nil): DataFrame =
     maskWhere(df, v, abs(diffPrev(v, order, part)) > lit(thr))
 
-  /** trim_maxabs_diff along the sample dim of burst data: |diff| >= thr
-    * (note the reference uses >= on this branch and pads the first sample
-    * as good; stglib/core/qaqc.py:607-618). */
-  def trimMaxAbsDiffSample(df: DataFrame, v: String, thr: Double,
-                           sampleCol: String, burstCols: Seq[String]): DataFrame = {
-    val d = abs(col(v) - lag(col(v), 1).over(w(Seq(sampleCol), burstCols)))
-    maskWhere(df, v, d >= lit(thr))
-  }
-
   /** trim_maxabs_diff_2d: >= thresholds along two dims of a 2-D var, first
     * element along each dim padded good (stglib/core/qaqc.py:458-493). */
   def trimMaxAbsDiff2d(df: DataFrame, v: String,
@@ -248,12 +239,6 @@ object Trims {
       val cond = ranges.map { case (a, b) => pos >= lit(a) && pos < lit(b) }.reduce(_ || _)
       maskWhere(df, v, cond)
     }
-
-  /** trim_bad_ens_indiv: null individual timestamps (stglib/core/qaqc.py:289-312). */
-  def trimBadEnsIndiv(df: DataFrame, v: String, timeCol: String,
-                      stamps: Seq[String]): DataFrame =
-    if (stamps.isEmpty) df
-    else maskWhere(df, v, col(timeCol).isin(stamps.map(s => lit(s).cast("timestamp")): _*))
 
   /** trim_fliers: null runs of <= num consecutive non-null points surrounded
     * by nulls — gaps-and-islands (stglib/core/qaqc.py:399-455). Island id of a

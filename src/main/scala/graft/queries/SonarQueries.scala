@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.kernels.SonarRegrid
+import graft.ops.Spectra
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +14,8 @@ import org.apache.spark.sql.functions._
  *
  * Scans synthesize from events: one fan per user_id, sweep/range indices
  * from a per-user (partitioned) row_number, intensity from `value`. The
- * kernel runs once per scan inside mapPartitions after an AQE-exempt
- * repartition on the scan key — the same bounded-state fan-out as
- * Spectra.perGroup (the reference loops scans on the driver).
+ * kernel runs once per scan through Spectra.perGroup, the bounded-state
+ * per-group fan-out (the reference loops scans on the driver).
  */
 object SonarQueries {
   private val NSWEEP = 12  // 30-deg sweep lines
@@ -38,36 +38,19 @@ object SonarQueries {
           .select(col("user_id").cast("long").as("_1"),
             col("rn").cast("long").as("_2"), col("value").cast("double").as("_3"))
           .as[(Long, Long, Double)]
-        val n = s.sparkContext.defaultParallelism
-        // lit(0) keeps the AQE-exempt exchange from being statically elided
-        // (see Spectra.perGroup) — without it the scan-key window upstream
-        // satisfies the partitioning and AQE serializes the kernel
-        val out = grid.repartition(n, col("_1"), lit(0))
-          .sortWithinPartitions("_1", "_2")
-          .mapPartitions { it =>
-            val b = it.buffered
-            new Iterator[(Long, Array[Double])] {
-              def hasNext: Boolean = b.hasNext
-              def next(): (Long, Array[Double]) = {
-                val k = b.head._1
-                val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-                while (b.hasNext && b.head._1 == k) buf += b.next()._3
-                (k, buf.toArray)
-              }
-            }.flatMap { case (scan, vals) =>
-              val thetas = Array.tabulate(NSWEEP)(i => i * 360.0 / NSWEEP)
-              val ranges = Array.tabulate(NRANGE)(i => 0.5 + i * 0.5)
-              val image = Array.tabulate(NSWEEP, NRANGE)((t, r) =>
-                vals(t * NRANGE + r))
-              val (axis, img) = SonarRegrid.regrid(
-                thetas, ranges, image, TOTAL_RANGE, DXY)
-              for {
-                ix <- axis.indices.iterator
-                iy <- axis.indices.iterator
-              } yield (scan, ix, iy, axis(ix), axis(iy),
-                if (img(ix)(iy).isNaN) None else Some(img(ix)(iy)))
-            }
-          }
+        val out = Spectra.perGroup(grid, (r: (Long, Long, Double)) => r._1) { (scan, rows) =>
+          val thetas = Array.tabulate(NSWEEP)(i => i * 360.0 / NSWEEP)
+          val ranges = Array.tabulate(NRANGE)(i => 0.5 + i * 0.5)
+          val image = Array.tabulate(NSWEEP, NRANGE)((t, r) =>
+            rows(t * NRANGE + r)._3)
+          val (axis, img) = SonarRegrid.regrid(
+            thetas, ranges, image, TOTAL_RANGE, DXY)
+          for {
+            ix <- axis.indices.iterator
+            iy <- axis.indices.iterator
+          } yield (scan, ix, iy, axis(ix), axis(iy),
+            if (img(ix)(iy).isNaN) None else Some(img(ix)(iy)))
+        }
         out.toDF("scan", "ix", "iy", "x", "y", "v")
           .withColumn("v", round(col("v"), 8))
       },
