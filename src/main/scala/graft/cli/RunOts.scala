@@ -37,12 +37,7 @@ object RunOts {
     }
     val Array(instrument, step, gattsPath, yamlPath, input) = args.take(5)
     val output = if (args.length > 5) args(5) else input + s".$step"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.at(sys.env.getOrElse("SPARK_MASTER", "local[8]"), 8)
     val (meta, collisions) = Config.merge(
       Config.readGlobalAttsFile(gattsPath), Config.readYamlFile(yamlPath))
     collisions.foreach(k => System.err.println(s"[runots] config overrides gatts key: $k"))

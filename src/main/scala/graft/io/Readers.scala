@@ -52,35 +52,19 @@ object Readers {
     "wd_4062" -> ("sea_surface_wave_from_direction", "degree"))
 
   /** Read an instrument CSV with a known header line, rename to EPIC names,
-    * parse the time column, and stamp CF metadata. skiprows handles
-    * header-block formats (EXO/HOBO-style preamble). */
-  def readInstrumentCsv(spark: SparkSession, path: String, meta: Meta,
-                        timeCol: String = "time",
-                        timeFormat: Option[String] = None,
-                        skipRows: Int = 0): DataFrame = {
-    val raw0 = spark.read
+    * cast the `time` column to a timestamp, and stamp CF metadata. */
+  def readInstrumentCsv(spark: SparkSession, path: String, meta: Meta): DataFrame = {
+    val raw = spark.read
       .option("header", "true")
       .option("inferSchema", "true")
       .option("mode", "PERMISSIVE")
       .csv(path)
-    val raw =
-      if (skipRows == 0) raw0
-      else {
-        // header-block formats: re-read with the block dropped via an RDD of
-        // lines is avoided (driver-side); instead callers pre-slice or the
-        // block is comment-prefixed — reference readers do the same skiprows
-        spark.read.option("header", "true").option("inferSchema", "true")
-          .option("comment", "#").csv(path)
-      }
     val renamed = raw.columns.foldLeft(raw) { (df, c) =>
       epicRenames.get(c).map(n => df.withColumnRenamed(c, n)).getOrElse(df)
     }
     val withTime =
-      if (!renamed.columns.contains(timeCol)) renamed
-      else timeFormat match {
-        case Some(fmt) => renamed.withColumn(timeCol, to_timestamp(col(timeCol), fmt))
-        case None      => renamed.withColumn(timeCol, col(timeCol).cast("timestamp"))
-      }
+      if (!renamed.columns.contains("time")) renamed
+      else renamed.withColumn("time", col("time").cast("timestamp"))
     withCfMetadata(withTime)
   }
 

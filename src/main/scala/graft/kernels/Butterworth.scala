@@ -210,6 +210,7 @@ object Butterworth {
     * it once per overlap-save segment: [[filtfiltSegmented]] in one task,
     * Spectra.filterColumnWholeSeries across partitions. */
   def filtfilt(sos: Array[Sos], x: Array[Double]): Array[Double] = {
+    if (x.isEmpty) return Array.emptyDoubleArray
     val padlen = math.min(3 * 2 * sos.length, x.length - 1)
     val n = x.length
     // odd extension: 2*x[0] - x[pad..1], x, 2*x[n-1] - x[n-2..]

@@ -6,22 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The extensions class must register the native expressions as SQL
   * functions in a fresh session configured only via spark.sql.extensions
   * (the shared-cluster deployment path — no driver code). */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with SharedSpark {
 
-  // spark.sql.extensions is a STATIC conf — fixed by whichever suite
-  // creates the first session in this JVM — so the config-string path can
-  // only be exercised in a fresh JVM (it is, via spark-submit in real
-  // deployments). builder.withExtensions applies the same injection logic
-  // at session construction regardless of JVM history: clear the session
-  // handles so getOrCreate builds a new session over the shared context.
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new GraftExtensions())
-      .config("spark.ui.enabled", "false").getOrCreate()
-  }
+  // spark.sql.extensions is a STATIC conf, fixed when the JVM's first
+  // session is built, so the config-string path can only be exercised in a
+  // fresh JVM (it is, via spark-submit in real deployments).
+  // builder.withExtensions applies the same injection logic at session
+  // construction regardless of JVM history.
+  override lazy val spark: SparkSession = graftExtensionsSession()
 
   test("graft_dot and graft_sorted_intersect resolve and evaluate from SQL") {
     val r = spark.sql(

@@ -1,7 +1,7 @@
 package graft.cli
 
+import graft.SharedSpark
 import graft.io.{Config, Hdf5}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,12 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Only the instrument samples are synthetic (the raw AQ107703 files are
   * not shipped in the reference); every parameter and the met series are
   * the reference's real artifacts. */
-class RealAqdPipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RealAqdPipelineSpec extends AnyFunSuite with SharedSpark {
 
   private val gattsPath = "/root/reference/examples/glob_att1076a.txt"
   private val yamlPath = "/root/reference/examples/aqd_config.yaml"

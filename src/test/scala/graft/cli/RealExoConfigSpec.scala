@@ -1,7 +1,7 @@
 package graft.cli
 
+import graft.SharedSpark
 import graft.io.Config
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Third real-artifact reproduction: the reference's PUBLISHED
@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Python-slice semantics ("[500, 600, 905, 910] ... will delete
   * 500-599 and 905-909", "[51, 52] ... removing a single value (51)") —
   * come from the real files. */
-class RealExoConfigSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RealExoConfigSpec extends AnyFunSuite with SharedSpark {
 
   private val gattsPath = "/root/reference/examples/glob_att1076a.txt"
   private val yamlPath = "/root/reference/examples/exo_config.yaml"

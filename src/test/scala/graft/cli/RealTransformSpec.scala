@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fourth real-artifact reproduction: the vendor's own BEAM↔ENU
@@ -16,11 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The expected side is computed with plain scalar math straight off the
   * script's formulas; a convention drift in either H, P, or the row
   * flips fails at 1e-12. */
-class RealTransformSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RealTransformSpec extends AnyFunSuite with SharedSpark {
 
   private val path = "/root/reference/examples/Transform.m"
 

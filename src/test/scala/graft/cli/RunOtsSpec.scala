@@ -1,17 +1,12 @@
 package graft.cli
 
+import graft.SharedSpark
 import graft.io.Config
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end lifecycle: ingest → clean → waves on a synthetic RBR-style
   * pressure CSV (the reference's test_rbr_wvs chain, SURVEY §7.3). */
-class RunOtsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class RunOtsSpec extends AnyFunSuite with SharedSpark {
   /** The contract of RunOts' one product writer: a parquet product at
     * `path` whose sidecar's last `history` line stamps `note` at the fixed
     * epoch. */

@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Jaro-Winkler invariants: the classic literature vectors, the 0.7
   * boost-threshold behavior, degenerate inputs, and the SQL registration
   * path evaluating identically to the static kernel. */
-class JaroWinklerSpec extends AnyFunSuite {
+class JaroWinklerSpec extends AnyFunSuite with SharedSpark {
 
   private def jw(a: String, b: String): Double =
     JaroWinkler.compute(UTF8String.fromString(a), UTF8String.fromString(b))
@@ -40,11 +40,7 @@ class JaroWinklerSpec extends AnyFunSuite {
   }
 
   test("SQL function graft_jaro_winkler matches the kernel") {
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new graft.GraftExtensions())
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graftExtensionsSession()
     val r = spark.sql(
       "SELECT graft_jaro_winkler('MARTHA', 'MARHTA') AS j").head().getDouble(0)
     assert(r == jw("MARTHA", "MARHTA"))

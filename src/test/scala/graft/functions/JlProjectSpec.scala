@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * quantization, sum order, null/edge handling) silently splits the
   * engines. Covers the real embeddings table plus null/empty/short/
   * null-element vectors. */
-class JlProjectSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class JlProjectSpec extends AnyFunSuite with SharedSpark {
 
   private val dims = 64
   private val outDims = 16

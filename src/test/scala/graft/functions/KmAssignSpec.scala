@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergent assignment cascades. Ties, NaN, null arrays, null
   * elements, short arrays, and the micro-unit quantizing form are the
   * cases where the two could plausibly split. */
-class KmAssignSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class KmAssignSpec extends AnyFunSuite with SharedSpark {
 
   private val cents: Array[Array[Double]] = Array(
     Array(0.25, -1.5, 3.0, 0.0),

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * divergence silently splits engine results from the oracles. Covers
   * ASCII, multi-byte UTF-8, empty, long, and null inputs, both prefix
   * widths in use (8, 15), and the Bloom probe's build/probe agreement. */
-class Md5PrefixSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class Md5PrefixSpec extends AnyFunSuite with SharedSpark {
 
   private def edgeDf = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * row, null text yields all-null mins. The LSH oracles replay the SQL
   * form in DuckDB, so one divergent min silently changes candidate
   * bands. */
-class MinhashSigsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class MinhashSigsSpec extends AnyFunSuite with SharedSpark {
 
   private def edgeDf = {
     import spark.implicits._

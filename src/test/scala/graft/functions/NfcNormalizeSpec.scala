@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * evaluating identically to the static kernel. All non-ASCII inputs are
   * built from explicit \u escapes so source encoding can never
   * pre-normalize them. */
-class NfcNormalizeSpec extends AnyFunSuite {
+class NfcNormalizeSpec extends AnyFunSuite with SharedSpark {
 
   private def nfc(s: String): String =
     NfcNormalize.compute(UTF8String.fromString(s)).toString
@@ -48,8 +48,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("Column path equals the static kernel, nulls propagate") {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val df = Seq(Some(decomposedEcole), Some("plain"), None)
       .toDF("t")

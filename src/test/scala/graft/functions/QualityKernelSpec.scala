@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * edge shapes (empty, space-only, multi-space runs, multi-byte UTF-8,
   * sub-n token counts, nulls). A 1-ulp divergence here would silently
   * split the Spark results from the DuckDB oracles. */
-class QualityKernelSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class QualityKernelSpec extends AnyFunSuite with SharedSpark {
 
   private val TA = graft.ops.TextAnalysis
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * token-free documents (null / empty / all-space text) produce NO
   * signature row. Every simhash oracle replays the SQL form in DuckDB,
   * so a 1-bit divergence silently splits pair sets. */
-class SimhashSigSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class SimhashSigSpec extends AnyFunSuite with SharedSpark {
 
   private def edgeDf = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * signature kernels must decode such text without reading past the
   * buffer: missing continuation bytes read as 0, so a truncated text signs
   * exactly like its completion with zero-payload continuation bytes. */
-class Utf8DecodeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class Utf8DecodeSpec extends AnyFunSuite with SharedSpark {
 
   // (truncated, completed): 'a' + 2 of 3 bytes; a lone 2-byte lead;
   // 'x ' + 2 of 4 bytes of an astral codepoint

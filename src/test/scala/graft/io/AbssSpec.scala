@@ -1,17 +1,13 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** AQUAscat multi-frequency burst ingest (stglib/abss.py:14-255,490-550):
   * per-burst .mat, xdcr_freq axis sorted ascending, amp dB conversion,
   * aux channels, multi-file concat. */
-class AbssSpec extends AnyFunSuite {
+class AbssSpec extends AnyFunSuite with SharedSpark {
   import Mat5Fixture._
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
 
   // 2 bins x 2 samples x 2 transducers; transducer 0 at 4 MHz, 1 at 1 MHz
   // (deliberately DESCENDING so the freq sort matters)

@@ -1,13 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class AquadoppSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class AquadoppSpec extends AnyFunSuite with SharedSpark {
 
   private def pad(label: String, value: String): String =
     label.padTo(38, ' ') + value

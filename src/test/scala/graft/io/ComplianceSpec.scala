@@ -1,14 +1,10 @@
 package graft.io
 
+import graft.SharedSpark
 import graft.core.Meta
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class ComplianceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ComplianceSpec extends AnyFunSuite with SharedSpark {
   test("compliant CF table passes") {
     val f = java.io.File.createTempFile("cftest", ".csv")
     val w = new java.io.PrintWriter(f)

@@ -1,13 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class DialectsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class DialectsSpec extends AnyFunSuite with SharedSpark {
 
   test("Marotte csv: title line skipped, 9 fixed columns, timestamp parse") {
     val csv = """MAROTTE HS title line, ignore

@@ -1,12 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class EofeSeagaugeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class EofeSeagaugeSpec extends AnyFunSuite with SharedSpark {
 
   private val eaLog: String = {
     val hdr =

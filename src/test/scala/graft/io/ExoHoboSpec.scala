@@ -1,14 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class ExoHoboSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ExoHoboSpec extends AnyFunSuite with SharedSpark {
   test("EXO: header block skipped, casing normalized, date+time merged") {
     val f = java.io.File.createTempFile("exo", ".csv")
     val w = new java.io.PrintWriter(f)
@@ -36,14 +31,12 @@ class ExoHoboSpec extends AnyFunSuite {
       w.println(f"1/15/2024,$hh%d:$mm%02d:00,${20.0 + (i % 17) * 0.1}%.1f")
     }
     w.close()
-    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-    try {
+    withConf("spark.sql.files.maxPartitionBytes" -> "2048") {
       val df = Readers.readExoCsv(spark, f.getAbsolutePath)
       assert(df.rdd.getNumPartitions > 1, "text scan should split the file")
       assert(df.count() == 500)
       assert(df.select("time").distinct().count() == 500) // every line parsed
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    }
   }
 
   test("HOBO: title row skipped, kPa -> dbar, EPIC renames") {

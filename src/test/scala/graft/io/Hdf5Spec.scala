@@ -1,17 +1,14 @@
 package graft.io
 
+import graft.SharedSpark
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HDF5 subset writer/reader (the netCDF-4 side of the export surface):
   * byte-level grammar checks against the public HDF5 File Format
   * Specification plus full write→read round trips — the same own-parser
   * gate [[Netcdf3Spec]] applies to the classic family. */
-class Hdf5Spec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class Hdf5Spec extends AnyFunSuite with SharedSpark {
 
   test("write + read round trip with attrs, nulls and mixed types") {
     import spark.implicits._

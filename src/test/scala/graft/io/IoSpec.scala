@@ -1,7 +1,7 @@
 package graft.io
 
+import graft.SharedSpark
 import graft.core.Meta
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ConfigSpec extends AnyFunSuite {
@@ -71,12 +71,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 }
 
-class ReaderSinkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ReaderSinkSpec extends AnyFunSuite with SharedSpark {
   private def fixtureCsv(): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
     val f = new java.io.File(dir, "instrument.csv")
@@ -127,12 +122,7 @@ class ReaderSinkSpec extends AnyFunSuite {
 /** SURVEY §2.11: the tumbling-window plans must run unchanged under
   * Structured Streaming — prove it with a memory-sink streaming query over
   * the same window()+agg shape as the avg_cont batch query. */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("avg_cont window agg runs as a streaming query with watermark") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._

@@ -1,17 +1,13 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SonTek IQ flat-MAT traversal (stglib/iq.py:172-445): y2k-microsecond
   * time, velbeam/beam wide arrays, VelXYZ split, truncation of over-long
   * profile arrays, per-sample bindist, RunOts dispatch. */
-class IqSpec extends AnyFunSuite {
+class IqSpec extends AnyFunSuite with SharedSpark {
   import Mat5Fixture._
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
 
   // 3 samples at 10-min cadence from 2024-02-01T00:00 (us since 2000-01-01)
   private val t0us = (java.time.Instant.parse("2024-02-01T00:00:00Z").getEpochSecond -

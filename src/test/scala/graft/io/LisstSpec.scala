@@ -1,13 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class LisstSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class LisstSpec extends AnyFunSuite with SharedSpark {
 
   // 36 vc values then the 26 scalar columns (Y/M/D/H/M/S embedded)
   private val csv: String = {

@@ -1,13 +1,10 @@
 package graft.io
 
+import graft.SharedSpark
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class Netcdf3Spec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class Netcdf3Spec extends AnyFunSuite with SharedSpark {
 
   test("write + read round trip with attrs, nulls and mixed types") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * lossless round trip against the parquet-sourced tables and predicate
   * pushdown reaching the ORC scan — the same plan-quality bar the
   * parquet paths are held to. */
-class OrcSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class OrcSpec extends AnyFunSuite with SharedSpark {
   test("parquet → orc → read back is lossless and pushes filters down") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graftorc").toString

@@ -1,11 +1,12 @@
 package graft.io
 
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.ByteArrayOutputStream
 
 /** Synthesizes valid PD0 ensembles byte-for-byte per the TRDI layout
   * (mirroring stglib/rdi/rdiadcpy.py offsets) and round-trips the decoder. */
-class Pd0Spec extends AnyFunSuite {
+class Pd0Spec extends AnyFunSuite with SharedSpark {
 
   private def ensemble(ensNum: Int, ncells: Int, nbeams: Int,
                        velFn: (Int, Int) => Int): Array[Byte] =
@@ -53,8 +54,6 @@ class Pd0Spec extends AnyFunSuite {
   }
 
   test("Spark binaryFile integration: file -> long-format DataFrame") {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val dir = java.nio.file.Files.createTempDirectory("pd0").toFile
     val f = new java.io.File(dir, "deploy.pd0")
     val os = new java.io.FileOutputStream(f)

@@ -1,9 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class QrevXmlSpec extends AnyFunSuite {
+class QrevXmlSpec extends AnyFunSuite with SharedSpark {
 
   private val doc =
     <Channel>
@@ -47,8 +47,6 @@ class QrevXmlSpec extends AnyFunSuite {
   }
 
   test("Spark integration from a file") {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val f = java.io.File.createTempFile("qrev", ".xml")
     scala.xml.XML.save(f.getAbsolutePath, doc)
     val df = QrevXml.read(spark, f.getAbsolutePath)

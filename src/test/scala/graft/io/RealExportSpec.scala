@@ -1,7 +1,7 @@
 package graft.io
 
+import graft.SharedSpark
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DIMENSION_LIST on every data variable), the exact attribute
   * datatype byte-shapes (read from the REAL file, not hardcoded), and
   * bit-exact payload round-trip of the replayed met pipeline. */
-class RealExportSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RealExportSpec extends AnyFunSuite with SharedSpark {
 
   private val csvPath = "/root/reference/examples/GNDCRMET.csv"
   private val ncPath = "/root/reference/examples/gndcrmet.nc"

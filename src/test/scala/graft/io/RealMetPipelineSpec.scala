@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec replays that pipeline in Spark off the REAL 2 MB CSV and
   * compares against the REAL netcdf-c-written gndcrmet.nc — every
   * timestamp and every BP value bit-for-bit. */
-class RealMetPipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RealMetPipelineSpec extends AnyFunSuite with SharedSpark {
 
   private val csvPath = "/root/reference/examples/GNDCRMET.csv"
   private val ncPath = "/root/reference/examples/gndcrmet.nc"

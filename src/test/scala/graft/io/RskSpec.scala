@@ -1,11 +1,12 @@
 package graft.io
 
+import graft.SharedSpark
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture generated by python sqlite3 (tools; multi-page data table,
   * INTEGER PRIMARY KEY rowid alias, overflow-chain text row). */
-class RskSpec extends AnyFunSuite {
+class RskSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val bytes =
     Files.readAllBytes(Paths.get(getClass.getResource("/fixture.rsk").toURI))
@@ -49,8 +50,6 @@ class RskSpec extends AnyFunSuite {
   }
 
   test("readSeries produces a typed DataFrame") {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val df = Rsk.readSeries(spark, bytes)
     assert(df.columns.toSeq == Seq("tstamp", "channel01", "channel02"))
     assert(df.count() == 6000)
@@ -72,8 +71,6 @@ class RskSpec extends AnyFunSuite {
   }
 
   test("ALTER TABLE short records are null-padded to the schema") {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val df = Rsk.readTable(spark, edge, "amended")
     assert(df.columns.toSeq == Seq("id", "x", "note"))
     val rows = df.orderBy("id").collect()

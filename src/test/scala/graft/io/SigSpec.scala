@@ -1,17 +1,13 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Nortek Signature pipeline: per-datatype group split, datenum time,
   * bin geometry, multi-chunk concat, Beam2xyz glue (stglib/sig/mat2cdf.py).
   */
-class SigSpec extends AnyFunSuite {
+class SigSpec extends AnyFunSuite with SharedSpark {
   import Mat5Fixture._
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
 
   // datenum for 2024-02-01T00:00:00 = ordinal(2024-02-01) + 366
   private val d0 = java.time.LocalDate.of(2024, 2, 1).toEpochDay + 719163L + 366L

@@ -1,9 +1,10 @@
 package graft.io
 
+import graft.SharedSpark
 import java.nio.{ByteBuffer, ByteOrder}
 import org.scalatest.funsuite.AnyFunSuite
 
-class Son81RSpec extends AnyFunSuite {
+class Son81RSpec extends AnyFunSuite with SharedSpark {
 
   /** Build one 881A-GS ping record per the manual layout mirrored in
     * sonutils.py: 1024 header + 1024 device list + 40 switch + 32 return
@@ -73,9 +74,6 @@ class Son81RSpec extends AnyFunSuite {
   }
 
   test("RunOts .81R ingest: filename mmdd + header YYYYHHMMSS.f -> time") {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val total = 2048 + 40 + 32 + 100
     val rec = ping(1, 700, 0, 50, total)
     "2024123015.50".getBytes.copyToArray(rec, 14)
@@ -92,9 +90,6 @@ class Son81RSpec extends AnyFunSuite {
   }
 
   test("RunOts son directory ingest: sweep sets, trim, set-level time") {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val total = 2048 + 40 + 32 + 100
     val dir = java.nio.file.Files.createTempDirectory("son_dir").toFile
     // two complete 2-sweep sets (names: mmddHH + sweep tag; set key =

@@ -1,17 +1,13 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** WebDataset tar shards: byte-level ustar validity (alignment, checksum,
   * terminator), lossless round trip, deterministic shard packing under
   * the payload budget, and grouped sample files staying adjacent. */
-class TarShardsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class TarShardsSpec extends AnyFunSuite with SharedSpark {
   test("ustar entries round-trip and honor the format invariants") {
     val entries = Seq(
       "0001.txt" -> "hello world".getBytes("UTF-8"),

@@ -1,13 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class VectorSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class VectorSpec extends AnyFunSuite with SharedSpark {
 
   private val vhd =
     """ 3  1 2024  0  0  0  1 4096 0.1 0.1 0.1 10 10 10 0.1 0.1 0.1 0.1 0.25 0.2 0.2 0.2 0.2 0.30

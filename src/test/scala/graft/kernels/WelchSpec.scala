@@ -138,6 +138,12 @@ class ButterworthSpec extends AnyFunSuite {
     assert(marginFor(lowpass(4, 0.005, 1.0)) > marginFor(sos))
   }
 
+  test("an empty series filters to an empty series, single-pass and segmented") {
+    val sos = lowpass(4, 0.05, 1.0)
+    assert(filtfilt(sos, Array.empty[Double]).isEmpty)
+    assert(filtfiltSegmented(sos, Array.empty[Double], segLen = 65536).isEmpty)
+  }
+
   test("lowpass filtfilt preserves DC exactly") {
     val sos = lowpass(4, 0.05, 1.0)
     val x = Array.fill(500)(3.7)

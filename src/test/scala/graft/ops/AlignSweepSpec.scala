@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the DuckDB oracles in `graft.queries.Alignment`). The reference
   * numbers left rows first, so duplicate left rows stay one row each and
   * results compare as multisets. */
-class AlignSweepSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class AlignSweepSpec extends AnyFunSuite with SharedSpark {
 
   private val Widths = Seq(1, 4, 16)
 
@@ -65,9 +61,7 @@ class AlignSweepSpec extends AnyFunSuite {
   /** Every operator at every width against the reference. */
   private def checkAll(left: DataFrame, right: DataFrame, tols: Seq[Long],
                        what: String): Unit = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try for (w <- Widths; tol <- tols) {
-      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
+    for (w <- Widths; tol <- tols) withConf("spark.sql.shuffle.partitions" -> w.toString) {
       val at = s"$what, width $w, tolerance $tol"
       assertSameRows(Align.asofNearest(left, right, "lt", "rt", tol),
         nearestRef(left, right, tol), s"nearest: $at")
@@ -78,7 +72,7 @@ class AlignSweepSpec extends AnyFunSuite {
       assertSameRows(Align.interpLinear(left, right, "lt", "rt", "rv", tol, "out"),
         interpRef(left, right, tol), s"interp: $at")
       Spread.release(spark)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   private def lefts(rows: Seq[(Option[Long], String)]): DataFrame = {

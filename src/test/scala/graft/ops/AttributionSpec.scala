@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Markov removal-effect attribution on a hand-computable chain: the
   * absorption probabilities and removal effects must match the algebraic
   * solution (the 12-round fixed point converges to it in millionths). */
-class AttributionSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class AttributionSpec extends AnyFunSuite with SharedSpark {
   test("two-channel funnel: algebraic absorption and removal effects") {
     import spark.implicits._
     // 8 users: 4 × [A, B, purchase], 2 × [A, null], 2 × [B, purchase]

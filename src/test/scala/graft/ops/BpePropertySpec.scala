@@ -1,17 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized BPE equivalence against an INDEPENDENT in-test reference
   * implementation of Sennrich greedy BPE (word-frequency training, ties
   * broken (count desc, left, right), left-to-right non-cascading merge) —
   * the distributed trainer must match it corpus-for-corpus. */
-class BpePropertySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class BpePropertySpec extends AnyFunSuite with SharedSpark {
 
   // ---- reference implementation (plain Scala, no shared code) ----
   private def refTrain(texts: Seq[String], k: Int): Seq[(Int, String, String, Long)] = {

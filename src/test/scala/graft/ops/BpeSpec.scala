@@ -1,14 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BPE merge-pair training — reference greedy semantics on known corpora. */
-class BpeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class BpeSpec extends AnyFunSuite with SharedSpark {
 
   private def train(texts: Seq[String], k: Int): Seq[(Int, String, String, Long)] = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucketed on the join key join WITHOUT any shuffle exchange — at cluster
   * scale this is the difference between a full-network reshuffle of both
   * sides and a purely local merge per bucket. */
-class BucketingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class BucketingSpec extends AnyFunSuite with SharedSpark {
 
   test("join of two tables bucketed on the key plans with zero shuffles") {
     import spark.implicits._
@@ -25,10 +21,8 @@ class BucketingSpec extends AnyFunSuite {
     (1L to 400L).map(i => (i % 50, i * 10)).toDF("k", "vb")
       .write.mode("overwrite").bucketBy(8, "k").sortBy("k")
       .saveAsTable("graft_bucket_b")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force a non-broadcast join so the exchange question is real
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force a non-broadcast join so the exchange question is real
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("graft_bucket_a")
         .join(spark.table("graft_bucket_b"), "k")
       assert(j.count() == 1000L * 400L / 50L) // 20 x 8 matches per key x 50
@@ -40,7 +34,6 @@ class BucketingSpec extends AnyFunSuite {
       assert(shuffles.isEmpty,
         s"expected shuffle-free bucketed join, found: $shuffles")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS graft_bucket_a")
       spark.sql("DROP TABLE IF EXISTS graft_bucket_b")
     }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole-series branch (no group columns) and the partitioned one: the
   * row at 0-based position p of its series is sample p % n of burst
   * p div n, and only complete bursts are kept. */
-class BurstSpec extends AnyFunSuite {
-  private lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class BurstSpec extends AnyFunSuite with SharedSpark {
   private val Nsamps = 8
 
   /** `rows` rows per group g in 0 until `groups`, with unique shuffled

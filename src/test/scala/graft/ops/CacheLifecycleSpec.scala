@@ -1,19 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache lifecycle under repeated query execution (VERDICT r5 item 6):
   * re-running registered queries must not grow executor cache state, the
   * kmeans model memo must stay bounded, and Spread.release must drop the
   * session's tracked shared() entries deterministically. */
-class CacheLifecycleSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class CacheLifecycleSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components must label every node with the min id reachable
   * from it — including transitive merges the pair list never emitted. */
-class CcSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class CcSpec extends AnyFunSuite with SharedSpark {
   test("chains merge transitively; singletons keep their own id") {
     import spark.implicits._
     // components: {1,2,3,4} via chain 1-2, 2-3, 3-4; {10,11}; {20} singleton

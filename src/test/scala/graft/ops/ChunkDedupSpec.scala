@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** C4-style chunk dedup invariants: first occurrence survives, exact
   * copies lose everything, reassembly preserves order, and the kept-chunk
   * total equals the distinct-chunk count. */
-class ChunkDedupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ChunkDedupSpec extends AnyFunSuite with SharedSpark {
   test("first occurrence kept, exact duplicate drops to empty, order preserved") {
     import spark.implicits._
     val w = 2

@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants for the corpus-curation operators (decontamination, packing,
   * mixture resampling, repeated spans, BM25). */
-class CurationSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class CurationSpec extends AnyFunSuite with SharedSpark {
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantic guarantees: a planted location shift must move KS/PSI far off
   * zero while identical distributions stay near zero (PSI exactly 0.0 —
   * every smoothed term cancels). */
-class DriftSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class DriftSpec extends AnyFunSuite with SharedSpark {
   private val B = 64
 
   /** From-definition referee over (group, value, isA) rows — same cents

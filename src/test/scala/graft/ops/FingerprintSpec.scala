@@ -1,17 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Perceptual-fingerprint harnesses (dHash, scene cut, audio fingerprint):
   * each is recomputed here from the synthesis rule alone — independent of
   * the codec + signature code under test, the same way the DuckDB oracles
   * recompose them in SQL. */
-class FingerprintSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class FingerprintSpec extends AnyFunSuite with SharedSpark {
   private def ids(n: Int) = {
     import spark.implicits._
     (0L until n.toLong).toDF("doc_id")

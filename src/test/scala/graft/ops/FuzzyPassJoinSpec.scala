@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The PassJoin fuzzy-prefix join is EXACT by contract: identical result
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * distinct prefix tokens, degenerate short/empty prefixes — are exactly
   * what these fixtures force, alongside randomized corpora diffed against
   * a driver-side brute force. */
-class FuzzyPassJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class FuzzyPassJoinSpec extends AnyFunSuite with SharedSpark {
   private def lev(a: String, b: String): Int = {
     val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
       if (i == 0) j else if (j == 0) i else 0)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * state, and prove search from the RELOADED model is bit-identical to
   * search from the live trainer — the contract that lets an offline
   * training job and an online serving job be different processes. */
-class IndexPersistenceSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class IndexPersistenceSpec extends AnyFunSuite with SharedSpark {
   test("centroids survive a parquet round trip; reloaded search is bit-identical") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val k = Similarity.scaledCells(e)

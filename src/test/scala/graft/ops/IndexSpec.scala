@@ -1,17 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scalable two-pass global index must agree exactly with the
   * single-partition window formulation. */
-class IndexSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class IndexSpec extends AnyFunSuite with SharedSpark {
   test("withGlobalPosition == row_number over global order") {
     import spark.implicits._
     val rnd = new scala.util.Random(9)
@@ -65,15 +61,12 @@ class IndexSpec extends AnyFunSuite {
 
   private val Widths = Seq(1, 4, 16)
 
-  /** `check` at each shuffle width, restoring the session's width. */
-  private def atWidths(check: Int => Unit): Unit = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try Widths.foreach { w =>
-      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
+  /** `check` at each shuffle width. */
+  private def atWidths(check: Int => Unit): Unit =
+    Widths.foreach(w => withConf("spark.sql.shuffle.partitions" -> w.toString) {
       check(w)
       Spread.release(spark)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
+    })
 
   /** 2,400 unique keys in shuffled order; v is null for the first 50 keys,
     * on every 11th key, and on the whole run [700, 1900), which covers at
@@ -153,15 +146,13 @@ class IndexSpec extends AnyFunSuite {
     // one-row partitions, where every carry crosses a partition boundary
     val df = Seq(5L, 1L, 9L, 3L, 7L, 2L, 8L, 4L, 6L, 10L)
       .map(k => (k, if (k % 3 == 0) None else Some(k * 10))).toDF("k", "v")
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "16")
+    withConf("spark.sql.shuffle.partitions" -> "16") {
       val sizes = df.repartitionByRange(16, col("k")).rdd
         .mapPartitions(it => Iterator(it.size)).collect()
       assert(sizes.toSeq == Seq.fill(10)(1), sizes.mkString(","))
       allOpsMatchWindows(df, "width 16")
       Spread.release(spark)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   test("a positioned frame keeps its input's size estimate") {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the chained asofForward∘asofBackward form it replaced — same bracket
   * selection (incl. tie-breaks on equal timestamps and null values),
   * same nulls when a bracket is missing, same interpolated doubles. */
-class InterpSamePathSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class InterpSamePathSpec extends AnyFunSuite with SharedSpark {
 
   /** The r16 chained formulation, verbatim. */
   private def chained(left: org.apache.spark.sql.DataFrame,

@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The minimax closed form must equal classic pool-adjacent-violators,
   * and the output must be monotone and weighted-mean-preserving. */
-class IsotonicSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class IsotonicSpec extends AnyFunSuite with SharedSpark {
   /** Classic stack PAV over (weight, value) in bin order. */
   private def pav(bins: Seq[(Int, Long, Long)]): Map[Int, Double] = {
     case class Block(w: Long, p: Long, members: List[Int])

@@ -1,17 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** k-core peel: survivors must be exactly the maximal subgraph with
   * within-subgraph degree ≥ k. The dangerous shape is the CASCADE — a
   * chain attached to a clique peels one node per round, so a too-small
   * round bound silently leaves chain remnants in the "core". */
-class KCoreSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class KCoreSpec extends AnyFunSuite with SharedSpark {
   /** Exact referee: peel to fixpoint on an adjacency map. */
   private def referee(n: Int, edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
     var surv = (0L until n.toLong).toSet

@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lloyd's k-means on well-separated clusters must recover them exactly,
   * with centroids equal to the quantized member means. */
-class KmeansSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class KmeansSpec extends AnyFunSuite with SharedSpark {
   test("two separated blobs -> two pure clusters with exact-mean centroids") {
     import spark.implicits._
     // blob A around (0,0,...), blob B around (10,10,...); seeds are ids 0,1

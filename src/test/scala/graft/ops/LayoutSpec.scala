@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * from-definition reference, and bucketing by the key actually delivers
   * the 2-D locality that justifies it (each bucket's bounding box covers a
   * small fraction of both dimension ranges). */
-class LayoutSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class LayoutSpec extends AnyFunSuite with SharedSpark {
   private def mortonRef(a: Long, b: Long, bits: Int): Long =
     (0 until bits).foldLeft(0L)((acc, i) =>
       acc | (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1)))

@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LSH-vs-exact evaluation invariants: planted exact duplicates are always
   * recalled (identical shingle sets => identical signatures => same band
   * keys), and the metric row is internally consistent. */
-class LshQualitySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class LshQualitySpec extends AnyFunSuite with SharedSpark {
   test("exact duplicates recalled; counts consistent") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * distinct, and against a corpus with a tight near-duplicate cluster the
   * λ = 1/2 selection is provably more diverse than plain top-m (it must
   * escape the cluster; plain top-m cannot). */
-class MmrSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class MmrSpec extends AnyFunSuite with SharedSpark {
 
   private def df(rows: Seq[(Long, Array[Float])]) = {
     import spark.implicits._

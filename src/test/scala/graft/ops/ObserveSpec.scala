@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** observe-based counters must equal a direct aggregation — in batch via
   * the QueryExecutionListener and per micro-batch in streaming progress. */
-class ObserveSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ObserveSpec extends AnyFunSuite with SharedSpark {
   test("batch: listener surfaces the counters of exactly the scanned data") {
     import spark.implicits._
     val seen = new java.util.concurrent.atomic.AtomicReference[Map[String, Any]]

@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 pipeline operators: product quantization (codes + IVF-PQ ADC),
   * SemDeDup cluster-scoped semantic dedup, and DSIR importance selection. */
-class PqSemDsirSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class PqSemDsirSpec extends AnyFunSuite with SharedSpark {
   private def vecs(n: Int, dims: Int, seed: Int): Seq[(Long, Array[Float])] = {
     val rnd = new scala.util.Random(seed)
     (0 until n).map(i => (i.toLong, Array.tabulate(dims)(_ => rnd.nextFloat())))

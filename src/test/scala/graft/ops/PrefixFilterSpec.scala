@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The prefix-filter Jaccard join is EXACT by contract: it must return the
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * prefix silently loses candidates (float-ceil rounding), (b) docs whose
   * shingle count is an exact multiple of the threshold denominator, and
   * (c) scope boundaries. */
-class PrefixFilterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class PrefixFilterSpec extends AnyFunSuite with SharedSpark {
   private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 

@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Table profile: exact n/null/distinct per column, all-null columns
   * degrade to zero distinct instead of vanishing from the report. */
-class ProfileSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ProfileSpec extends AnyFunSuite with SharedSpark {
   test("exact counts, nulls, and min/max per column") {
     import spark.implicits._
     val df = Seq(

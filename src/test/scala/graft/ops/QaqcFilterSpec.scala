@@ -1,8 +1,8 @@
 package graft.ops
 
+import graft.SharedSpark
 import graft.core.Meta
 import graft.kernels.Butterworth
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Config-keyed signal filters in the qaqc orchestrator — the reference's
@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sr from sample_rate or 1/sample_interval) and `{var}_med_filt`
   * (odd-kernel zero-padded median smoother). Both keep the pre-filter
   * values in `{var}_unfiltered`. */
-class QaqcFilterSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class QaqcFilterSpec extends AnyFunSuite with SharedSpark {
   private def series(n: Int): Seq[(Long, Double)] =
     (0 until n).map(i => (i.toLong,
       math.sin(2 * math.Pi * 0.01 * i) + 0.5 * math.sin(2 * math.Pi * 0.4 * i)))

@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Snapshot diff classes must be exact; the fingerprint must be null-safe
   * (("a", null) vs (null, "a") is a CHANGE, not a match). */
-class ReconcileSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class ReconcileSpec extends AnyFunSuite with SharedSpark {
   test("added/removed/changed/unchanged partition the key space exactly") {
     import spark.implicits._
     val a = Seq((1L, Some("x"), Some("p")), (2L, Some("y"), Some("q")),

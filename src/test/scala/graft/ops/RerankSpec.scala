@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Two-stage ANN invariants: the rerank stage only reorders stage-1
   * candidates, exact cosine ordering holds within each query's results,
   * and recall@k is 1.0 when the candidate set covers the truth. */
-class RerankSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class RerankSpec extends AnyFunSuite with SharedSpark {
   private def vecs(n: Int, dims: Int, seed: Int): Seq[(Long, Array[Float])] = {
     val rnd = new scala.util.Random(seed)
     (0 until n).map(i => (i.toLong, Array.tabulate(dims)(_ => rnd.nextFloat())))

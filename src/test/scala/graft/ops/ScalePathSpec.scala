@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** At sf0.01 AQE freely broadcasts locally-tiny sides, which hides the
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * path — and asserts bit-identical results. Only bounded model-state
   * broadcasts remain hinted in the plans (centroids, 1-row aggregates),
   * which is exactly the set that survives at scale. */
-class ScalePathSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class ScalePathSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -33,18 +27,16 @@ class ScalePathSpec extends AnyFunSuite {
   test("forcing shuffle joins (no size-elective broadcast) preserves results") {
     for (name <- joinHeavy) {
       val fn = graft.SparkEntry.queries(name)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
       val want = fn(spark, sfDir).collect().map(_.toString).sorted
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // drop every persisted sub-plan (Spread.shared) so the no-broadcast
-      // run re-executes the full physical path instead of replaying cached
-      // InMemoryRelations populated by the first run
-      spark.catalog.clearCache()
-      try {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        // drop every persisted sub-plan (Spread.shared) so the no-broadcast
+        // run re-executes the full physical path instead of replaying cached
+        // InMemoryRelations populated by the first run
+        spark.catalog.clearCache()
         val got = fn(spark, sfDir).collect().map(_.toString).sorted
         assert(got.sameElements(want), s"$name diverges without broadcasts")
         assert(got.nonEmpty, s"$name empty")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+      }
     }
   }
 

@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HLL + Count-Min sketch invariants: estimation accuracy and the
   * one-sided Count-Min guarantee. */
-class SketchSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class SketchSpec extends AnyFunSuite with SharedSpark {
   test("hllDistinct: estimate within HLL error bounds; duplicates ignored") {
     import spark.implicits._
     // group A: 5000 distinct keys (each twice — dedup must not inflate),

@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exact and DOULION triangle counting over the near-dup graph:
   * canonical-orientation exactness on known graphs, den=1 degeneration to
   * the exact counts, and the deterministic-sampling estimate quality on a
   * clique (the hash coin makes the estimate a fixed number — no flake). */
-class TrianglesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TrianglesSpec extends AnyFunSuite with SharedSpark {
   private def cliqueEdges(n: Int) = {
     import spark.implicits._
     (for (a <- 0 until n; b <- a + 1 until n) yield (a.toLong, b.toLong))

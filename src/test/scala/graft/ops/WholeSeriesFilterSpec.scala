@@ -1,8 +1,9 @@
 package graft.ops
 
+import graft.SharedSpark
 import graft.kernels.Butterworth
 import org.apache.spark.NarrowDependency
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exchange's width and wherever its splits fall, the filtered column must
   * equal `Butterworth.filtfiltSegmented` over the series in order, bit for
   * bit. */
-class WholeSeriesFilterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class WholeSeriesFilterSpec extends AnyFunSuite with SharedSpark {
   private val sos = Butterworth.lowpass(4, 1.0 / 10.0, 1.0)
   private val margin = Butterworth.marginFor(sos)
   private val seg = 65536
@@ -25,14 +22,6 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
   private def series(n: Int): Array[Double] = Array.tabulate(n)(i =>
     10.0 + 0.5 * math.sin(2 * math.Pi * 0.002 * i) +
       0.2 * math.sin(2 * math.Pi * 0.11 * i) + ((i * 2654435761L % 1000) - 500) / 5000.0)
-
-  private def withWidth[T](w: Int)(body: => T): T = {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-      body
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
 
   private def sameBits(got: Array[Double], want: Array[Double]): Unit = {
     assert(got.length == want.length)
@@ -57,9 +46,10 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
 
   private def check(n: Int, widths: Seq[Int] = Seq(1, 4, 16)): Unit = {
     val x = series(n)
-    // the kernel itself takes no empty series
-    val want = if (n == 0) x else Butterworth.filtfiltSegmented(sos, x, seg)
-    for (w <- widths) withWidth(w)(sameBits(filtered(frame(x.toSeq.map(Some(_)))), want))
+    val want = Butterworth.filtfiltSegmented(sos, x, seg)
+    for (w <- widths) withConf("spark.sql.shuffle.partitions" -> w.toString) {
+      sameBits(filtered(frame(x.toSeq.map(Some(_)))), want)
+    }
   }
 
   /** Partition p's declared reads, from the sweep's narrow dependency. */
@@ -73,7 +63,7 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
     check(0)
     check(1)
     // no rows: one empty ranged partition, which reads nothing but itself
-    withWidth(16) {
+    withConf("spark.sql.shuffle.partitions" -> "16") {
       val out = Spectra.filterColumnWholeSeries(frame(Nil), Seq("t"), "P_1", sos)
       assert(reads(out).forall(_.length == 1))
     }
@@ -81,7 +71,7 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
 
   test("a series shorter than one segment: every partition reads all the others") {
     check(5000)
-    withWidth(16) {
+    withConf("spark.sql.shuffle.partitions" -> "16") {
       val out = Spectra.filterColumnWholeSeries(
         frame(series(5000).toSeq.map(Some(_))), Seq("t"), "P_1", sos)
       val sizes = out.rdd.mapPartitions(it => Iterator(it.size)).collect()
@@ -104,7 +94,7 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
 
   test("5 rows at width 16") {
     check(5, Seq(16))
-    withWidth(16) {
+    withConf("spark.sql.shuffle.partitions" -> "16") {
       val out = Spectra.filterColumnWholeSeries(
         frame(series(5).toSeq.map(Some(_))), Seq("t"), "P_1", sos)
       // the range bounds are sampled keys, so unique keys leave no
@@ -122,7 +112,9 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
                                else Some(x(i)))
     val want = Butterworth.filtfiltSegmented(sos,
       in.map(_.getOrElse(Double.NaN)).toArray, seg)
-    for (w <- Seq(1, 4, 16)) withWidth(w)(sameBits(filtered(frame(in)), want))
+    for (w <- Seq(1, 4, 16)) withConf("spark.sql.shuffle.partitions" -> w.toString) {
+      sameBits(filtered(frame(in)), want)
+    }
   }
 
   test("an INT value column becomes a nullable DOUBLE; the schema is kept") {
@@ -133,7 +125,7 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
       .map(i => (i.toLong, xi(i), if (i % 5 == 0) null else s"s$i")).toDF("t", "P_1", "other")
     assert(!df.schema("t").nullable && !df.schema("P_1").nullable)
     val want = Butterworth.filtfiltSegmented(sos, xi.map(_.toDouble), seg)
-    for (w <- Seq(1, 4, 16)) withWidth(w) {
+    for (w <- Seq(1, 4, 16)) withConf("spark.sql.shuffle.partitions" -> w.toString) {
       val out = Spectra.filterColumnWholeSeries(df, Seq("t"), "P_1", sos)
       assert(out.schema == StructType(Seq(StructField("t", LongType, nullable = false),
         StructField("P_1", DoubleType, nullable = true),
@@ -150,7 +142,7 @@ class WholeSeriesFilterSpec extends AnyFunSuite {
     val df = new scala.util.Random(5).shuffle(x.indices.toVector)
       .map(i => (1000L + 3 * i, x(i))).toDF("event_id", "pres")
     val want = Butterworth.filtfiltSegmented(bsos, x, 4096)
-    for (w <- Seq(1, 4, 16)) withWidth(w) {
+    for (w <- Seq(1, 4, 16)) withConf("spark.sql.shuffle.partitions" -> w.toString) {
       val out = Spectra.filtfiltWholeSeries(df, Seq("event_id"), "pres", bsos, segLen = 4096)
       assert(out.columns.toSeq == Seq("series", "sample", "value_filt"))
       val rows = out.orderBy("sample").collect()

@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Winnowing fingerprint selection vs an independent in-test reference
   * (straight from the Schleimer/Wilkerson/Aiken definition — no shared
   * code with the Spark plan). */
-class WinnowSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class WinnowSpec extends AnyFunSuite with SharedSpark {
   private def md5h32(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine-exact canonicalization for the dataset_fingerprint queries:
@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools/oracle_check.py on scratch/fptest (NaN/Inf/overflow/tie/NULL
   * fixture); this spec pins the Spark-side outputs so a refactor can't
   * silently change the canonical form. */
-class FpSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
-
+class FpSpec extends AnyFunSuite with SharedSpark {
   test("canonValue: IEEE floor fixed-point with explicit sentinels") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

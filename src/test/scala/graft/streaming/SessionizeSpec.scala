@@ -1,17 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Session-window semantics + streaming/batch parity for
   * [[graft.ops.Sessionize]]. */
-class SessionizeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class SessionizeSpec extends AnyFunSuite with SharedSpark {
 
   private def batchSessions(rows: Seq[(Long, Long)]) = {
     import spark.implicits._

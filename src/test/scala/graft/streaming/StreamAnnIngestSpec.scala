@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.SharedSpark
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming ANN ingest/search parity: the trained coarse quantizer is a
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch Lloyd assignment, and the stream-static candidate join emits
   * exactly the candidates the batch IVF search ranks — re-ranking the
   * streamed candidates reproduces ivfTopKTrained's top-k rows. */
-class StreamAnnIngestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamAnnIngestSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed candidates + rerank == batch trained-IVF search") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

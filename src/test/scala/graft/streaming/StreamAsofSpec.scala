@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with the batch operator `Align.asofNearest` on the matched subset,
   * tying the streaming semantics to the registered join_asof_nearest
   * query. */
-class StreamAsofSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamAsofSpec extends AnyFunSuite with SharedSpark {
 
   private val base = 1700000000000000L // µs
 

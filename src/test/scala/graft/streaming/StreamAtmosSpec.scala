@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch plan does (stglib atmos_correct semantics over a live feed).
   * Stream-static joins need no watermark or state — the static side is
   * re-broadcast per micro-batch. */
-class StreamAtmosSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamAtmosSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming correction equals the batch join row-for-row") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

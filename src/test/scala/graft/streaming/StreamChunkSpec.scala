@@ -1,17 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** RAG ingestion chunking: [[graft.ops.Curation.chunkOverlap]] is a
   * stateless per-document explode, so the IDENTICAL plan runs under
   * Structured Streaming in append mode — the deployment shape of a
   * retrieval-corpus ingest (chunk each arriving micro-batch as it lands). */
-class StreamChunkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamChunkSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming chunkOverlap in append mode equals the batch explode") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

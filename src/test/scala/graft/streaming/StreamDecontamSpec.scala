@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stateless projection — the identical plan flags each arriving micro-batch
   * in append mode, and its output matches the batch join-based
   * [[graft.ops.Curation.contaminationFlags]] on the same corpus. */
-class StreamDecontamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamDecontamSpec extends AnyFunSuite with SharedSpark {
 
   test("static-set decontam matches the join form and streams in append mode") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

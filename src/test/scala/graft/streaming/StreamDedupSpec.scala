@@ -1,13 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamDedupSpec extends AnyFunSuite with SharedSpark {
 
   test("dedups across micro-batches with one-bit state per digest") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

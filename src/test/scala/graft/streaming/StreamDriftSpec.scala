@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the PSI against a batch-built reference must equal the all-batch
   * computation on the same data — the register build IS the plan, so
   * parity is the whole deployment story. */
-class StreamDriftSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamDriftSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed current-side registers give the batch PSI exactly") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -1,16 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming funnel parity: the stateful per-user fold over an in-order
   * event feed must land on exactly the batch query's funnel rows. */
-class StreamFunnelSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamFunnelSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed funnel state equals the batch three-pass computation") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixed-grid histogram-quantile registers under Structured Streaming:
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * over the same rows, and the quantile estimates (exact integer
   * interpolation) are bit-identical. Also covers edge-bin clamping for
   * values outside the historical grid. */
-class StreamHistSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamHistSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed registers equal batch; estimates bit-identical; clamping") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

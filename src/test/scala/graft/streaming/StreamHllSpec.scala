@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * max aggregation runs in complete mode with ≤ m registers of state per
   * group, and the streamed registers estimate bit-identically to a batch
   * build over the same rows. */
-class StreamHllSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamHllSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed registers equal the batch build; estimates bit-identical") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

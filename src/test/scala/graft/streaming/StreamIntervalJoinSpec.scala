@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SharedSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * its purchase two triggers later). The feed schedule keeps every row
   * inside the 10-minute watermark allowance, so nothing is legitimately
   * droppable and parity must be exact. */
-class StreamIntervalJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamIntervalJoinSpec extends AnyFunSuite with SharedSpark {
 
   private def shape(df: DataFrame): DataFrame =
     df.select(col("user_id"), col("event_id"), col("event_type"),

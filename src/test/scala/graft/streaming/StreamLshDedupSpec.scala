@@ -1,13 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamLshDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamLshDedupSpec extends AnyFunSuite with SharedSpark {
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (each arriving micro-batch is normalized before any dedup state sees
   * it). Non-ASCII inputs are built from \u escapes so source encoding
   * can never pre-normalize them. */
-class StreamNormalizeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamNormalizeSpec extends AnyFunSuite with SharedSpark {
 
   private def normalized(df: org.apache.spark.sql.DataFrame) =
     df.select(col("doc_id"), trim(regexp_replace(regexp_replace(

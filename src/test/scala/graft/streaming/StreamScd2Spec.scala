@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-user fold over an in-order CDC feed equal exactly the batch
   * scd2_history query's closed rows (valid_to NOT NULL), including
   * version numbers, across a micro-batch split that lands mid-interval. */
-class StreamScd2Spec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamScd2Spec extends AnyFunSuite with SharedSpark {
 
   test("streamed closed intervals equal the batch window computation") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

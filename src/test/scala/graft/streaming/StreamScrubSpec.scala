@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stateless projection, so the IDENTICAL plan runs under Structured
   * Streaming in append mode — the deployment shape of a production scrub
   * (clean each arriving micro-batch before it ever lands). */
-class StreamScrubSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamScrubSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming piiRedact in append mode equals the batch projection") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

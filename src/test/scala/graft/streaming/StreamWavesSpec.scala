@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Live wave statistics parity: the streamed burst-assembly → Welch
@@ -8,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Hs/Tm/Tp rows to (a) the same plan run batch and (b) the registered
   * batch operator Spectra.waveStatsFromPressure on the same samples —
   * and the recovered wave period/height must match the synthetic wave. */
-class StreamWavesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class StreamWavesSpec extends AnyFunSuite with SharedSpark {
 
   // 3 bursts of 256 one-second samples: 10 m column, 8 s / 0.5 m wave
   private def samples: Seq[BurstAssembler.Sample] =

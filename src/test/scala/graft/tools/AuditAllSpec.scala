@@ -1,18 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Seeded regressions for the scale audit: the flags must actually trip
   * on the anti-patterns they claim to catch, and must stay quiet on the
   * legitimate bounded shapes they exempt. */
-class AuditAllSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AuditAllSpec extends AnyFunSuite with SharedSpark {
   test("a forced broadcast of a data-sized side is flagged") {
     // the exact class removed from the abss/eofe chains: a per-key
     // aggregate of the data spine, force-broadcast back onto it. The
@@ -116,6 +111,37 @@ class AuditAllSpec extends AnyFunSuite {
       java.nio.file.Paths.get("src/main/scala/graft/cli/RunOts.scala"))
     val sites = "Sink\\.writeParquet\\(".r.findAllIn(src).size
     assert(sites == 1, s"$sites Sink.writeParquet( call sites in RunOts")
+  }
+
+  /** (file, enclosing `def`) of every line of `root`'s Scala files that
+    * matches `re`. */
+  private def sites(root: String, re: scala.util.matching.Regex): Seq[(String, String)] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator()
+    val files = scala.collection.mutable.Buffer[java.nio.file.Path]()
+    while (it.hasNext) files += it.next()
+    val defName = """^\s*(?:private |override )*def (\w+)""".r.unanchored
+    files.filter(_.toString.endsWith(".scala")).sortBy(_.toString).toSeq.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
+      lines.indices.filter(i => re.findFirstIn(lines(i)).isDefined).map { i =>
+        val enclosing = (i to 0 by -1).map(lines(_)).collectFirst { case defName(n) => n }
+        (f.toString, enclosing.getOrElse(""))
+      }
+    }
+  }
+
+  test("one way to make a session: Sessions in main, SharedSpark in the tests") {
+    // every suite runs in one JVM, where a second builder only gets the
+    // shared session back and changes its confs for every later suite
+    val builder = """SparkSession\.builder""".r
+    val main = sites("src/main/scala", builder)
+    val test = sites("src/test/scala", builder)
+    assert(main == Seq(("src/main/scala/graft/Sessions.scala", "at")) &&
+      test == Seq(("src/test/scala/graft/SharedSpark.scala", "graftExtensionsSession")),
+      s"${main.size + test.size} session-builder sites:\n${(main ++ test).mkString("\n")}")
+    // test confs change only through withConf, which restores them
+    val confSets = sites("src/test/scala", """\.conf\.set\(""".r)
+    assert(confSets.toSet == Set(("src/test/scala/graft/SharedSpark.scala", "withConf")),
+      confSets.mkString("\n"))
   }
 
   test("an unhinted equi-join is not flagged even when the planner " +
