@@ -1009,15 +1009,16 @@ object RunOts {
     for (c <- Seq("scan", "theta", "HorizontalRange", "sonar_image"))
       require(df.columns.contains(c), s"nc2xy input needs column $c")
     val rows = df.select(
-        unix_micros(col("time")).as("_1"), col("scan").cast("long").as("_2"),
+        coalesce(unix_micros(col("time")), raise_error(lit(s"nc2xy: null `time` in $input")))
+          .as("_1"),
+        col("scan").cast("long").as("_2"),
         col("theta").cast("double").as("_3"),
         expr("transform(HorizontalRange, v -> coalesce(CAST(v AS DOUBLE)," +
           " CAST('NaN' AS DOUBLE)))").as("_4"),
         expr("transform(sonar_image, v -> coalesce(CAST(v AS DOUBLE)," +
           " CAST('NaN' AS DOUBLE)))").as("_5"))
       .as[(Long, Long, Double, Seq[Double], Seq[Double])]
-    val out = graft.ops.Spectra.perGroup(rows,
-        (r: (Long, Long, Double, Seq[Double], Seq[Double])) => r._1) { (t, scans) =>
+    val out = graft.ops.Spectra.perGroup(rows) { (t, scans) =>
       val thetaDeg = scans.map(s => math.toDegrees(s._3))
       val horzRng = scans.head._4.toArray
       val image = scans.map(_._5.toArray)

@@ -73,8 +73,7 @@ object Align {
         .select(col(rightTs).cast("long").as("__ts") +: lit(0).as("__tag") +:
           (left.schema.map(f => lit(null).cast(f.dataType).as(f.name)) ++
             right.columns.map(col)): _*))
-    val sortKeys = Seq(col("__ts"), col("__tag")) ++
-      right.columns.filter(_ != rightTs).map(col)
+    val layout = Sweep.Layout(Seq("__ts"), Seq("__ts", "__tag") ++ right.columns.filter(_ != rightTs))
     val kinds = picks.map(_._1).toArray
     val waits = kinds.exists(_ != Backward)
     val rightTypes = right.schema.map(_.dataType)
@@ -101,8 +100,8 @@ object Align {
       }
       (first, runFirst, runLast)
     }
-    Sweep(tagged, spark.sessionState.conf.numShufflePartitions, Seq(col("__ts")),
-        sortKeys, schema)(summarize)((_, _) => Nil) { (p, ends, it, _) =>
+    Sweep(tagged, spark.sessionState.conf.numShufflePartitions, layout, schema, None)(summarize)(
+        (_, _) => Nil) { (p, ends, it, _) =>
       val near = (d: Long) => java.lang.Long.compareUnsigned(d, tolerance) <= 0
       val project = UnsafeProjection.create(outExprs)
       val noRow = new GenericInternalRow(width)

@@ -43,7 +43,8 @@ object Index {
     * `outCol`, typed as the seed, row by row. The column is first set to
     * `seed` (in place when `df` has it, else appended), so `summarize(o)`
     * and `value(p, summaries, o, read)` read the seed at ordinal `o`, where
-    * the new value is written; `reads` and `read` are [[Sweep]]'s. */
+    * the new value is written; `reads` and `read` are [[Sweep]]'s. The
+    * output declares its ranged layout on orderCols (unless it rewrote one). */
   private[graft] def sweepColumn[S: ClassTag](df: DataFrame, orderCols: Seq[String],
       outCol: String, seed: Column, nullable: Boolean)(
       summarize: Int => Iterator[InternalRow] => S)(
@@ -57,8 +58,9 @@ object Index {
     val outExprs = schema.indices.map(i =>
       if (i == o) BoundReference(schema.length, t, nullable)
       else BoundReference(i, schema(i).dataType, schema(i).nullable))
-    val keys = orderCols.map(col)
-    Sweep(in, scaledPartitions(df), keys, keys, schema)(summarize(o))(reads) {
+    val layout = Sweep.Layout(orderCols, orderCols)
+    Sweep(in, scaledPartitions(df), layout, schema,
+        if (orderCols.contains(outCol)) None else Some(layout))(summarize(o))(reads) {
         (p, summaries, rows, read) =>
       val next = value(p, summaries, o, read)
       val project = UnsafeProjection.create(outExprs)
@@ -75,21 +77,11 @@ object Index {
     * orderCols must form a total order (include a unique key). */
   def withGlobalPosition(df: DataFrame, orderCols: Seq[String],
                          posCol: String): DataFrame =
-    withGlobalPositionCounted(df, orderCols, posCol)._1
-
-  /** [[withGlobalPosition]] plus the TOTAL row count, summed from the
-    * per-partition counts the sweep already collected — callers sizing
-    * downstream work by series length (Burst.fromContinuous) use it
-    * instead of an extra count action. */
-  def withGlobalPositionCounted(df: DataFrame, orderCols: Seq[String],
-                                posCol: String): (DataFrame, Long) = {
-    val (out, counts) = sweepColumn(df, orderCols, posCol, lit(0L), nullable = false)(
+    sweepColumn(df, orderCols, posCol, lit(0L), nullable = false)(
         _ => (it: Iterator[InternalRow]) => it.size.toLong)((_, _) => Nil) { (p, counts, _, _) =>
       var pos = counts.take(p).sum - 1
       _ => { pos += 1; pos }
-    }
-    (out, counts.sum)
-  }
+    }._1
 
   /** Append a running total (inclusive prefix sum) of an integral column in
     * (orderCols) order: exactly SQL's `sum(v) OVER (ORDER BY orderCols ROWS

@@ -1,9 +1,10 @@
 package graft.ops
 
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.kernels.{Butterworth, Spectral}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
@@ -13,9 +14,11 @@ import org.apache.spark.sql.functions._
  * (stglib/core/waves.py:263-306), but distributed by Spark's scheduler for
  * every kernel, not just DIWASP.
  *
- * Distribution pattern: `repartition(n, burst) + sortWithinPartitions +
- * mapPartitions` over contiguous runs, NOT `groupByKey.mapGroups`. The
- * groupByKey exchange is subject to AQE partition coalescing, which sizes
+ * Distribution pattern: `mapPartitions` over contiguous runs of the burst
+ * ([[perGroup]]), NOT `groupByKey.mapGroups`. [[Burst.fromContinuous]]'s
+ * bursts arrive so laid out (and run as they are if cut as wide as the
+ * cluster); other input gets `repartition(n, burst) + sortWithinPartitions`.
+ * The groupByKey exchange is subject to AQE partition coalescing, which sizes
  * partitions by shuffle BYTES — a few MB of burst rows coalesce to one or
  * two partitions and the kernel work (the actual cost, invisible to AQE)
  * serializes. REPARTITION_BY_NUM is exempt from coalescing, and the
@@ -31,10 +34,12 @@ import org.apache.spark.sql.functions._
  */
 object Spectra {
 
-  /** Repartition by group key `_1` (AQE-exempt), sort (`_1`, `_2`) within
-    * partitions, and run `f` once per contiguous equal-key run: the one
-    * per-group kernel fan-out, also under `runots son nc2xy` and
-    * `sonar_regrid`.
+  /** Run `f` once per contiguous run of equal group key `_1`, in `_2` order:
+    * the one per-group kernel fan-out, also under `runots son nc2xy` and
+    * `sonar_regrid`. Input ranged on `_1` into `defaultParallelism` or more
+    * partitions and sorted on (`_1`, `_2`) ([[Sweep.laidOut]]) runs as it
+    * is; other input, a narrower one too, is repartitioned by `_1` into
+    * `defaultParallelism` (AQE-exempt) and sorted within partitions.
     *
     * The extra `lit(0)` hash column is load-bearing: when the input is
     * already hash-partitioned on the key (e.g. a window PARTITION BY the
@@ -44,39 +49,41 @@ object Spectra {
     * through one task (measured 195 IMLM bursts on a single core). A
     * distinct expression set keeps the REPARTITION_BY_NUM exchange, which
     * AQE must honor. */
-  private[graft] def perGroup[T: ClassTag, R](ds: Dataset[T], keyOf: T => Long)(
-      f: (Long, Array[T]) => Iterator[R])(implicit enc: Encoder[R]): Dataset[R] =
-    ds.repartition(ds.sparkSession.sparkContext.defaultParallelism, col("_1"), lit(0))
-      .sortWithinPartitions("_1", "_2")
-      .mapPartitions { it =>
-        val b = it.buffered
-        val runs = new Iterator[(Long, Array[T])] {
-          def hasNext: Boolean = b.hasNext
-          def next(): (Long, Array[T]) = {
-            val k = keyOf(b.head)
-            val buf = scala.collection.mutable.ArrayBuffer.empty[T]
-            while (b.hasNext && keyOf(b.head) == k) buf += b.next()
-            (k, buf.toArray)
-          }
-        }
-        runs.flatMap { case (k, arr) => f(k, arr) }
+  private[graft] def perGroup[T <: Product : ClassTag, R <: Product : TypeTag](ds: Dataset[T])(
+      f: (Long, Array[T]) => Iterator[R]): Dataset[R] = {
+    val n = ds.sparkSession.sparkContext.defaultParallelism
+    val runs =
+      if (Sweep.laidOut(ds, Sweep.Layout(Seq("_1"), Seq("_1", "_2")), n)) ds
+      else ds.repartition(n, col("_1"), lit(0)).sortWithinPartitions("_1", "_2")
+    def keyOf(t: T) = t.productElement(0).asInstanceOf[Long]
+    runs.mapPartitions { it =>
+      val b = it.buffered
+      Iterator.continually(b).takeWhile(_.hasNext).flatMap { _ =>
+        val k = keyOf(b.head)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[T]
+        while (b.hasNext && keyOf(b.head) == k) buf += b.next()
+        f(k, buf.toArray)
       }
+    }(Encoders.product[R])
+  }
 
-  /** The per-group kernels' input: (group, sample) as longs, then each
-    * value column as a double with nulls as NaN. */
-  private def kernelInput[T: Encoder](df: DataFrame, groupCol: String,
-                                      sampleCol: String, valueCols: String*): Dataset[T] =
+  /** The kernels' input: (group, sample) as longs, then each value (one for
+    * `Scalar`; p, u, v for `Puv`) as a double with nulls as NaN. */
+  private type Scalar = (Long, Long, Double)
+  private type Puv = (Long, Long, Double, Double, Double)
+
+  private def kernelInput[T <: Product : TypeTag](df: DataFrame, groupCol: String,
+      sampleCol: String, valueCols: String*): Dataset[T] =
     df.select(col(groupCol).cast("long").as("_1") +:
       col(sampleCol).cast("long").as("_2") +:
       valueCols.zipWithIndex.map { case (v, i) =>
         coalesce(col(v).cast("double"), lit(Double.NaN)).as(s"_${i + 3}") }: _*)
-      .as[T]
+      .as(Encoders.product[T])
 
   /** DIWASP over one burst's (p, u, v) samples: pressure at height zp,
     * colocated velocities at zuv. */
-  private def dirspec(rows: Array[(Long, Long, Double, Double, Double)],
-                      depth: Double, zp: Double, zuv: Double, fs: Double,
-                      nfft: Int, dres: Int, method: String, miter: Int,
+  private def dirspec(rows: Array[Puv], depth: Double, zp: Double, zuv: Double,
+                      fs: Double, nfft: Int, dres: Int, method: String, miter: Int,
                       fmin: Double, fmax: Double, smooth: Boolean,
                       interpTo: Option[(Array[Double], Array[Double])]) =
     graft.kernels.Diwasp.dirspec(
@@ -94,31 +101,22 @@ object Spectra {
                             presCol: String, fs: Double, z: Double,
                             nsegs: Int = 16, noise: Double = 0.9,
                             fcut: Option[Double] = None,
-                            kpmin: Option[Double] = None): Dataset[WaveStatsRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double)](df, burstCol, sampleCol, presCol)
-    perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
-      val p = rows.map(_._3)
-      val w = Spectral.waveStatsFromPressure(p, fs, z, nsegs, noise, fcut, kpmin)
+                            kpmin: Option[Double] = None): Dataset[WaveStatsRow] =
+    perGroup(kernelInput[Scalar](df, burstCol, sampleCol, presCol)) { (k, rows) =>
+      val w = Spectral.waveStatsFromPressure(rows.map(_._3), fs, z, nsegs, noise, fcut, kpmin)
       Iterator.single(
         WaveStatsRow(k, w.h, w.wh4061, w.wp4060, w.wpPeak, w.m0, w.m2, w.tailind))
     }
-  }
 
   /** make_waves_ds_elev over long-format (burst, sample, elevation) rows. */
   def waveStatsFromElevation(df: DataFrame, burstCol: String, sampleCol: String,
                              elevCol: String, fs: Double,
-                             nsegs: Int = 16): Dataset[WaveStatsRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double)](df, burstCol, sampleCol, elevCol)
-    perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
+                             nsegs: Int = 16): Dataset[WaveStatsRow] =
+    perGroup(kernelInput[Scalar](df, burstCol, sampleCol, elevCol)) { (k, rows) =>
       val w = Spectral.waveStatsFromElevation(rows.map(_._3), fs, nsegs)
       Iterator.single(
         WaveStatsRow(k, w.h, w.wh4061, w.wp4060, w.wpPeak, w.m0, w.m2, w.tailind))
     }
-  }
 
   final case class SpectrumRow(burst: Long, frequency: Double, pspec: Double)
 
@@ -128,17 +126,13 @@ object Spectra {
                       presCol: String, fs: Double, z: Double,
                       nsegs: Int = 16,
                       fcut: Option[Double] = None,
-                      kpmin: Option[Double] = None): Dataset[SpectrumRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double)](df, burstCol, sampleCol, presCol)
-    perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
+                      kpmin: Option[Double] = None): Dataset[SpectrumRow] =
+    perGroup(kernelInput[Scalar](df, burstCol, sampleCol, presCol)) { (k, rows) =>
       val w = Spectral.waveStatsFromPressure(rows.map(_._3), fs, z, nsegs,
         fcut = fcut, kpmin = kpmin)
       w.frequencies.indices.iterator.map(i =>
         SpectrumRow(k, w.frequencies(i), w.pspec(i)))
     }
-  }
 
   final case class PuvRow(
       burst: Long, hrmsp: Double, hrmsu: Double, ubr: Double, omegar: Double,
@@ -151,12 +145,8 @@ object Spectra {
   def puvStats(df: DataFrame, burstCol: String, sampleCol: String,
                pCol: String, uCol: String, vCol: String,
                depth: Double, zp: Double, zuv: Double, fs: Double,
-               fftLength: Int = 512): Dataset[PuvRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double, Double, Double)](
-      df, burstCol, sampleCol, pCol, uCol, vCol)
-    perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
+               fftLength: Int = 512): Dataset[PuvRow] =
+    perGroup(kernelInput[Puv](df, burstCol, sampleCol, pCol, uCol, vCol)) { (k, rows) =>
       val r = graft.kernels.Puv.puvQuick(
         rows.map(_._3), rows.map(_._4), rows.map(_._5),
         depth, zp, zuv, fs, fftLength)
@@ -164,7 +154,6 @@ object Spectra {
         PuvRow(k, r.hrmsp, r.hrmsu, r.ubr, r.omegar, r.tr, r.tpp, r.tpu,
           r.phir, r.azr, r.ublo, r.ubhi, r.ubig, r.hrmspTail, r.hrmsuTail))
     }
-  }
 
   final case class DirSpecRow(
       burst: Long, hs: Double, tp: Double, dtp: Double, dp: Double,
@@ -179,39 +168,29 @@ object Spectra {
                   nfft: Int, dres: Int, method: String, miter: Int,
                   fmin: Double, fmax: Double, smooth: Boolean = true,
                   interpTo: Option[(Array[Double], Array[Double])] = None)
-      : Dataset[DirSpecRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double, Double, Double)](
-      df, burstCol, sampleCol, pCol, uCol, vCol)
-    perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
+      : Dataset[DirSpecRow] =
+    perGroup(kernelInput[Puv](df, burstCol, sampleCol, pCol, uCol, vCol)) { (k, rows) =>
       val d = dirspec(rows, depth, zp, zuv, fs, nfft, dres, method, miter,
         fmin, fmax, smooth, interpTo)
       Iterator.single(
         DirSpecRow(k, d.hs, d.tp, d.dtp, d.dp, d.freqs.length, d.dirs.length))
     }
-  }
-
-  final case class DspecRow(burst: Long, freq: Double, dir: Double, s: Double)
 
   final case class DspecStatRow(burst: Long, freq: Double, dir: Double,
                                 s: Double, hs: Double, tp: Double, dtp: Double,
                                 dp: Double, nfreq: Int, ndir: Int)
 
-  /** Full S(freq, dir) grid WITH the per-burst stats repeated on every row —
-    * one kernel run serves both the grid sink and the stats sink (the CLI
-    * diwasp step); callers project/distinct the slice they need. */
+  /** Full DIWASP directional spectrum S(freq, dir) per burst (the `dspec`
+    * grid, stglib/core/waves.py:185-192) in long format, WITH the per-burst
+    * stats on every row: one kernel run serves the grid and the stats sink
+    * (the CLI diwasp step); callers project/distinct the slice they need. */
   def diwaspSpectrumWithStats(df: DataFrame, burstCol: String, sampleCol: String,
                               pCol: String, uCol: String, vCol: String,
                               depth: Double, zp: Double, zuv: Double, fs: Double,
                               nfft: Int, dres: Int, method: String, miter: Int,
                               fmin: Double, fmax: Double, smooth: Boolean = true)
-      : Dataset[DspecStatRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double, Double, Double)](
-      df, burstCol, sampleCol, pCol, uCol, vCol)
-    perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
+      : Dataset[DspecStatRow] =
+    perGroup(kernelInput[Puv](df, burstCol, sampleCol, pCol, uCol, vCol)) { (k, rows) =>
       val d = dirspec(rows, depth, zp, zuv, fs, nfft, dres, method, miter,
         fmin, fmax, smooth, None)
       for {
@@ -220,32 +199,6 @@ object Spectra {
       } yield DspecStatRow(k, d.freqs(fi), d.dirs(di), d.s(fi)(di),
         d.hs, d.tp, d.dtp, d.dp, d.freqs.length, d.dirs.length)
     }
-  }
-
-  /** Full DIWASP directional spectrum S(freq, dir) per burst — the grid the
-    * reference materializes as the `dspec` variable (stglib/core/waves.py:
-    * 185-192), exploded to long-format rows. Same kernel fan-out as
-    * [[diwaspStats]]; output volume is bursts × nfreq × ndir. */
-  def diwaspFullSpectrum(df: DataFrame, burstCol: String, sampleCol: String,
-                         pCol: String, uCol: String, vCol: String,
-                         depth: Double, zp: Double, zuv: Double, fs: Double,
-                         nfft: Int, dres: Int, method: String, miter: Int,
-                         fmin: Double, fmax: Double, smooth: Boolean = true,
-                         interpTo: Option[(Array[Double], Array[Double])] = None)
-      : Dataset[DspecRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double, Double, Double)](
-      df, burstCol, sampleCol, pCol, uCol, vCol)
-    perGroup(ds, (t: (Long, Long, Double, Double, Double)) => t._1) { (k, rows) =>
-      val d = dirspec(rows, depth, zp, zuv, fs, nfft, dres, method, miter,
-        fmin, fmax, smooth, interpTo)
-      for {
-        fi <- d.freqs.indices.iterator
-        di <- d.dirs.indices.iterator
-      } yield DspecRow(k, d.freqs(fi), d.dirs(di), d.s(fi)(di))
-    }
-  }
 
   final case class FiltRow(series: Long, sample: Long, value_filt: Double)
 
@@ -253,78 +206,65 @@ object Spectra {
     * overlap-save segments, long format: `sample` is the global position
     * ([[Index.withGlobalPosition]]), `series` its segment (`sample div
     * segLen`) and `value_filt` the filtered value — the filter of
-    * [[filterColumnWholeSeries]] run over the positions. Two range
-    * exchanges: the position sweep and the filter sweep. */
+    * [[filterColumnWholeSeries]] in (orderCols) order, whose ranged output
+    * the position sweep takes as it is: one range exchange. */
   def filtfiltWholeSeries(df: DataFrame, orderCols: Seq[String], valueCol: String,
                           sos: Array[Butterworth.Sos],
                           segLen: Int = 65536): Dataset[FiltRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pos = Index.withGlobalPosition(
-      df.select((orderCols.map(col) :+ col(valueCol)): _*), orderCols, "__pos")
-    filterInPlace(pos, Seq("__pos"), valueCol, sos, segLen)
+    val filtered = filterColumnWholeSeries(
+      df.select((orderCols.map(col) :+ col(valueCol)): _*), orderCols, valueCol, sos, segLen)
+    Index.withGlobalPosition(filtered, orderCols, "__pos")
       .select(expr(s"__pos div $segLen").as("series"), col("__pos").as("sample"),
         col(valueCol).as("value_filt"))
-      .as[FiltRow]
+      .as(Encoders.product[FiltRow])
   }
 
   /** Replace `valueCol` with its whole-series zero-phase filtered values
     * IN PLACE on the full frame — the shared in-place filter every
     * config-keyed filter (qaqc butter filters, filter_vel, filtered water
     * level) rides. Bit-equal to [[Butterworth.filtfiltSegmented]] with
-    * 65,536-sample segments over the series in (orderCols) order, which
+    * `segLen`-sample segments over the series in (orderCols) order, which
     * must be a total order. The value column becomes a nullable DOUBLE;
-    * nulls go in as NaN. */
-  def filterColumnWholeSeries(df: DataFrame, orderCols: Seq[String],
-                              valueCol: String,
-                              sos: Array[Butterworth.Sos]): DataFrame =
-    filterInPlace(df, orderCols, valueCol, sos, 65536)
-
-  /** Overlap-save filtfilt (SURVEY §7.5 risk 2) as one [[Sweep]]: one range
+    * nulls go in as NaN.
+    *
+    * Overlap-save filtfilt (SURVEY §7.5 risk 2) as one [[Sweep]]: one range
     * exchange and nothing else, and no task ever holds the series. Each
     * partition's summary is its row count, so partition `p` knows its
     * positions [at(p), at(p + 1)) and the span [lo, hi) its segments read:
     * each segment with [[Butterworth.marginFor]] samples of context on
     * either side, cut at the series ends, as `filtfiltSegmented` windows
     * it. The pass reads the span from its own and its neighbours' rows
-    * (Sweep's `reads`), runs filtfilt once per segment and rewrites its own
-    * values. A task cannot seek into a cached block, so reaching the
-    * previous partition's tail decodes that whole block. */
-  private def filterInPlace(df: DataFrame, orderCols: Seq[String], valueCol: String,
-                            sos: Array[Butterworth.Sos], segLen: Int): DataFrame = {
+    * ([[Sweep.rowsAt]]), runs filtfilt once per segment and rewrites its
+    * own values. */
+  def filterColumnWholeSeries(df: DataFrame, orderCols: Seq[String], valueCol: String,
+                              sos: Array[Butterworth.Sos],
+                              segLen: Int = 65536): DataFrame = {
     require(segLen > 0, s"segLen $segLen must be positive")
     val m = Butterworth.marginFor(sos)
-    def span(at: Array[Long], p: Int): (Long, Long) =
-      (math.max(0L, at(p) / segLen * segLen - m),
+    // the prefix counts and the span p's segments read (none if p is empty)
+    def span(counts: Array[Long], p: Int): (Array[Long], Long, Long) = {
+      val at = counts.scanLeft(0L)(_ + _)
+      if (at(p) == at(p + 1)) (at, 0L, 0L)
+      else (at, math.max(0L, at(p) / segLen * segLen - m),
         math.min(at.last, ((at(p + 1) - 1) / segLen + 1) * segLen + m))
-    // the partitions holding some of that span (none for an empty partition)
-    def reads(at: Array[Long], p: Int): Seq[Int] = if (at(p) == at(p + 1)) Nil else {
-      val (lo, hi) = span(at, p)
-      at.indices.init.filter(q => math.max(at(q), lo) < math.min(at(q + 1), hi))
     }
     Index.sweepColumn(df, orderCols, valueCol, col(valueCol).cast("double"),
         nullable = true)(_ => (it: Iterator[InternalRow]) => it.size.toLong)(
-        (p, counts) => reads(counts.scanLeft(0L)(_ + _), p)) { (p, counts, o, read) =>
-      val at = counts.scanLeft(0L)(_ + _)
+        (p, counts) => { val (at, lo, hi) = span(counts, p); Sweep.holding(at, lo, hi) }) {
+        (p, counts, o, read) =>
+      val (at, lo, hi) = span(counts, p)
       val (a, b) = (at(p), at(p + 1))
       val y = new Array[Double]((b - a).toInt)
-      val qs = reads(at, p)
-      if (qs.nonEmpty) {
-        val (lo, hi) = span(at, p)
-        val x = new Array[Double]((hi - lo).toInt)
-        var k = 0
-        for (q <- qs) read(q)
-          .slice((math.max(lo, at(q)) - at(q)).toInt, (math.min(hi, at(q + 1)) - at(q)).toInt)
-          .foreach { r => x(k) = if (r.isNullAt(o)) Double.NaN else r.getDouble(o); k += 1 }
-        var s = a / segLen * segLen
-        while (s < b) {
-          val (c0, c1) = (math.max(0L, s - m), math.min(at.last, s + segLen + m))
-          val f = Butterworth.filtfilt(sos,
-            java.util.Arrays.copyOfRange(x, (c0 - lo).toInt, (c1 - lo).toInt))
-          val (from, until) = (math.max(s, a), math.min(s + segLen, b))
-          System.arraycopy(f, (from - c0).toInt, y, (from - a).toInt, (until - from).toInt)
-          s += segLen
-        }
+      val x = Sweep.rowsAt(at, lo, hi, read)
+        .map(r => if (r.isNullAt(o)) Double.NaN else r.getDouble(o)).toArray
+      var s = if (a < b) a / segLen * segLen else b
+      while (s < b) {
+        val (c0, c1) = (math.max(0L, s - m), math.min(at.last, s + segLen + m))
+        val f = Butterworth.filtfilt(sos,
+          java.util.Arrays.copyOfRange(x, (c0 - lo).toInt, (c1 - lo).toInt))
+        val (from, until) = (math.max(s, a), math.min(s + segLen, b))
+        System.arraycopy(f, (from - c0).toInt, y, (from - a).toInt, (until - from).toInt)
+        s += segLen
       }
       var i = -1
       _ => { i += 1; y(i) }
@@ -334,13 +274,9 @@ object Spectra {
   /** Zero-phase Butterworth filtering per series/burst/bin group
     * (apply_butter_filt, stglib/core/filter.py:60-153). */
   def filtfiltPerGroup(df: DataFrame, groupCol: String, sampleCol: String,
-                       valueCol: String, sos: Array[Butterworth.Sos]): Dataset[FiltRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = kernelInput[(Long, Long, Double)](df, groupCol, sampleCol, valueCol)
-    perGroup(ds, (t: (Long, Long, Double)) => t._1) { (k, rows) =>
+                       valueCol: String, sos: Array[Butterworth.Sos]): Dataset[FiltRow] =
+    perGroup(kernelInput[Scalar](df, groupCol, sampleCol, valueCol)) { (k, rows) =>
       val y = Butterworth.filtfilt(sos, rows.map(_._3))
       rows.indices.iterator.map(i => FiltRow(k, rows(i)._2, y(i)))
     }
-  }
 }

@@ -38,7 +38,7 @@ object SonarQueries {
           .select(col("user_id").cast("long").as("_1"),
             col("rn").cast("long").as("_2"), col("value").cast("double").as("_3"))
           .as[(Long, Long, Double)]
-        val out = Spectra.perGroup(grid, (r: (Long, Long, Double)) => r._1) { (scan, rows) =>
+        val out = Spectra.perGroup(grid) { (scan, rows) =>
           val thetas = Array.tabulate(NSWEEP)(i => i * 360.0 / NSWEEP)
           val ranges = Array.tabulate(NRANGE)(i => 0.5 + i * 0.5)
           val image = Array.tabulate(NSWEEP, NRANGE)((t, r) =>

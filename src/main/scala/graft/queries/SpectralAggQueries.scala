@@ -58,17 +58,12 @@ object SpectralAggQueries {
     // rows from events: burst × 8 freqs × 12 dirs.
     Q("mean_wave_dir",
       (s, dir) => {
-        // grid positions via one ordered sweep (no single-partition
-        // window); int cast keeps the row_number()-1 schema the oracle
-        // sees. Positions are contiguous, so only the last burst can be
-        // short: the sweep's row count marks where full bursts end
-        val (pos, total) = graft.ops.Index.withGlobalPositionCounted(
-          events(s, dir), Seq("event_id"), "__pos")
-        val rows = pos.filter(col("__pos") < total - total % 96)
-          .withColumn("rn", col("__pos").cast("int")).drop("__pos")
-          .withColumn("burst", expr("rn div 96"))
-          .withColumn("fi", expr("(rn % 96) div 12"))
-          .withColumn("di", col("rn") % 12)
+        // the complete 96-cell bursts in event_id order: one ordered sweep
+        // (no single-partition window)
+        val rows = Burst.fromContinuous(events(s, dir), Seq("event_id"), Nil, 96,
+            "burst", "cell")
+          .withColumn("fi", expr("cell div 12"))
+          .withColumn("di", col("cell") % 12)
           .withColumn("freq", lit(0.05) + col("fi") * 0.05)
           .withColumn("dirdeg", col("di") * 30.0)
           .withColumn("sval", col("value") + lit(1.0))

@@ -964,7 +964,7 @@ object WaveQueries {
     Q("diwasp_dspec",
       (s, dir) => {
         val b = puvBursts(s, dir)
-        Spectra.diwaspFullSpectrum(b, "burst", "sample", "p", "u", "v",
+        Spectra.diwaspSpectrumWithStats(b, "burst", "sample", "p", "u", "v",
           depth = 10.0, zp = 0.5, zuv = 1.0, fs = 1.0,
           nfft = 128, dres = 36, method = "DFTM", miter = 0,
           fmin = 0.05, fmax = 0.45).toDF()

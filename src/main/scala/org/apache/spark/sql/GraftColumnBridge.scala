@@ -2,8 +2,9 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
@@ -19,11 +20,18 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** DataFrame over Catalyst rows laid out as `schema`, whose plan reports
-    * `stats` (a bare RDD would report `spark.sql.defaultSizeInBytes`). */
+    * `stats` (a bare RDD would report `spark.sql.defaultSizeInBytes`) and the
+    * layout its rows have: range partitioned on `rangeKeys` (ascending, in
+    * partition order; none if empty), sorted on `sortKeys`. */
   def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType,
-                stats: Statistics): DataFrame = {
+                stats: Statistics, rangeKeys: Seq[String],
+                sortKeys: Seq[String]): DataFrame = {
     val session = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    def asc(keys: Seq[String]) = keys.map(k => SortOrder(output.find(_.name == k).get, Ascending))
+    val partitioning = if (rangeKeys.isEmpty) UnknownPartitioning(0)
+      else RangePartitioning(asc(rangeKeys), rows.getNumPartitions)
     classic.Dataset.ofRows(session,
-      LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(session, Some(stats)))
+      LogicalRDD(output, rows, partitioning, asc(sortKeys))(session, Some(stats)))
   }
 }

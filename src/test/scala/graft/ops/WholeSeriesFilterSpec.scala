@@ -2,7 +2,8 @@ package graft.ops
 
 import graft.SharedSpark
 import graft.kernels.Butterworth
-import org.apache.spark.NarrowDependency
+import org.apache.spark.{NarrowDependency, ShuffleDependency}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -150,5 +151,46 @@ class WholeSeriesFilterSpec extends AnyFunSuite with SharedSpark {
       assert(rows.forall(r => r.series == r.sample / 4096))
       sameBits(rows.map(_.value_filt), want)
     }
+  }
+
+  /** The shuffles in a result's lineage. */
+  private def shuffles(rdd: RDD[_]): Set[Int] = rdd.dependencies.flatMap {
+    case s: ShuffleDependency[_, _, _] => shuffles(s.rdd) + s.shuffleId
+    case d => shuffles(d.rdd)
+  }.toSet
+
+  test("filtfiltWholeSeries over 10,000 rows at width 4 runs one shuffle") {
+    import spark.implicits._
+    val df = new scala.util.Random(8).shuffle((0 until 10000).toVector)
+      .map(i => (i.toLong, math.sin(i * 0.01))).toDF("t", "v")
+    // the filter sweep's range exchange, which the position sweep takes as it is
+    withConf("spark.sql.shuffle.partitions" -> "4") {
+      val out = Spectra.filtfiltWholeSeries(df, Seq("t"), "v", sos, segLen = 4096)
+      assert(out.count() == 10000)
+      assert(shuffles(out.queryExecution.toRdd).size == 1)
+    }
+    Spread.release(spark)
+  }
+
+  test("a filter over a filter's output on one order reads it once, through no exchange") {
+    import spark.implicits._
+    // every upstream row passes a counting UDF: taken as laid out, the
+    // second sweep must read the frame it persisted, or its count job, its
+    // own rows and each neighbour's read run the upstream pass again
+    val evaluated = spark.sparkContext.longAccumulator
+    val counted = udf { (x: Double) => evaluated.add(1); x }
+    val (n, segLen) = (10000, 1024)
+    withConf("spark.sql.shuffle.partitions" -> "4") {
+      val first = Spectra.filterColumnWholeSeries(
+        frame(series(n).toSeq.map(Some(_))), Seq("t"), "P_1", sos, segLen)
+      val second = Spectra.filterColumnWholeSeries(
+        first.withColumn("P_1", counted(col("P_1"))), Seq("t"), "P_1", sos, segLen)
+      val got = second.orderBy("t").select("P_1").as[Double].collect()
+      assert(shuffles(second.queryExecution.toRdd).size == 1)
+      assert(evaluated.sum == n)
+      sameBits(got, Butterworth.filtfiltSegmented(sos,
+        Butterworth.filtfiltSegmented(sos, series(n), segLen), segLen))
+    }
+    Spread.release(spark)
   }
 }
