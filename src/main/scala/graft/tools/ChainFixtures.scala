@@ -174,6 +174,34 @@ object ChainFixtures {
         (lit(3.0) + (col("id") % 23) * 0.01).as("brangeAST"))
       .write.mode("overwrite").parquet(p("sigraw"))
 
+  /** Signature velocity profiles, U/V/W1/W2 at 1 Hz: 3 bins per time step. */
+  private def genSigBins(spark: SparkSession, m: Double, p: String => String): Unit =
+    spark.range(n(4096L, m))
+      .select(col("id"), explode(sequence(lit(0), lit(2))).as("bin"))
+      .select(
+        expr(s"timestamp_micros(${T0}L + id * 1000000)").as("time"), col("bin"),
+        (lit(0.1) + sin(col("id") * 0.3 + col("bin")) * 0.05).as("VelEast"),
+        (lit(0.05) + cos(col("id") * 0.05) * 0.02 + col("bin") * 0.01).as("VelNorth"),
+        (sin(col("id") * 0.7) * 0.01 + (col("id") % 13) * 0.001).as("VelUp1"),
+        (cos(col("id") * 0.9) * 0.01).as("VelUp2"),
+        (lit(90.0) + col("id") % 5).as("Heading"))
+      .write.mode("overwrite").parquet(p("sigbinraw"))
+
+  /** Signature velocity bursts, U/V/W1/W2 at 2 Hz: 512 samples an hour. */
+  private def genSigBursts(spark: SparkSession, m: Double, p: String => String): Unit =
+    spark.range(n(16L, m))
+      .select(col("id").as("burst"), explode(sequence(lit(0), lit(511))).as("sample"))
+      .withColumn("i", col("burst") * 512 + col("sample"))
+      .select(
+        expr(s"timestamp_micros(${T0}L + burst * 3600000000)").as("time"),
+        col("sample"),
+        (lit(0.1) + sin(col("i") * 0.3) * 0.05 + col("burst") * 0.001).as("VelEast"),
+        (lit(0.05) + cos(col("i") * 0.05) * 0.02).as("VelNorth"),
+        (sin(col("i") * 0.7) * 0.01 + (col("i") % 13) * 0.001).as("VelUp1"),
+        (cos(col("i") * 0.9) * 0.01).as("VelUp2"),
+        (lit(90.0) + col("burst") % 5).as("Heading"))
+      .write.mode("overwrite").parquet(p("sigburstraw"))
+
   private def genVec(spark: SparkSession, m: Double, p: String => String): Unit =
     rng(spark, n(500000L, m)).select(
         expr(s"timestamp_micros(${T0}L + id * 1000000)").as("time"),
@@ -308,6 +336,23 @@ object ChainFixtures {
         Meta(Map[String, Any]("magnetic_variation" -> 12.0,
           "velocity_cor_min" -> 30.0, "trim_ast" -> "true",
           "ast_qual_sf" -> 0.85)), p("sigraw"), p("sigclean"))),
+    // the filter labels run at most 50k rows at x1
+    ChainCase("sig/clean_vel_filter", (s, m, p) => genSig(s, m * 0.08, p), "sigraw",
+      (s, p) => RunOts.runStep(s, "sig", "clean",
+        Meta(Map[String, Any]("magnetic_variation" -> 12.0,
+          "velocity_cor_min" -> 30.0, "vel_filter_method" -> "lowpass",
+          "vel_filter_cut" -> 30.0, "sample_interval" -> 1.0)),
+        p("sigraw"), p("sigvfclean"))),
+    ChainCase("sig/clean_vel_filter_bins", genSigBins, "sigbinraw", (s, p) =>
+      RunOts.runStep(s, "sig", "clean",
+        Meta(Map[String, Any]("magnetic_variation" -> 12.0,
+          "vel_filter_method" -> "lowpass", "vel_filter_cut" -> 30.0,
+          "sample_interval" -> 1.0)), p("sigbinraw"), p("sigbinclean"))),
+    ChainCase("sig/clean_vel_filter_bursts", genSigBursts, "sigburstraw", (s, p) =>
+      RunOts.runStep(s, "sig", "clean",
+        Meta(Map[String, Any]("magnetic_variation" -> 12.0,
+          "vel_filter_method" -> "lowpass", "vel_filter_cut" -> 10.0,
+          "sample_rate" -> 2.0)), p("sigburstraw"), p("sigburstclean"))),
     ChainCase("vec/clean", genVec, "vecraw", (s, p) =>
       RunOts.runStep(s, "vec", "clean",
         Meta(Map[String, Any]("VECCoordinateSystem" -> "BEAM",
@@ -348,5 +393,12 @@ object ChainFixtures {
           "filtered_wl" -> "true", "sample_interval" -> 1.0,
           "average_salinity" -> 30.0, "initial_instrument_height" -> 0.25,
           "latitude" -> 30.0)), p("hoboraw"), p("hoboclean"))),
+    ChainCase("hobo/clean_lowpass", (s, m, p) => genHobo(s, m * 0.08, p), "hoboraw",
+      (s, p) => RunOts.runStep(s, "hobo", "clean",
+        Meta(Map[String, Any]("atmpres" -> 10.0, "NAVD88_ref" -> -1.25,
+          "filtered_wl" -> "true", "sample_interval" -> 1.0,
+          "average_salinity" -> 30.0, "initial_instrument_height" -> 0.25,
+          "latitude" -> 30.0, "P_1_lowpass_filt" -> 60.0,
+          "T_28_lowpass_filt" -> 600.0)), p("hoboraw"), p("hobolpclean"))),
   )
 }

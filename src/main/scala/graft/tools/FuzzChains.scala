@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 /**
- * Adversarial robustness gate for the 17 per-family CLI chains — the
+ * Adversarial robustness gate for the per-family CLI chains — the
  * chain-surface mirror of `tools/fuzz_docs.py` (which gates the query
  * registry): every chain runs against deliberately malformed deployment
  * inputs and must either produce a product or fail with a LOUD TYPED
