@@ -918,9 +918,8 @@ object RunOts {
     * set, each var keeping a `{var}_unfiltered` copy. Burst data (a
     * `sample` column) filters along the sample axis per time step
     * (filter.py:58-66); profile data (a `bin` column) filters per bin;
-    * series data filters whole-series in place
-    * (Spectra.filterColumnWholeSeries: one ordered sweep whose partitions
-    * read their overlap-save margins from their neighbours).
+    * series data filters whole-series. Every layout filters the whole set
+    * in place in one pass (Spectra.filterColumns).
     * Configured filtering with no sample rate raises, like the
     * reference's ValueError (filter.py:275-278). */
   private[cli] def velFilter(df0: DataFrame, meta: Meta,
@@ -951,42 +950,15 @@ object RunOts {
       case other =>
         throw new IllegalArgumentException(s"vel_filter_method $other")
     }
-    var df = df0
-    val hasSample = df.columns.contains("sample")
-    val hasBin = df.columns.contains("bin")
+    val (hasSample, hasBin) = (df0.columns.contains("sample"), df0.columns.contains("bin"))
     require(!(hasSample && hasBin),
-      "velFilter supports series, per-bin profile, or burst layouts —" +
-        " route burst PROFILES through Spectra.filtfiltPerGroup directly")
-    for (v <- vels if df.columns.contains(v)) {
-      df = df.withColumn(s"${v}_unfiltered", col(v))
-      if (hasSample) {
-        // burst layout: filter along the sample axis per time step; the
-        // (time, sample) join keys are unique by construction, unlike a
-        // time-only key when timestamps repeat within a burst
-        val withT = df.withColumn("__tus", unix_micros(col("time")))
-        val filt = graft.ops.Spectra.filtfiltPerGroup(withT, "__tus",
-            "sample", v, sos).toDF()
-          .select(col("series").as("__t2"), col("sample").as("__s2"),
-            col("value_filt").as("__vf"))
-        df = withT.join(filt,
-            col("__tus") === col("__t2") && col("sample") === col("__s2"),
-            "left")
-          .withColumn(v, col("__vf"))
-          .drop("__t2", "__s2", "__vf", "__tus")
-      } else if (hasBin) {
-        val withT = df.withColumn("__tus", unix_micros(col("time")))
-        val filt = graft.ops.Spectra.filtfiltPerGroup(withT, "bin", "__tus",
-            v, sos).toDF()
-          .select(col("series").as("__b"), col("sample").as("__t2"),
-            col("value_filt").as("__vf"))
-        df = withT.join(filt,
-            col("bin") === col("__b") && col("__tus") === col("__t2"), "left")
-          .withColumn(v, col("__vf"))
-          .drop("__b", "__t2", "__vf", "__tus")
-      } else
-        df = graft.ops.Spectra.filterColumnWholeSeries(df, Seq("time"), v, sos)
-    }
-    df
+      "velFilter supports series, per-bin profile, or burst layouts, not burst profiles")
+    val (group, order) = if (hasSample) (Some("time"), Seq("sample"))
+      else if (hasBin) (Some("bin"), Seq("time")) else (None, Seq("time"))
+    val present = vels.filter(df0.columns.contains)
+    graft.ops.Spectra.filterColumns(
+      present.foldLeft(df0)((d, v) => d.withColumn(s"${v}_unfiltered", col(v))),
+      group, order, present.map(_ -> sos))
   }
 
   /** `runots son nc2xy` (stglib/son/nc2xy.py:9-123): polar→cartesian

@@ -208,7 +208,7 @@ object Butterworth {
     * The reference applies this whole-series, per burst, or per bin
     * (stglib/core/filter.py:60-153); at scale, whole-series filtering runs
     * it once per overlap-save segment: [[filtfiltSegmented]] in one task,
-    * Spectra.filterColumnWholeSeries across partitions. */
+    * Spectra.filterColumns across partitions. */
   def filtfilt(sos: Array[Sos], x: Array[Double]): Array[Double] = {
     if (x.isEmpty) return Array.emptyDoubleArray
     val padlen = math.min(3 * 2 * sos.length, x.length - 1)

@@ -4,9 +4,9 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Scalable global positional index (SURVEY §7.5 risk 3 + the clip_good_ens /
@@ -39,34 +39,32 @@ object Index {
       math.min((bytes / (32L << 20)).toLong + 1L, 4096L).toInt)
   }
 
-  /** One [[Sweep]] of `df` in (orderCols) order that sets the column
-    * `outCol`, typed as the seed, row by row. The column is first set to
-    * `seed` (in place when `df` has it, else appended), so `summarize(o)`
-    * and `value(p, summaries, o, read)` read the seed at ordinal `o`, where
-    * the new value is written; `reads` and `read` are [[Sweep]]'s. The
-    * output declares its ranged layout on orderCols (unless it rewrote one). */
-  private[graft] def sweepColumn[S: ClassTag](df: DataFrame, orderCols: Seq[String],
-      outCol: String, seed: Column, nullable: Boolean)(
-      summarize: Int => Iterator[InternalRow] => S)(
+  /** One [[Sweep]] of `df` in (orderCols) order that sets the columns `outs`
+    * (name, seed), typed as their seeds, row by row. Each is first set to its
+    * seed (in place when `df` has it, else appended), so `summarize(os)` and
+    * `values(p, summaries, os, read)` read the seeds at ordinals `os`; `values`
+    * gives each row its row of new values. `reads` and `read` are [[Sweep]]'s.
+    * The output declares its ranged layout on orderCols (unless it rewrote one). */
+  private[graft] def sweepColumns[S: ClassTag](df: DataFrame, orderCols: Seq[String],
+      outs: Seq[(String, Column)], nullable: Boolean)(
+      summarize: Seq[Int] => Iterator[InternalRow] => S)(
       reads: (Int, Array[S]) => Seq[Int])(
-      value: (Int, Array[S], Int, Int => Iterator[InternalRow]) => InternalRow => Any)
+      values: (Int, Array[S], Seq[Int], Int => Iterator[InternalRow]) => InternalRow => InternalRow)
       : (DataFrame, Array[S]) = {
-    val in = df.withColumn(outCol, seed)
-    val o = in.columns.indexOf(outCol)
-    val t = in.schema(o).dataType
-    val schema = StructType(in.schema.fields.updated(o, StructField(outCol, t, nullable)))
-    val outExprs = schema.indices.map(i =>
-      if (i == o) BoundReference(schema.length, t, nullable)
-      else BoundReference(i, schema(i).dataType, schema(i).nullable))
+    val in = outs.foldLeft(df) { case (d, (c, seed)) => d.withColumn(c, seed) }
+    val os = outs.map(o => in.columns.indexOf(o._1))
+    val schema = StructType(os.foldLeft(in.schema.fields)((fs, o) =>
+      fs.updated(o, fs(o).copy(nullable = nullable))))
+    val outExprs = schema.indices.map(i => BoundReference(
+      if (os.contains(i)) schema.length + os.indexOf(i) else i, schema(i).dataType, schema(i).nullable))
     val layout = Sweep.Layout(orderCols, orderCols)
     Sweep(in, scaledPartitions(df), layout, schema,
-        if (orderCols.contains(outCol)) None else Some(layout))(summarize(o))(reads) {
-        (p, summaries, rows, read) =>
-      val next = value(p, summaries, o, read)
+        if (outs.exists(o => orderCols.contains(o._1))) None else Some(layout))(
+        summarize(os))(reads) { (p, summaries, rows, read) =>
+      val next = values(p, summaries, os, read)
       val project = UnsafeProjection.create(outExprs)
-      val v = new GenericInternalRow(1)
       val joined = new JoinedRow
-      rows.map { r => v.update(0, next(r)); project(joined(r, v)) }
+      rows.map(r => project(joined(r, next(r))))
     }
   }
 
@@ -77,10 +75,10 @@ object Index {
     * orderCols must form a total order (include a unique key). */
   def withGlobalPosition(df: DataFrame, orderCols: Seq[String],
                          posCol: String): DataFrame =
-    sweepColumn(df, orderCols, posCol, lit(0L), nullable = false)(
+    sweepColumns(df, orderCols, Seq(posCol -> lit(0L)), nullable = false)(
         _ => (it: Iterator[InternalRow]) => it.size.toLong)((_, _) => Nil) { (p, counts, _, _) =>
       var pos = counts.take(p).sum - 1
-      _ => { pos += 1; pos }
+      _ => { pos += 1; InternalRow(pos) }
     }._1
 
   /** Append a running total (inclusive prefix sum) of an integral column in
@@ -95,11 +93,11 @@ object Index {
     // null-skipping sum: a partition's summary is null when it has no value
     def plus(a: java.lang.Long, b: java.lang.Long): java.lang.Long =
       if (a == null) b else if (b == null) a else a + b
-    sweepColumn(df, orderCols, outCol, col(valueCol).cast("long"), nullable = true)(
-        o => _.foldLeft(null: java.lang.Long)((a, r) => plus(a, valueAt(r, o))))(
-        (_, _) => Nil) { (p, sums, o, _) =>
+    sweepColumns(df, orderCols, Seq(outCol -> col(valueCol).cast("long")), nullable = true)(
+        { case Seq(o) => _.foldLeft(null: java.lang.Long)((a, r) => plus(a, valueAt(r, o))) })(
+        (_, _) => Nil) { case (p, sums, Seq(o), _) =>
       var acc = sums.take(p).foldLeft(null: java.lang.Long)(plus)
-      r => { acc = plus(acc, valueAt(r, o)); acc }
+      r => { acc = plus(acc, valueAt(r, o)); InternalRow(acc) }
     }._1
   }
 
@@ -129,8 +127,8 @@ object Index {
     val keyOrder = keyRefs.indices.map(i =>
       SortOrder(keyRefs(i).copy(ordinal = i), Ascending))
     // per partition: (rows, last value, rows tied with their predecessor)
-    val (out, ends) = sweepColumn(df, orderCols, outCol, col(valueCol).cast("long"),
-        nullable = true)(o => { (it: Iterator[InternalRow]) =>
+    val (out, ends) = sweepColumns(df, orderCols, Seq(outCol -> col(valueCol).cast("long")),
+        nullable = true)({ case Seq(o) => (it: Iterator[InternalRow]) =>
       var n, tied = 0L
       var last: java.lang.Long = null
       var prevKey: InternalRow = null
@@ -146,10 +144,10 @@ object Index {
         n += 1
       }
       (n, last, tied)
-    })((_, _) => Nil) { (p, ends, o, _) =>
+    })((_, _) => Nil) { case (p, ends, Seq(o), _) =>
       var prev = ends.take(p).reverseIterator
         .collectFirst { case (n, l, _) if n > 0 => l }.orNull
-      r => { val lagged = prev; prev = valueAt(r, o); lagged }
+      r => { val lagged = prev; prev = valueAt(r, o); InternalRow(lagged) }
     }
     val nTied = ends.map(_._3).sum
     if (nTied > 0) throw new IllegalArgumentException(

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.core.Meta
+import graft.kernels.Butterworth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,61 +17,20 @@ import org.apache.spark.sql.functions._
  */
 object Qaqc {
 
-  /** Apply every configured trim for `v` in reference order. `order`/`part`
-    * give the series ordering (e.g. ts,event_id within user_id). */
-  def applyVar(df0: DataFrame, meta: Meta, v: String,
-               order: Seq[String], part: Seq[String],
-               sampleCol: Option[String] = None): DataFrame = {
+  /** `v`'s median filter and trims in reference order, std trims on `stdCol`. */
+  private def trimVar(df0: DataFrame, meta: Meta, v: String, stdCol: String,
+                      order: Seq[String], part: Seq[String],
+                      sampleCol: Option[String]): DataFrame = {
     var df = df0
     def d(key: String): Option[Double] = meta.dbl(s"${v}_$key")
     def i(key: String): Option[Int] = meta.int(s"${v}_$key")
 
-    // FILTERS first, in the reference's call_qaqc order (qaqc.py:19-20):
-    // apply_butter_filt then apply_med_filt, both keeping a
-    // `{var}_unfiltered` copy of the pre-filter values
-    def keepUnfiltered(): Unit =
-      if (!df.columns.contains(s"${v}_unfiltered"))
-        df = df.withColumn(s"${v}_unfiltered", col(v))
-    // {var}_lowpass/highpass/bandpass_filt hold PERIODS in seconds
-    // (filter.py:131-147: cutfreq = 1/attr); order from the
-    // `filter_order` attr, default 4 (filter.py:45-48); sr from
-    // sample_rate or 1/sample_interval, missing -> loud error like the
-    // reference's ValueError. Whole-series shape only (the clean CLI's
-    // 1-D series); per-group feeds route through Spectra.filtfiltPerGroup
-    // directly.
-    val butterSos: Option[Array[graft.kernels.Butterworth.Sos]] = {
-      import graft.kernels.Butterworth
-      val ford = meta.int("filter_order").getOrElse(4)
-      def sr: Double = meta.dbl("sample_rate")
-        .orElse(meta.dbl("sample_interval").map(1.0 / _))
-        .getOrElse(throw new IllegalArgumentException(
-          s"sample_rate or sample_interval missing in attrs:" +
-            s" cannot apply a Butterworth filter to $v"))
-      d("lowpass_filt").map(p => Butterworth.lowpass(ford, 1.0 / p, sr))
-        .orElse(d("highpass_filt").map(p => Butterworth.highpass(ford, 1.0 / p, sr)))
-        .orElse(meta.dblSeq(s"${v}_bandpass_filt").map { ps =>
-          // the reference's [attr0, attr1] are the LONG and SHORT periods:
-          // cutfreq_lo = 1/attr0 < cutfreq_hi = 1/attr1 (filter.py:141-146);
-          // bandpass() rejects a reversed band loudly
-          require(ps.length == 2,
-            s"${v}_bandpass_filt needs [long, short] periods")
-          Butterworth.bandpass(ford, 1.0 / ps(0), 1.0 / ps(1), sr)
-        })
-    }
-    butterSos.foreach { sos =>
-      require(part.isEmpty,
-        s"config-keyed Butterworth filtering is wired for whole-series" +
-          s" inputs; use Spectra.filtfiltPerGroup for grouped data")
-      keepUnfiltered()
-      df = Spectra.filterColumnWholeSeries(df, order, v, sos)
-    }
     // {var}_med_filt: N-point median SMOOTHER (zero-padded edges, the
     // scipy.signal.medfilt contract rollingMedian(zeroPad=true) replays);
     // even kernels raise, like the reference (filter.py:226-229)
     i("med_filt").foreach { k =>
       require(k % 2 == 1,
         s"${v}_med_filt kernel $k is not an odd whole number")
-      keepUnfiltered()
       df = df.withColumn(v, Trims.rollingMedian(v, k, order, part))
     }
 
@@ -90,8 +50,8 @@ object Qaqc {
     d("maxabs_diff").foreach(thr => df = Trims.trimMaxAbsDiff(df, v, thr, order, part))
     d("max_blip").foreach(thr => df = Trims.trimMaxBlip(df, v, thr, order, part))
     d("max_blip_pct").foreach(thr => df = Trims.trimMaxBlipPct(df, v, thr, order, part))
-    d("std_ratio").foreach(r => df = Trims.trimStdRatio(df, v, r, s"${v}_std"))
-    d("max_std").foreach(m => df = Trims.trimMaxStd(df, v, m, s"${v}_std"))
+    d("std_ratio").foreach(r => df = Trims.trimStdRatio(df, v, r, stdCol))
+    d("max_std").foreach(m => df = Trims.trimMaxStd(df, v, m, stdCol))
     i("warmup_samples").foreach { n =>
       sampleCol.foreach(sc => df = Trims.trimWarmup(df, v, n, sc))
     }
@@ -104,12 +64,51 @@ object Qaqc {
     df
   }
 
-  /** Full call_qaqc over a set of data variables: per-var trims, then the
-    * mask-expr / mask / by-any / fliers re-run passes, then drop_vars. */
+  /** `{v}_lowpass/highpass/bandpass_filt`'s Butterworth filter: PERIODS in
+    * seconds (filter.py:131-147: cutfreq = 1/attr), order `filter_order`,
+    * default 4 (filter.py:45-48), sr from sample_rate or 1/sample_interval,
+    * missing -> loud error like the reference's ValueError. */
+  private def butterSos(meta: Meta, v: String): Option[Array[Butterworth.Sos]] = {
+    val ford = meta.int("filter_order").getOrElse(4)
+    def sr: Double = meta.dbl("sample_rate").orElse(meta.dbl("sample_interval").map(1.0 / _))
+      .getOrElse(throw new IllegalArgumentException(
+        s"sample_rate or sample_interval missing in attrs: cannot apply a Butterworth filter to $v"))
+    meta.dbl(s"${v}_lowpass_filt").map(p => Butterworth.lowpass(ford, 1.0 / p, sr))
+      .orElse(meta.dbl(s"${v}_highpass_filt").map(p => Butterworth.highpass(ford, 1.0 / p, sr)))
+      .orElse(meta.dblSeq(s"${v}_bandpass_filt").map { ps =>
+        // the reference's [attr0, attr1] are the LONG and SHORT periods:
+        // cutfreq_lo = 1/attr0 < cutfreq_hi = 1/attr1 (filter.py:141-146);
+        // bandpass() rejects a reversed band loudly
+        require(ps.length == 2, s"${v}_bandpass_filt needs [long, short] periods")
+        Butterworth.bandpass(ford, 1.0 / ps(0), 1.0 / ps(1), sr)
+      })
+  }
+
+  /** Full call_qaqc over a set of data variables, ordered by `order` within
+    * `part`: filters, per-var trims, then the mask-expr / mask / by-any /
+    * fliers re-run passes, then drop_vars. */
   def applyAll(df0: DataFrame, meta: Meta, vars: Seq[String],
                order: Seq[String], part: Seq[String],
                sampleCol: Option[String] = None): DataFrame = {
-    var df = vars.foldLeft(df0)((d, v) => applyVar(d, meta, v, order, part, sampleCol))
+    // FILTERS first, in the reference's call_qaqc order (qaqc.py:19-20):
+    // each var apply_butter_filt or apply_med_filt changes keeps a
+    // `{var}_unfiltered` copy, then every apply_butter_filt runs in ONE
+    // whole-series pass; the median filters run with each var's trims
+    val filters = vars.flatMap(v => butterSos(meta, v).map(v -> _))
+    require(filters.isEmpty || part.isEmpty,
+      "config-keyed Butterworth filtering is wired for whole-series" +
+        " inputs; filter grouped data with Spectra.filterColumns and a group")
+    val copied = vars.filter(v => (filters.exists(_._1 == v) || meta.int(s"${v}_med_filt")
+        .isDefined) && !df0.columns.contains(s"${v}_unfiltered"))
+      .foldLeft(df0)((d, v) => d.withColumn(s"${v}_unfiltered", col(v)))
+    var df = vars.zipWithIndex.foldLeft(Spectra.filterColumns(copied, None, order, filters)) {
+      case (d, (v, n)) =>
+        // a {v}_std filtered after v is read as it was before its filter,
+        // as when each var's filter ran just before its own trims
+        val std = s"${v}_std"
+        trimVar(d, meta, v, if (vars.indexOf(std) > n && filters.exists(_._1 == std))
+          s"${std}_unfiltered" else std, order, part, sampleCol)
+    }
     for (v <- vars)
       meta.str(s"${v}_mask_expr").foreach(e => df = MaskExpr.trimMaskExpr(df, v, e))
     for (v <- vars)

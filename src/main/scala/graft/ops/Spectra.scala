@@ -4,8 +4,9 @@ import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 import graft.kernels.{Butterworth, Spectral}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,9 +29,9 @@ import org.apache.spark.sql.functions._
  * Scale: burst groups are small (≤4096 samples × few vars), so per-run
  * state is bounded; skew is impossible by construction (equal-size bursts).
  *
- * The whole-series filter ([[filterColumnWholeSeries]]) is no per-group
- * fan-out: it is one ordered [[Sweep]] in which each partition reads its
- * overlap-save margins from its neighbours.
+ * The in-place filter ([[filterColumns]]) filters a step's columns in one
+ * pass: per group over [[perGroup]]'s runs, over a whole series as one
+ * ordered [[Sweep]] reading its overlap-save margins from its neighbours.
  */
 object Spectra {
 
@@ -51,20 +52,26 @@ object Spectra {
     * AQE must honor. */
   private[graft] def perGroup[T <: Product : ClassTag, R <: Product : TypeTag](ds: Dataset[T])(
       f: (Long, Array[T]) => Iterator[R]): Dataset[R] = {
-    val n = ds.sparkSession.sparkContext.defaultParallelism
-    val runs =
-      if (Sweep.laidOut(ds, Sweep.Layout(Seq("_1"), Seq("_1", "_2")), n)) ds
-      else ds.repartition(n, col("_1"), lit(0)).sortWithinPartitions("_1", "_2")
     def keyOf(t: T) = t.productElement(0).asInstanceOf[Long]
-    runs.mapPartitions { it =>
-      val b = it.buffered
-      Iterator.continually(b).takeWhile(_.hasNext).flatMap { _ =>
-        val k = keyOf(b.head)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[T]
-        while (b.hasNext && keyOf(b.head) == k) buf += b.next()
-        f(k, buf.toArray)
-      }
-    }(Encoders.product[R])
+    byGroup(ds, "_1", Seq("_2")).mapPartitions(it =>
+      runs(it)(keyOf).flatMap(run => f(keyOf(run.head), run)))(Encoders.product[R])
+  }
+
+  /** [[perGroup]]'s layout of `ds`, runs of `group` in `order`. */
+  private def byGroup[T](ds: Dataset[T], group: String, order: Seq[String]): Dataset[T] = {
+    val n = ds.sparkSession.sparkContext.defaultParallelism
+    val sort = group +: order
+    if (Sweep.laidOut(ds, Sweep.Layout(Seq(group), sort), n)) ds
+    else ds.repartition(n, col(group), lit(0)).sortWithinPartitions(sort.map(col): _*)
+  }
+
+  /** The contiguous runs of equal `key` in `it`, in order. */
+  private def runs[A: ClassTag](it: Iterator[A])(key: A => Any): Iterator[Array[A]] = {
+    val b = it.buffered
+    Iterator.continually(b).takeWhile(_.hasNext).map { _ =>
+      val k = key(b.head)
+      Iterator.continually(b).takeWhile(b => b.hasNext && key(b.head) == k).map(_.next()).toArray
+    }
   }
 
   /** The kernels' input: (group, sample) as longs, then each value (one for
@@ -202,81 +209,104 @@ object Spectra {
 
   final case class FiltRow(series: Long, sample: Long, value_filt: Double)
 
+  /** The whole-series filter's overlap-save segment length. */
+  private val Segment = 65536
+
   /** Whole-series zero-phase Butterworth filtering in `segLen`-sample
     * overlap-save segments, long format: `sample` is the global position
-    * ([[Index.withGlobalPosition]]), `series` its segment (`sample div
-    * segLen`) and `value_filt` the filtered value — the filter of
-    * [[filterColumnWholeSeries]] in (orderCols) order, whose ranged output
-    * the position sweep takes as it is: one range exchange. */
+    * in (orderCols) order, which the filter's sweep writes from its row
+    * counts, `series` its segment and `value_filt` the filtered value. */
   def filtfiltWholeSeries(df: DataFrame, orderCols: Seq[String], valueCol: String,
                           sos: Array[Butterworth.Sos],
-                          segLen: Int = 65536): Dataset[FiltRow] = {
-    val filtered = filterColumnWholeSeries(
-      df.select((orderCols.map(col) :+ col(valueCol)): _*), orderCols, valueCol, sos, segLen)
-    Index.withGlobalPosition(filtered, orderCols, "__pos")
+                          segLen: Int = Segment): Dataset[FiltRow] =
+    wholeSeries(df.select((orderCols.map(col) :+ col(valueCol)): _*), orderCols,
+        Seq(valueCol -> sos), segLen, Some("__pos"))
       .select(expr(s"__pos div $segLen").as("series"), col("__pos").as("sample"),
         col(valueCol).as("value_filt"))
       .as(Encoders.product[FiltRow])
-  }
 
-  /** Replace `valueCol` with its whole-series zero-phase filtered values
-    * IN PLACE on the full frame — the shared in-place filter every
-    * config-keyed filter (qaqc butter filters, filter_vel, filtered water
-    * level) rides. Bit-equal to [[Butterworth.filtfiltSegmented]] with
-    * `segLen`-sample segments over the series in (orderCols) order, which
-    * must be a total order. The value column becomes a nullable DOUBLE;
-    * nulls go in as NaN.
-    *
-    * Overlap-save filtfilt (SURVEY §7.5 risk 2) as one [[Sweep]]: one range
-    * exchange and nothing else, and no task ever holds the series. Each
-    * partition's summary is its row count, so partition `p` knows its
-    * positions [at(p), at(p + 1)) and the span [lo, hi) its segments read:
-    * each segment with [[Butterworth.marginFor]] samples of context on
-    * either side, cut at the series ends, as `filtfiltSegmented` windows
-    * it. The pass reads the span from its own and its neighbours' rows
-    * ([[Sweep.rowsAt]]), runs filtfilt once per segment and rewrites its
-    * own values. */
+  /** [[filterColumns]] of one column over the whole series. */
   def filterColumnWholeSeries(df: DataFrame, orderCols: Seq[String], valueCol: String,
                               sos: Array[Butterworth.Sos],
-                              segLen: Int = 65536): DataFrame = {
+                              segLen: Int = Segment): DataFrame =
+    wholeSeries(df, orderCols, Seq(valueCol -> sos), segLen, None)
+
+  /** Replace each `filters` column IN PLACE with its zero-phase Butterworth
+    * filtered values, each through its own `sos`, all in one pass: the
+    * filter every config-keyed filter (qaqc butter filters, filter_vel,
+    * filtered water level) rides (stglib/core/filter.py:60-275). Each column
+    * becomes a DOUBLE (nullable over a whole series); nulls go in as NaN.
+    * With no `group`, the series in (orderCols) order, a total order, is
+    * filtered whole ([[wholeSeries]]); with one, each run of equal `group`
+    * over [[perGroup]]'s layout is filtered ([[Butterworth.filtfilt]]) in
+    * (orderCols) order and written back into its own rows. */
+  def filterColumns(df: DataFrame, group: Option[String], orderCols: Seq[String],
+                    filters: Seq[(String, Array[Butterworth.Sos])]): DataFrame =
+    if (filters.isEmpty) df
+    else group.fold(wholeSeries(df, orderCols, filters, Segment, None)) { g =>
+      val in = filters.foldLeft(df)((d, f) => d.withColumn(f._1, col(f._1).cast("double")))
+      val (k, os) = (in.columns.indexOf(g), filters.map(f => in.columns.indexOf(f._1)))
+      byGroup(in, g, orderCols).mapPartitions(runs(_)(_.get(k)).flatMap { run =>
+        val ys = filters.zip(os).map { case ((_, sos), o) => Butterworth.filtfilt(sos,
+          run.map(r => if (r.isNullAt(o)) Double.NaN else r.getDouble(o))) }
+        run.indices.iterator.map(i => Row.fromSeq(
+          os.indices.foldLeft(run(i).toSeq)((vs, j) => vs.updated(os(j), ys(j)(i)))))
+      })(Encoders.row(in.schema))
+    }
+
+  /** [[filterColumns]] over the whole series, each column bit-equal to its
+    * own [[Butterworth.filtfiltSegmented]] with `segLen`-sample segments,
+    * also writing the global position to `position` if given. Overlap-save
+    * filtfilt (SURVEY §7.5 risk 2) as one [[Sweep]]: one range exchange, and
+    * no task ever holds the series. Each partition's summary is its row
+    * count, so partition `p` knows its positions [at(p), at(p + 1)) and the
+    * span [lo, hi) its segments read with the widest
+    * [[Butterworth.marginFor]] of context, cut at the series ends. The pass
+    * reads the span from its own and its neighbours' rows once, and filters
+    * each column per segment in the window its own margin gives. */
+  private def wholeSeries(df: DataFrame, orderCols: Seq[String],
+                          filters: Seq[(String, Array[Butterworth.Sos])], segLen: Int,
+                          position: Option[String]): DataFrame = {
     require(segLen > 0, s"segLen $segLen must be positive")
-    val m = Butterworth.marginFor(sos)
+    val ms = filters.map(f => Butterworth.marginFor(f._2))
     // the prefix counts and the span p's segments read (none if p is empty)
     def span(counts: Array[Long], p: Int): (Array[Long], Long, Long) = {
       val at = counts.scanLeft(0L)(_ + _)
       if (at(p) == at(p + 1)) (at, 0L, 0L)
-      else (at, math.max(0L, at(p) / segLen * segLen - m),
-        math.min(at.last, ((at(p + 1) - 1) / segLen + 1) * segLen + m))
+      else (at, math.max(0L, at(p) / segLen * segLen - ms.max),
+        math.min(at.last, ((at(p + 1) - 1) / segLen + 1) * segLen + ms.max))
     }
-    Index.sweepColumn(df, orderCols, valueCol, col(valueCol).cast("double"),
-        nullable = true)(_ => (it: Iterator[InternalRow]) => it.size.toLong)(
+    Index.sweepColumns(df, orderCols, filters.map(f => f._1 -> col(f._1).cast("double")) ++
+        position.map(_ -> lit(0L)), nullable = true)(
+        _ => (it: Iterator[InternalRow]) => it.size.toLong)(
         (p, counts) => { val (at, lo, hi) = span(counts, p); Sweep.holding(at, lo, hi) }) {
-        (p, counts, o, read) =>
+        (p, counts, os, read) =>
       val (at, lo, hi) = span(counts, p)
       val (a, b) = (at(p), at(p + 1))
-      val y = new Array[Double]((b - a).toInt)
-      val x = Sweep.rowsAt(at, lo, hi, read)
-        .map(r => if (r.isNullAt(o)) Double.NaN else r.getDouble(o)).toArray
-      var s = if (a < b) a / segLen * segLen else b
-      while (s < b) {
-        val (c0, c1) = (math.max(0L, s - m), math.min(at.last, s + segLen + m))
-        val f = Butterworth.filtfilt(sos,
-          java.util.Arrays.copyOfRange(x, (c0 - lo).toInt, (c1 - lo).toInt))
-        val (from, until) = (math.max(s, a), math.min(s + segLen, b))
-        System.arraycopy(f, (from - c0).toInt, y, (from - a).toInt, (until - from).toInt)
-        s += segLen
+      val xs = filters.map(_ => new Array[Double]((hi - lo).toInt))
+      for ((r, i) <- Sweep.rowsAt(at, lo, hi, read).zipWithIndex; j <- xs.indices)
+        xs(j)(i) = if (r.isNullAt(os(j))) Double.NaN else r.getDouble(os(j))
+      val ys = filters.indices.map { j =>
+        val y = new Array[Double]((b - a).toInt)
+        var s = if (a < b) a / segLen * segLen else b
+        while (s < b) {
+          val (c0, c1) = (math.max(0L, s - ms(j)), math.min(at.last, s + segLen + ms(j)))
+          val f = Butterworth.filtfilt(filters(j)._2,
+            java.util.Arrays.copyOfRange(xs(j), (c0 - lo).toInt, (c1 - lo).toInt))
+          val (from, until) = (math.max(s, a), math.min(s + segLen, b))
+          System.arraycopy(f, (from - c0).toInt, y, (from - a).toInt, (until - from).toInt)
+          s += segLen
+        }
+        y
       }
+      val v = new GenericInternalRow(os.length)
       var i = -1
-      _ => { i += 1; y(i) }
+      _ => {
+        i += 1
+        ys.indices.foreach(j => v.setDouble(j, ys(j)(i)))
+        position.foreach(_ => v.setLong(ys.length, a + i))
+        v
+      }
     }._1
   }
-
-  /** Zero-phase Butterworth filtering per series/burst/bin group
-    * (apply_butter_filt, stglib/core/filter.py:60-153). */
-  def filtfiltPerGroup(df: DataFrame, groupCol: String, sampleCol: String,
-                       valueCol: String, sos: Array[Butterworth.Sos]): Dataset[FiltRow] =
-    perGroup(kernelInput[Scalar](df, groupCol, sampleCol, valueCol)) { (k, rows) =>
-      val y = Butterworth.filtfilt(sos, rows.map(_._3))
-      rows.indices.iterator.map(i => FiltRow(k, rows(i)._2, y(i)))
-    }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.StructType
 /**
  * One ordered pass over a whole series without a single-partition window
  * (SURVEY §7.5 risk 3): the scaffold under the as-of family ([[Align]]),
- * the positional ops ([[Index]]), the whole-series filter ([[Spectra]]) and
- * the burst cut ([[Burst]]).
+ * the positional ops ([[Index]]), the whole-series in-place filter of a
+ * step's columns ([[Spectra.filterColumns]]) and the burst cut ([[Burst]]).
  *
  *  1. `df` is range partitioned on `in.range` into `width` partitions and
  *     sorted within them on `in.sort`, unless so laid out already, as wide

@@ -41,8 +41,6 @@ object WaveQueries {
     graft.ops.Burst.fromContinuous(events(s, dir), Seq("ts", "event_id"), Nil, n,
       "burst", "sample")
 
-  /** Shared synthetic PUV bursts: 8 s wave toward 30 deg (trig convention)
-    * with linear-theory-consistent amplitudes. */
   /** EXACT period-8 sine table for the monochromatic 0.125-cycle/sample
     * fixtures — engine sin() (java Math.sin vs DuckDB's C sin) differs by
     * 1 ulp on some arguments, which walked a burst-mean depth across a
@@ -124,6 +122,8 @@ object WaveQueries {
       sin10Vals.map(_ * 0.3 * aU))
   }
 
+  /** Shared synthetic PUV bursts: 8 s wave toward 30 deg (trig convention)
+    * with linear-theory-consistent amplitudes. */
   private def puvBursts(s: org.apache.spark.sql.SparkSession, dir: String) = {
     // sensor noise must be DECORRELATED across p/u/v: with identical noise
     // the cross-spectral matrix is rank-1 (perfectly coherent) and the

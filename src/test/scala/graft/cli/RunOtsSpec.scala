@@ -1328,6 +1328,39 @@ class RunOtsSpec extends AnyFunSuite with SharedSpark {
       Seq("U")).columns.sameElements(df.columns))
   }
 
+  test("velFilter: burst Butterworth along the sample axis, several components") {
+    import spark.implicits._
+    def raw(b: Int, i: Int, k: Int): Double =
+      math.sin(2 * math.Pi * 0.01 * (k + 1) * i) + 0.5 * math.cos(2 * math.Pi * 0.4 * i) + b
+    // 3 bursts x 300 samples at 2 Hz, shuffled: each burst filters alone,
+    // in sample order
+    val rows = new scala.util.Random(11).shuffle(
+      for (b <- 0 until 3; i <- 0 until 300) yield (
+        new java.sql.Timestamp(1700000000000L + b * 3600000L), i,
+        raw(b, i, 0), raw(b, i, 1), raw(b, i, 2), s"b$b"))
+    val df = rows.toDF("time", "sample", "U", "V", "W1", "other")
+    val meta = graft.core.Meta(Map[String, Any](
+      "vel_filter_method" -> "lowpass", "vel_filter_cut" -> 10.0,
+      "sample_rate" -> 2.0))
+    val out = RunOts.velFilter(df, meta, Seq("U", "V", "W1", "W2"))
+    assert(out.columns.toSeq == Seq("time", "sample", "U", "V", "W1", "other",
+      "U_unfiltered", "V_unfiltered", "W1_unfiltered"))
+    val sos = graft.kernels.Butterworth.lowpass(4, 0.1, 2.0)
+    for (b <- 0 until 3) {
+      val got = out.filter(s"other = 'b$b'").orderBy("sample").collect()
+      assert(got.length == 300)
+      for ((v, k) <- Seq("U", "V", "W1").zipWithIndex) {
+        val want = graft.kernels.Butterworth.filtfilt(sos,
+          (0 until 300).map(i => raw(b, i, k)).toArray)
+        for (i <- 0 until 300) {
+          assert(java.lang.Double.doubleToLongBits(got(i).getAs[Double](v)) ==
+            java.lang.Double.doubleToLongBits(want(i)), s"burst $b $v sample $i")
+          assert(got(i).getAs[Double](s"${v}_unfiltered") == raw(b, i, k))
+        }
+      }
+    }
+  }
+
   test("REAL atmpres.cdf aux: clean applies the file's atmpres offset attr") {
     import spark.implicits._
     val ref = "/root/reference/examples/atmpres.cdf"

@@ -23,7 +23,7 @@ class QaqcFilterSpec extends AnyFunSuite with SharedSpark {
     val df = rows.toDF("t", "P_1")
     val meta = Meta(Map[String, Any](
       "sample_interval" -> 1.0, "P_1_lowpass_filt" -> 10.0))
-    val out = Qaqc.applyVar(df, meta, "P_1", order = Seq("t"), part = Nil)
+    val out = Qaqc.applyAll(df, meta, Seq("P_1"), order = Seq("t"), part = Nil)
       .orderBy("t").collect()
     // driver-side referee: the same SOS chain over the collected series
     val sos = Butterworth.lowpass(4, 1.0 / 10.0, 1.0)
@@ -69,12 +69,54 @@ class QaqcFilterSpec extends AnyFunSuite with SharedSpark {
     assert(maxDiff < 1e-12, s"max segment-boundary error $maxDiff")
   }
 
+  test("two filtered variables with different periods, each its own filtfiltSegmented") {
+    import spark.implicits._
+    val n = 3000
+    val x = Array.tabulate(n)(i => math.sin(2 * math.Pi * 0.004 * i) + 0.4 * math.sin(i * 0.9))
+    val y = Array.tabulate(n)(i => math.cos(2 * math.Pi * 0.002 * i) + 0.3 * math.cos(i * 1.3))
+    val df = new scala.util.Random(7).shuffle((0 until n).toVector)
+      .map(i => (i.toLong, x(i), y(i))).toDF("t", "x", "y")
+    val meta = Meta(Map[String, Any]("sample_interval" -> 1.0,
+      "x_lowpass_filt" -> 10.0, "y_lowpass_filt" -> 60.0))
+    val out = Qaqc.applyAll(df, meta, Seq("x", "y"), order = Seq("t"), part = Nil)
+    assert(out.columns.toSeq == Seq("t", "x", "y", "x_unfiltered", "y_unfiltered"))
+    val rows = out.orderBy("t").collect()
+    for ((v, raw, period) <- Seq(("x", x, 10.0), ("y", y, 60.0))) {
+      val want = Butterworth.filtfiltSegmented(
+        Butterworth.lowpass(4, 1.0 / period, 1.0), raw, 65536)
+      for (i <- 0 until n) {
+        assert(java.lang.Double.doubleToLongBits(rows(i).getAs[Double](v)) ==
+          java.lang.Double.doubleToLongBits(want(i)), s"$v row $i")
+        assert(rows(i).getAs[Double](s"${v}_unfiltered") == raw(i))
+      }
+    }
+  }
+
+  test("a {v}_std filtered after v is read by v's std trim as it was before its filter") {
+    import spark.implicits._
+    // x_std alternates 0.05 / 0.5 around x = 1: unfiltered, std_ratio 0.2
+    // nulls every other x; lowpassed to ~0.28 it would null them all
+    val n = 400
+    val df = (0 until n).map(i => (i.toLong, 1.0, if (i % 2 == 0) 0.05 else 0.5))
+      .toDF("t", "x", "x_std")
+    val meta = Meta(Map[String, Any]("sample_interval" -> 1.0,
+      "x_std_ratio" -> 0.2, "x_std_lowpass_filt" -> 10.0))
+    val out = Qaqc.applyAll(df, meta, Seq("x", "x_std"), order = Seq("t"), part = Nil)
+    assert(out.columns.toSeq == Seq("t", "x", "x_std", "x_std_unfiltered"))
+    val rows = out.orderBy("t").collect()
+    assert(rows.indices.forall(i =>
+      rows(i).isNullAt(1) == (i % 2 == 1) && (i % 2 == 1 || rows(i).getDouble(1) == 1.0)))
+    val want = Butterworth.filtfiltSegmented(Butterworth.lowpass(4, 0.1, 1.0),
+      Array.tabulate(n)(i => if (i % 2 == 0) 0.05 else 0.5), 65536)
+    assert(rows.map(_.getDouble(2)).toSeq == want.toSeq)
+  }
+
   test("{var}_med_filt smooths with scipy's zero-padded median") {
     import spark.implicits._
     val vals = Seq(1.0, 9.0, 2.0, 3.0, 8.0, 4.0)
     val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("t", "x")
     val meta = Meta(Map[String, Any]("x_med_filt" -> 3))
-    val out = Qaqc.applyVar(df, meta, "x", order = Seq("t"), part = Nil)
+    val out = Qaqc.applyAll(df, meta, Seq("x"), order = Seq("t"), part = Nil)
       .orderBy("t").collect().map(_.getAs[Double]("x"))
     // scipy.signal.medfilt([1,9,2,3,8,4], 3) = [1,2,3,3,4,4]
     // (edges padded with zeros: med(0,1,9)=1, med(8,4,0)=4)
@@ -85,13 +127,13 @@ class QaqcFilterSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val df = series(16).toDF("t", "x")
     val even = intercept[IllegalArgumentException] {
-      Qaqc.applyVar(df, Meta(Map[String, Any]("x_med_filt" -> 4)),
-        "x", Seq("t"), Nil)
+      Qaqc.applyAll(df, Meta(Map[String, Any]("x_med_filt" -> 4)),
+        Seq("x"), Seq("t"), Nil)
     }
     assert(even.getMessage.contains("odd"))
     val noSr = intercept[IllegalArgumentException] {
-      Qaqc.applyVar(df, Meta(Map[String, Any]("x_lowpass_filt" -> 10.0)),
-        "x", Seq("t"), Nil)
+      Qaqc.applyAll(df, Meta(Map[String, Any]("x_lowpass_filt" -> 10.0)),
+        Seq("x"), Seq("t"), Nil)
     }
     assert(noSr.getMessage.contains("sample_rate"))
   }
