@@ -34,10 +34,9 @@ class ChainGoldenSpec extends AnyFunSuite with SharedSpark {
   private def fingerprint(dir: Path, name: String): ObjectNode = {
     val product = dir.resolve(name)
     require(Files.isDirectory(product), s"product $product is not a parquet directory")
-    val part = Files.walk(product).iterator.asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val part = product.toFile.listFiles.find(_.getName.endsWith(".parquet")).get
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new HPath(part.toUri), spark.sparkContext.hadoopConfiguration))
+      new HPath(part.toURI), spark.sparkContext.hadoopConfiguration))
     val schema = try DataType.fromJson(reader.getFooter.getFileMetaData
         .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
       finally reader.close()
@@ -64,10 +63,9 @@ class ChainGoldenSpec extends AnyFunSuite with SharedSpark {
       val dir = Files.createDirectories(root.resolve(c.label.replace('/', '_')))
       def p(n: String) = dir.resolve(n).toString
       c.gen(spark, 1.0, p)
-      val inputs = Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSet
+      val inputs = dir.toFile.list.toSet
       c.run(spark, p)
-      Files.list(dir).iterator.asScala.map(_.getFileName.toString)
-        .filterNot(inputs).toSeq.sorted
+      (dir.toFile.list.toSet -- inputs).toSeq.sorted
         .foreach(n => actual.set[ObjectNode](s"${c.label}/$n", fingerprint(dir, n)))
     } finally {
       def rm(f: java.io.File): Unit = {
