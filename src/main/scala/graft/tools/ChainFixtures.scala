@@ -236,6 +236,20 @@ object ChainFixtures {
         (lit(21.3) + (col("id") % 11) * 0.01).as("temp_°c"))
       .write.mode("overwrite").parquet(p("exoraw"))
 
+  /** exo with turbidity cycling through values exactly at and just beyond
+    * each of `Turb_min` 25 and `Turb_max` 55, so an off-by-one in either
+    * trim changes the product. */
+  private def genExoEdges(spark: SparkSession, m: Double, p: String => String): Unit =
+    rng(spark, n(20000L, m)).select(
+        expr(s"timestamp_micros(${T0}L + id * 60000000)").as("time"),
+        (lit(12.0) + (col("id") % 29) * 0.01).as("press_dbar"),
+        element_at(array(Seq(24.99, 25.0, 40.0, 55.0, 55.01).map(lit): _*),
+          (col("id") % 5 + 1).cast("int")).as("turbidity_ntu"),
+        lit(48012.2).as("spcond_µs_per_cm"),
+        lit(30.1).as("sal_psu"),
+        (lit(21.3) + (col("id") % 11) * 0.01).as("temp_°c"))
+      .write.mode("overwrite").parquet(p("exoraw"))
+
   private def genHobo(spark: SparkSession, m: Double, p: String => String): Unit =
     rng(spark, n(500000L, m)).select(
         expr(s"timestamp_micros(${T0}L + id * 1000000)").as("time"),
@@ -387,6 +401,10 @@ object ChainFixtures {
         Meta(Map[String, Any]("atmpres" -> 10.0, "Turb_max" -> 60.0,
           "Turb_ssc_calibration" -> Seq(2.0, 1.0))),
         p("exoraw"), p("exoclean"))),
+    ChainCase("exo/clean_trim_edges", genExoEdges, "exoraw", (s, p) =>
+      RunOts.runStep(s, "exo", "clean",
+        Meta(Map[String, Any]("atmpres" -> 10.0, "Turb_min" -> 25.0, "Turb_max" -> 55.0)),
+        p("exoraw"), p("exoedgeclean"))),
     ChainCase("hobo/clean", genHobo, "hoboraw", (s, p) =>
       RunOts.runStep(s, "hobo", "clean",
         Meta(Map[String, Any]("atmpres" -> 10.0, "NAVD88_ref" -> -1.25,
