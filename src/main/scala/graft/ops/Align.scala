@@ -174,7 +174,7 @@ object Align {
           project(in)
         }
       }
-    }._1
+    }
   }
 
   /** As-of nearest: for each left row, the single right row minimizing

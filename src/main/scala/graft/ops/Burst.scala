@@ -71,7 +71,7 @@ object Burst {
           row.setLong(0, pos / nsamps); row.setLong(1, pos % nsamps)
           project(joined(r, row))
         }
-      }._1
+      }
     } else {
       val w = Window.partitionBy(part.map(col): _*).orderBy(order.map(col): _*)
       df.withColumn("__rn", row_number().over(w) - 1)

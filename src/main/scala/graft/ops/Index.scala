@@ -30,7 +30,11 @@ object Index {
     * plan at 256 partitions ran 2.4× faster (SCALING.md, round 20, same
     * session). ~32 MB of estimated input per partition, capped at 4096;
     * plans whose stats are the unknown-size default (≥ 2^50) fall back to
-    * the session width rather than exploding the exchange. */
+    * the session width rather than exploding the exchange. The width is
+    * fixed when the sweep is built, in the `repartitionByRange` its node's
+    * child carries (REPARTITION_BY_NUM, which AQE never coalesces); a
+    * sweep's output reports its input's estimate, so sweeps chained on one
+    * series size alike. */
   private[graft] def scaledPartitions(df: DataFrame): Int = {
     val base = df.sparkSession.sessionState.conf.numShufflePartitions
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -50,7 +54,7 @@ object Index {
       summarize: Seq[Int] => Iterator[InternalRow] => S)(
       reads: (Int, Array[S]) => Seq[Int])(
       values: (Int, Array[S], Seq[Int], Int => Iterator[InternalRow]) => InternalRow => InternalRow)
-      : (DataFrame, Array[S]) = {
+      : DataFrame = {
     val in = outs.foldLeft(df) { case (d, (c, seed)) => d.withColumn(c, seed) }
     val os = outs.map(o => in.columns.indexOf(o._1))
     val schema = StructType(os.foldLeft(in.schema.fields)((fs, o) =>
@@ -79,7 +83,7 @@ object Index {
         _ => (it: Iterator[InternalRow]) => it.size.toLong)((_, _) => Nil) { (p, counts, _, _) =>
       var pos = counts.take(p).sum - 1
       _ => { pos += 1; InternalRow(pos) }
-    }._1
+    }
 
   /** Append a running total (inclusive prefix sum) of an integral column in
     * (orderCols) order: exactly SQL's `sum(v) OVER (ORDER BY orderCols ROWS
@@ -98,7 +102,7 @@ object Index {
         (_, _) => Nil) { case (p, sums, Seq(o), _) =>
       var acc = sums.take(p).foldLeft(null: java.lang.Long)(plus)
       r => { acc = plus(acc, valueAt(r, o)); InternalRow(acc) }
-    }._1
+    }
   }
 
   /** Append the previous row's value of `valueCol` (BIGINT) in (orderCols)
@@ -114,8 +118,9 @@ object Index {
     * assignment yields the same output multiset — the series-diff call
     * sites), the summary also counts tied adjacent keys (equal keys are
     * co-partitioned by the range exchange and adjacent after the sort, so
-    * any global duplicate shows up as an adjacent pair) and the call fails
-    * loudly when orderCols is not unique — include a tie-breaking key. */
+    * any global duplicate shows up as an adjacent pair) and the first
+    * action fails loudly on the driver when orderCols is not unique —
+    * include a tie-breaking key. */
   def withOrderedLag(df: DataFrame, orderCols: Seq[String], valueCol: String,
                      outCol: String): DataFrame = {
     val tiesHarmless = orderCols.contains(valueCol) &&
@@ -127,7 +132,7 @@ object Index {
     val keyOrder = keyRefs.indices.map(i =>
       SortOrder(keyRefs(i).copy(ordinal = i), Ascending))
     // per partition: (rows, last value, rows tied with their predecessor)
-    val (out, ends) = sweepColumns(df, orderCols, Seq(outCol -> col(valueCol).cast("long")),
+    sweepColumns(df, orderCols, Seq(outCol -> col(valueCol).cast("long")),
         nullable = true)({ case Seq(o) => (it: Iterator[InternalRow]) =>
       var n, tied = 0L
       var last: java.lang.Long = null
@@ -144,18 +149,20 @@ object Index {
         n += 1
       }
       (n, last, tied)
-    })((_, _) => Nil) { case (p, ends, Seq(o), _) =>
+    })({ (p, ends) =>
+      // the pass reads no other partition; partition 0's call checks the ties
+      val nTied = if (p == 0) ends.map(_._3).sum else 0L
+      if (nTied > 0) throw new IllegalArgumentException(
+        s"withOrderedLag: orderCols ${orderCols.mkString("(", ", ", ")")} is not " +
+          s"a total order — $nTied row(s) tie with their predecessor; lag among " +
+          "tied keys would be nondeterministic across runs. Add a unique " +
+          "tie-breaking key to orderCols (or drop payload columns if the " +
+          "lagged value is itself the order key).")
+      Nil
+    }) { case (p, ends, Seq(o), _) =>
       var prev = ends.take(p).reverseIterator
         .collectFirst { case (n, l, _) if n > 0 => l }.orNull
       r => { val lagged = prev; prev = valueAt(r, o); InternalRow(lagged) }
     }
-    val nTied = ends.map(_._3).sum
-    if (nTied > 0) throw new IllegalArgumentException(
-      s"withOrderedLag: orderCols ${orderCols.mkString("(", ", ", ")")} is not " +
-        s"a total order — $nTied row(s) tie with their predecessor; lag among " +
-        "tied keys would be nondeterministic across runs. Add a unique " +
-        "tie-breaking key to orderCols (or drop payload columns if the " +
-        "lagged value is itself the order key).")
-    out
   }
 }

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
  *
  * Distribution pattern: `mapPartitions` over contiguous runs of the burst
  * ([[perGroup]]), NOT `groupByKey.mapGroups`. [[Burst.fromContinuous]]'s
- * bursts arrive so laid out (and run as they are if cut as wide as the
- * cluster); other input gets `repartition(n, burst) + sortWithinPartitions`.
+ * bursts arrive so laid out, as the sweep's planned exec declares (and run
+ * as they are if cut as wide as the cluster); other input gets
+ * `repartition(n, burst) + sortWithinPartitions`.
  * The groupByKey exchange is subject to AQE partition coalescing, which sizes
  * partitions by shuffle BYTES — a few MB of burst rows coalesce to one or
  * two partitions and the kernel work (the actual cost, invisible to AQE)
@@ -32,6 +33,7 @@ import org.apache.spark.sql.functions._
  * The in-place filter ([[filterColumns]]) filters a step's columns in one
  * pass: per group over [[perGroup]]'s runs, over a whole series as one
  * ordered [[Sweep]] reading its overlap-save margins from its neighbours.
+ * Both are lazy: building either frame runs no Spark job.
  */
 object Spectra {
 
@@ -307,6 +309,6 @@ object Spectra {
         position.foreach(_ => v.setLong(ys.length, a + i))
         v
       }
-    }._1
+    }
   }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Parallelism guard for CPU-heavy per-row operators (pair joins, shingle
@@ -65,7 +68,7 @@ object Spread {
    * that drops a session's tracked entries deterministically.
    */
   def shared(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     registry.synchronized {
       // de-dup on the canonicalized plan — the same key CacheManager uses —
       // so re-running a query tracks (and later releases) one entry, not
@@ -78,17 +81,27 @@ object Spread {
     p
   }
 
+  /** `rows`, copied (a plan may reuse one row buffer) and persisted
+    * MEMORY_AND_DISK until [[release]] of `spark`: [[shared]] for the rows
+    * an exec node reads more than once (a sweep's ranged input). */
+  private[graft] def kept(spark: SparkSession, rows: RDD[InternalRow]): RDD[InternalRow] = {
+    val p = rows.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    registry.synchronized(keptRows += spark -> p)
+    p
+  }
+
   // strong refs are deliberate: CacheManager already pins the cached data
   // until unpersist, so the registry adds no reachability beyond what Spark
   // holds — it adds the handle needed to let go.
   private val registry = scala.collection.mutable.ArrayBuffer[DataFrame]()
+  private val keptRows = scala.collection.mutable.ArrayBuffer[(SparkSession, RDD[_])]()
 
-  /** Unpersist every [[shared]] output tracked for `spark` — the explicit
+  /** Unpersist every [[shared]] output and [[kept]] RDD tracked for `spark` — the explicit
     * query-completion hook for deterministic cache pressure (the r5 advice:
     * persisted shared plans otherwise live for the session under a 100 TB
     * working set). Only graft-tracked entries are dropped; user caches are
     * untouched. */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit =
+  def release(spark: SparkSession): Unit =
     // one lock for select+remove: a shared() registration racing a release
     // must never be dropped untracked (it would stay pinned with no handle)
     registry.synchronized {
@@ -97,11 +110,14 @@ object Spread {
         try df.unpersist(false) catch { case _: Throwable => () }
       }
       registry.filterInPlace(df => !(df.sparkSession eq spark))
+      keptRows.filter(_._1 eq spark).foreach(_._2.unpersist(false))
+      keptRows.filterInPlace(k => !(k._1 eq spark))
     }
 
-  /** Tracked-entry count for `spark` (lifecycle spec hook). */
-  private[graft] def trackedCount(spark: org.apache.spark.sql.SparkSession): Int =
-    registry.synchronized(registry.count(_.sparkSession eq spark))
+  /** Tracked-entry count for `spark`, [[kept]] rows included (lifecycle
+    * spec hook). */
+  private[graft] def trackedCount(spark: SparkSession): Int =
+    registry.synchronized(registry.count(_.sparkSession eq spark) + keptRows.count(_._1 eq spark))
 
   /**
    * Blocked cross join — the scale-safe form of `a.crossJoin(broadcast(b))`.

@@ -76,8 +76,9 @@ class BurstSpec extends AnyFunSuite with SharedSpark {
 
   /** The whole-series branch on `df` (order `t`) with `n`-sample bursts
     * against the row_number reference. The output is declared range
-    * partitioned on `burst`, so the group-by below plans no exchange: a
-    * burst split across partitions would show up as a short count. */
+    * partitioned on `burst`, so the group-by below plans no exchange beyond
+    * the cut's own: a burst split across partitions would show up as a
+    * short count. */
   private def checkDeclared(df: DataFrame, n: Int, at: String): Unit = {
     val got = Burst.fromContinuous(df, Seq("t"), Nil, n, "burst", "sample")
     val total = df.count()
@@ -87,7 +88,8 @@ class BurstSpec extends AnyFunSuite with SharedSpark {
       .filter(col("__rn") < total - total % n).drop("__rn")
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0, at)
     val perBurst = got.groupBy("burst").count()
-    assert(shuffles(perBurst.queryExecution.executedPlan).isEmpty, at)
+    assert(exchanges(perBurst.queryExecution.executedPlan) ==
+      exchanges(got.queryExecution.executedPlan), at)
     assert(perBurst.filter(col("count") =!= n).count() == 0, at)
     assert(perBurst.count() == total / n, at)
     Spread.release(spark)
@@ -97,6 +99,10 @@ class BurstSpec extends AnyFunSuite with SharedSpark {
     case a: AdaptiveSparkPlanExec => a.executedPlan
     case p => p
   }).collect { case e: ShuffleExchangeLike => e }
+
+  /** The exchanges in `plan`, as (origin, width). */
+  private def exchanges(plan: SparkPlan) =
+    shuffles(plan).map(e => (e.shuffleOrigin, e.outputPartitioning.numPartitions))
 
   test("whole series at widths 1/4/16, bursts longer than a partition's share") {
     // 1,000 shuffled rows: at width 16 a partition holds ~62 rows, so a
@@ -129,7 +135,9 @@ class BurstSpec extends AnyFunSuite with SharedSpark {
     val df = pressure
     val bursts = Burst.fromContinuous(df, Seq("t"), Nil, 256, "burst", "sample")
     val stats = Spectra.waveStatsFromPressure(bursts, "burst", "sample", "p", fs = 2.0, z = 0.5)
-    assert(shuffles(stats.queryExecution.executedPlan).isEmpty)
+    // the cut's own range exchange is the only one
+    assert(exchanges(stats.queryExecution.executedPlan) ==
+      exchanges(bursts.queryExecution.executedPlan))
     // the same rows with the layout forgotten take the exchange
     val plain = spark.createDataFrame(bursts.rdd, bursts.schema)
     val viaExchange = Spectra.waveStatsFromPressure(plain, "burst", "sample", "p", fs = 2.0, z = 0.5)
@@ -147,7 +155,8 @@ class BurstSpec extends AnyFunSuite with SharedSpark {
       val bursts = Burst.fromContinuous(pressure, Seq("t"), Nil, 256, "burst", "sample")
       assert(bursts.rdd.getNumPartitions == 2)
       val stats = Spectra.waveStatsFromPressure(bursts, "burst", "sample", "p", fs = 2.0, z = 0.5)
-      assert(shuffles(stats.queryExecution.executedPlan).map(e => (e.shuffleOrigin, e.numPartitions))
+      assert(exchanges(stats.queryExecution.executedPlan).diff(
+        exchanges(bursts.queryExecution.executedPlan))
         == Seq((REPARTITION_BY_NUM, spark.sparkContext.defaultParallelism)))
       assert(stats.count() == 8)
     }

@@ -2,10 +2,9 @@ package graft.ops
 
 import graft.SharedSpark
 import graft.kernels.Butterworth
-import org.apache.spark.{NarrowDependency, ShuffleDependency}
+import org.apache.spark.{NarrowDependency, OneToOneDependency, ShuffleDependency}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,10 +52,13 @@ class WholeSeriesFilterSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  /** Partition p's declared reads, from the sweep's narrow dependency. */
+  /** Partition p's declared reads, from the sweep's narrow dependency: the
+    * one in the result's lineage that is not one-to-one. */
   private def reads(out: DataFrame): Seq[Seq[Int]] = {
-    val rdd = out.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get
-    val dep = rdd.dependencies.head.asInstanceOf[NarrowDependency[_]]
+    def passes(rdd: RDD[_]): Option[(RDD[_], NarrowDependency[_])] =
+      rdd.dependencies.collectFirst { case d: NarrowDependency[_] if !d.isInstanceOf[OneToOneDependency[_]] =>
+        rdd -> d }.orElse(rdd.dependencies.iterator.map(d => passes(d.rdd)).collectFirst { case Some(p) => p })
+    val (rdd, dep) = passes(out.queryExecution.toRdd).get
     rdd.partitions.indices.map(dep.getParents)
   }
 

@@ -144,6 +144,13 @@ class AuditAllSpec extends AnyFunSuite with SharedSpark {
       confSets.mkString("\n"))
   }
 
+  test("no LogicalRDD in src/main: graft's own operators are planned nodes") {
+    // a LogicalRDD hands back rows a job already ran for, with a layout
+    // declared by hand; a sweep is a logical node the planner plans
+    val hits = sites("src/main/scala", "LogicalRDD".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("an unhinted equi-join is not flagged even when the planner " +
        "broadcasts it by size") {
     val data = spark.range(100)
