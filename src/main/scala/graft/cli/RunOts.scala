@@ -921,9 +921,11 @@ object RunOts {
     * series data filters whole-series. Every layout filters the whole set
     * in place in one pass (Spectra.filterColumns).
     * Configured filtering with no sample rate raises, like the
-    * reference's ValueError (filter.py:275-278). */
-  private[cli] def velFilter(df0: DataFrame, meta: Meta,
-                             vels: Seq[String]): DataFrame = {
+    * reference's ValueError (filter.py:275-278); so does a sample with a
+    * null `time` in `input`, which has no place in the series, burst or
+    * bin it would be filtered in. */
+  private[cli] def velFilter(df0: DataFrame, meta: Meta, vels: Seq[String],
+                             input: String): DataFrame = {
     import graft.kernels.Butterworth
     val method = meta.str("vel_filter_method").map(_.toLowerCase)
     if (method.isEmpty || !meta.has("vel_filter_cut")) return df0
@@ -956,8 +958,11 @@ object RunOts {
     val (group, order) = if (hasSample) (Some("time"), Seq("sample"))
       else if (hasBin) (Some("bin"), Seq("time")) else (None, Seq("time"))
     val present = vels.filter(df0.columns.contains)
+    // checked in the projection the filter's input runs anyway: no job
+    val timed = df0.withColumn("time",
+      coalesce(col("time"), raise_error(lit(s"velFilter: null `time` in $input"))))
     graft.ops.Spectra.filterColumns(
-      present.foldLeft(df0)((d, v) => d.withColumn(s"${v}_unfiltered", col(v))),
+      present.foldLeft(timed)((d, v) => d.withColumn(s"${v}_unfiltered", col(v))),
       group, order, present.map(_ -> sos))
   }
 
@@ -1432,13 +1437,13 @@ object RunOts {
     * trim_ast (brangeAST screened by the find_ast_qual_min threshold,
     * untrimmed copy kept). The per-var qaqc trim loop and drop_vars run in
     * the common clean tail (Qaqc.applyAll), as in the reference. */
-  private[cli] def sigChain(df0: DataFrame, meta: Meta): DataFrame = {
+  private[cli] def sigChain(df0: DataFrame, meta: Meta, input: String): DataFrame = {
     var df = df0
     for ((from, to) <- Seq("VelEast" -> "U", "VelNorth" -> "V",
                            "VelUp1" -> "W1", "VelUp2" -> "W2"))
       if (df.columns.contains(from)) df = df.withColumn(to, col(from))
     // sig/cdf2nc.py:69-71 ordering: filter_vel -> magvar_correct -> trim_vel
-    df = velFilter(df, meta, Seq("U", "V", "W1", "W2"))
+    df = velFilter(df, meta, Seq("U", "V", "W1", "W2"), input)
     df = magvarRotate(df, meta, "U", "V",
       Seq("Hdg_1215", "Heading", "heading").find(df.columns.contains))
     df = aqdTrimVel(df, meta, Seq("U", "V", "W1", "W2"))
@@ -2191,7 +2196,7 @@ object RunOts {
     // cdf2nc orderings), selected by instrument; Aquadopp/HR keys on the
     // header attrs as before
     instrument match {
-      case "sig" => df = sigChain(df, meta)
+      case "sig" => df = sigChain(df, meta, input)
       case "vec" => df = vecChain(df, meta)
       case "son" => df = sonChain(spark, df, meta)
       case "rdi" => df = rdiChain(df, meta)

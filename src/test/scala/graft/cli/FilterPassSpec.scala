@@ -86,7 +86,7 @@ class FilterPassSpec extends AnyFunSuite with SharedSpark {
   test("velFilter on the per-bin and burst layouts: one exchange, no join, at most 5 jobs") {
     withConf("spark.sql.shuffle.partitions" -> "4") {
       for ((layout, df) <- Seq("bins" -> bins, "bursts" -> bursts); k <- Seq(1, 4)) {
-        val (out, jobs, stages, _) = run(RunOts.velFilter(df, velMeta, vels.take(k)))
+        val (out, jobs, stages, _) = run(RunOts.velFilter(df, velMeta, vels.take(k), layout))
         val what = s"$layout, $k component(s)"
         assert(stages == 1, s"$what: $stages shuffle stages")
         assert(jobs <= 5, s"$what: $jobs jobs")
@@ -98,8 +98,8 @@ class FilterPassSpec extends AnyFunSuite with SharedSpark {
 
   test("the series velFilter and Qaqc.applyAll filter every column in one sweep") {
     withConf("spark.sql.shuffle.partitions" -> "4") {
-      val (_, oneJobs, _, one) = run(RunOts.velFilter(series, velMeta, Seq("U")))
-      val (_, fourJobs, _, four) = run(RunOts.velFilter(series, velMeta, vels))
+      val (_, oneJobs, _, one) = run(RunOts.velFilter(series, velMeta, Seq("U"), "series"))
+      val (_, fourJobs, _, four) = run(RunOts.velFilter(series, velMeta, vels, "series"))
       assert(one == 1 && four == 1, s"persisted frames: $one for U, $four for U, V, W1, W2")
       assert(fourJobs == oneJobs, s"jobs: $oneJobs for U, $fourJobs for U, V, W1, W2")
 
@@ -111,6 +111,19 @@ class FilterPassSpec extends AnyFunSuite with SharedSpark {
       assert(qOne == 1 && qTwo == 1, s"persisted frames: $qOne for U, $qTwo for U and V")
       assert(qTwoJobs == qOneJobs, s"jobs: $qOneJobs for U, $qTwoJobs for U and V")
     }
+  }
+
+  test("a null time under the velocity filter fails, naming `time` and the input") {
+    withConf("spark.sql.shuffle.partitions" -> "4") {
+      for ((layout, df) <- Seq("series" -> series, "bins" -> bins, "bursts" -> bursts)) {
+        val holed = df.withColumn("time", when(col("U") > 0.99, lit(null)).otherwise(col("time")))
+        val e = intercept[Exception](
+          RunOts.velFilter(holed, velMeta, vels, s"$layout.parquet").queryExecution.toRdd.count())
+        val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(messages.exists(_.contains(s"velFilter: null `time` in $layout.parquet")), layout)
+      }
+    }
+    Spread.release(spark)
   }
 
   test("filtfiltWholeSeries positions and filters in one sweep") {

@@ -1310,7 +1310,7 @@ class RunOtsSpec extends AnyFunSuite with SharedSpark {
     val meta = graft.core.Meta(Map[String, Any](
       "vel_filter_method" -> "lowpass", "vel_filter_cut" -> 10.0,
       "sample_interval" -> 1.0))
-    val out = RunOts.velFilter(df, meta, Seq("U"))
+    val out = RunOts.velFilter(df, meta, Seq("U"), "bins")
     val sos = graft.kernels.Butterworth.lowpass(4, 0.1, 1.0)
     for (b <- 0 until 2) {
       val got = out.filter(s"bin = $b").orderBy("time").collect()
@@ -1325,7 +1325,7 @@ class RunOtsSpec extends AnyFunSuite with SharedSpark {
     }
     // no config -> untouched (the reference's silent skip)
     assert(RunOts.velFilter(df, graft.core.Meta(Map.empty[String, Any]),
-      Seq("U")).columns.sameElements(df.columns))
+      Seq("U"), "bins").columns.sameElements(df.columns))
   }
 
   test("velFilter: burst Butterworth along the sample axis, several components") {
@@ -1342,7 +1342,7 @@ class RunOtsSpec extends AnyFunSuite with SharedSpark {
     val meta = graft.core.Meta(Map[String, Any](
       "vel_filter_method" -> "lowpass", "vel_filter_cut" -> 10.0,
       "sample_rate" -> 2.0))
-    val out = RunOts.velFilter(df, meta, Seq("U", "V", "W1", "W2"))
+    val out = RunOts.velFilter(df, meta, Seq("U", "V", "W1", "W2"), "bursts")
     assert(out.columns.toSeq == Seq("time", "sample", "U", "V", "W1", "other",
       "U_unfiltered", "V_unfiltered", "W1_unfiltered"))
     val sos = graft.kernels.Butterworth.lowpass(4, 0.1, 2.0)
