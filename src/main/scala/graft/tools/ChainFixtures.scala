@@ -296,6 +296,120 @@ object ChainFixtures {
           .as("sonar_image"))
       .write.mode("overwrite").parquet(p("sonavg"))
 
+  // ---- raw instrument text files --------------------------------------
+
+  /** Write `lines` to `path` as `charset` bytes, each line ended by `eol`,
+    * behind a UTF-8 byte-order mark when `bom` is set. The ingest fixtures
+    * are exact byte layouts (encodings, BOMs, line ends), so they are built
+    * on the driver; each holds a few rows per multiplier unit. */
+  private def writeText(path: String, lines: Seq[String], charset: String = "UTF-8",
+                        eol: String = "\n", bom: Boolean = false): Unit = {
+    val body = lines.map(_ + eol).mkString.getBytes(charset)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (if (bom) Array(0xEF, 0xBB, 0xBF).map(_.toByte) else Array.emptyByteArray) ++ body)
+  }
+
+  private def rows(m: Double)(line: Int => String): Seq[String] =
+    (0 until n(6L, m).toInt).map(line)
+
+  private def hms(i: Int): String = f"${i / 3600}%02d:${i / 60 % 60}%02d:${i % 60}%02d"
+
+  private def genMarotte(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("marotte.csv"), "MAROTTE HS title line, ignore" +: rows(m) { i =>
+      val row = f"2024-03-01 ${hms(i * 5)}, ${0.12 + i * 0.01}%.2f,184.$i,0.15,0.09," +
+        f"12.1,185.0,3.61,${18.4 + i * 0.1}%.1f"
+      if (i == 2) row + "\n" else row // a blank line between rows
+    }, eol = "\r\n")
+
+  private def toa5(title: String, names: String, m: Double, nan: Boolean): Seq[String] =
+    Seq(title, names, "\"TS\",\"RN\",\"m\",\"dB\"", "\"\",\"\",\"Smp\",\"Smp\"") ++
+      rows(m) { i =>
+        val amp = if (nan && i % 3 == 1) "\"NAN\"" else f"${60.0 + i * 0.4}%.1f"
+        f"\"2024-03-01 ${hms(3600 - i)}\",${10 + i}, ${4.512 + i * 0.001}%.3f ,$amp"
+      } :+ ""
+
+  private def genGlxText(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("glx.dat"), toa5("\"TOA5\",\"glx\",\"CR1000X\",\"12345\"",
+      "\"TIMESTAMP\",\"RECORD\",\"distance\",\"amplitude\"", m, nan = false))
+
+  private def genCampbell(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("met.dat"), toa5("\"TOA5\",\"stn\",\"CR1000\",\"1\",\"x\",\"y\",\"z\",\"Tbl\"",
+      "\"TIMESTAMP\",\"RECORD\",\"WindSpeed_avg\",\"Temp\"", m, nan = true), bom = true)
+
+  private def genMayfly(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("mayfly.csv"), (1 to 7).map(k => s"Mayfly preamble $k, Sampling Feature") ++
+      Seq("Date and Time in UTC,Temp,Turb,Batt") ++ rows(m) { i =>
+        val temp = if (i % 2 == 1) "-9999" else f"${18.5 + i * 0.1}%.1f"
+        f"2024-03-01 ${hms(i * 900)},$temp,${12.1 + i}%.1f,${if (i == 4) "-9999" else "4.1"}"
+      } ++ Seq("", "  "))
+
+  private def genTcm(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("tcm_CR.txt"), Seq("ISO 8601 Time,Speed (cm/s),Bearing (degrees)," +
+      "Velocity-N (cm/s),Velocity-E (cm/s)") ++ rows(m) { i =>
+        f"2024-03-01T00:00:${i}%02d.000,${12.5 + i * 0.1}%.1f,${184 + i}.0,-12.4,1.$i"
+      } :+ "")
+
+  private def genEco(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("eco.raw"), rows(m) { i =>
+      val t = s"05/01/24\t12:00:${f"$i%02d"}"
+      i % 4 match {
+        case 1 => s"$t\t700" // short: no counts column
+        case 2 => s"$t\t700\tbad\t456" // counts do not parse
+        case _ => s"  $t\t700\t${120 + i}\t456 "
+      }
+    } ++ Seq("", "mvs 1"))
+
+  private def genMicrocat(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("mc.asc"), Seq(
+      "* Sea-Bird SBE37 Data File:",
+      "* SBE37-SM V 2.6b  SERIAL NO. 1234  01 Mar 2024  00:00:00",
+      "* sample interval = 60 seconds", "*S>", "") ++ rows(m) { i =>
+        if (i == 3) " 18.7301, 4.23450" // short line
+        else if (i == 4) "S>"
+        else f" ${18.7301 + i * 0.0001}%.4f, 4.234${50 + i}, 29.918$i, 01 Mar 2024, 00:0$i:00"
+      } :+ "*END*", bom = true)
+
+  private def genTroll(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("troll.csv"), (1 to 5).map(k => s"Log Data: preamble line $k") ++
+      Seq("Date and Time (UTC),Temperature (C),Actual Conductivity (\u00b5S/cm)," +
+        "Pressure (PSI),Depth") ++ rows(m) { i =>
+        f"2024-03-01 00:0$i:00,${18.5 + i * 0.1}%.1f,${30123.0 + i}%.1f,14.7,${1.2 + i * 0.01}%.2f"
+      } :+ "", charset = "ISO-8859-1")
+
+  private def genTruBlue(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("tb.csv"), Seq("Transducer Model : TB255", "Transducer Serial : 998877",
+      "Scan Type : Normal", "Firmware Version : 1.0.4 (2023)", "",
+      "Notes : a keyword block of no fixed length",
+      "ID,Name,Address,Scan Date & Time,Elapsed Time,Pressure,Temperature") ++ rows(m) { i =>
+        if (i == 2) s"$i,TB,0,2024-03-01 00:20:00" // short line
+        else f"$i,TB,0,2024-03-01 00:${i * 10}%02d:00,${i * 600}.0,${10.13 + i * 0.01}%.2f,18.$i"
+      } :+ "")
+
+  private def genArgonautDat(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("arg.dat"), Seq("", "Year Month Day Hour Minute Second  Level   Flow VelX") ++
+      rows(m) { i =>
+        f" 2024  2  1  0 ${i * 10} 0   ${3.25 + i * 0.1}%.2f  ${12.0 + i}%.1f ${0.1 * i}%.1f"
+      } :+ "   ")
+
+  private def genTid(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("sg.tid"), rows(m) { i =>
+      f"    ${i + 1} 01/01/2024 ${hms(i * 360)}  ${14.503773800722 + i}%.12f  12.${i}"
+    } :+ "", charset = "US-ASCII")
+
+  private def genExoText(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("exo.csv"), (1 to 8).map(k => s"KOR export metadata line $k,,") ++
+      Seq("Date (MM/DD/YYYY),Time (HH:mm:ss),Time (Fract Sec),Temp \u00b0C," +
+        "SpCond \u00b5S/cm,Turbidity NTU") ++ rows(m) { i =>
+        f"1/15/2024,${i / 4}:${i % 4 * 15}%02d:00,0,${21.31 + 0.01 * i}%.2f,48012.2,${10.0 * i}%.1f"
+      } :+ "")
+
+  private def genHoboText(s: SparkSession, m: Double, p: String => String): Unit =
+    writeText(p("hobo.csv"), Seq("Plot Title: 10973214 \u00b0 logger",
+      "#,Date Time GMT-00:00,Abs Pres kPa,Temp \u00b0C") ++ rows(m) { i =>
+        f"${i + 1},01/15/24 ${if (i < 3) 12 else 1}%02d:${i * 15 % 60}%02d:00 ${if (i % 2 == 0) "AM" else "PM"}," +
+          f"${101.325 - i * 0.025}%.3f,${21.5 - i * 0.1}%.1f"
+      })
+
   // ---- step invocations ----------------------------------------------
 
   private def runRskClean(spark: SparkSession, p: String => String): Unit =
@@ -418,5 +532,31 @@ object ChainFixtures {
           "average_salinity" -> 30.0, "initial_instrument_height" -> 0.25,
           "latitude" -> 30.0, "P_1_lowpass_filt" -> 60.0,
           "T_28_lowpass_filt" -> 600.0)), p("hoboraw"), p("hobolpclean"))),
+  )
+
+  private def ingestCase(label: String, gen: (SparkSession, Double, String => String) => Unit,
+                         input: String, meta: Map[String, Any] = Map.empty): ChainCase =
+    ChainCase(s"ingest/$label", gen, input, (s, p) =>
+      RunOts.runStep(s, label.takeWhile(_ != '_'), "ingest", Meta(meta), p(input),
+        p(s"${label}raw")))
+
+  /** One `ingest` step per delimited-text instrument dialect, over a raw
+    * file holding the lines that decide its parse: sentinels, quoting,
+    * prompts, short and blank lines, BOMs and non-ASCII headers. Kept out of
+    * [[all]]: [[FuzzChains]] mutates parquet inputs, not raw text. */
+  val ingest: Seq[ChainCase] = Seq(
+    ingestCase("marotte", genMarotte, "marotte.csv"),
+    ingestCase("glx", genGlxText, "glx.dat"),
+    ingestCase("met_campbell", genCampbell, "met.dat"),
+    ingestCase("met_mayfly", genMayfly, "mayfly.csv"),
+    ingestCase("tcm", genTcm, "tcm_CR.txt"),
+    ingestCase("eco", genEco, "eco.raw"),
+    ingestCase("mc", genMicrocat, "mc.asc"),
+    ingestCase("troll", genTroll, "troll.csv", Map("skiprows" -> 5)),
+    ingestCase("tb", genTruBlue, "tb.csv"),
+    ingestCase("argonaut", genArgonautDat, "arg.dat"),
+    ingestCase("sg", genTid, "sg.tid"),
+    ingestCase("exo", genExoText, "exo.csv"),
+    ingestCase("hobo", genHoboText, "hobo.csv"),
   )
 }

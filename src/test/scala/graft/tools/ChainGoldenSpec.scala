@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions.{col, hex}
 import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden chain products: every [[ChainFixtures]] chain runs at ×1 and each
-  * product it writes must match its entry in the committed `CHAINS_FP.json`:
+/** Golden chain products: every [[ChainFixtures]] chain and raw-text ingest
+  * runs at ×1 and each product it writes must match its entry in the
+  * committed `CHAINS_FP.json`:
   * rows, schema DDL with nullability (as Spark wrote it into the parquet
   * footer), the order-free row hash of [[Fp.tableFp]] over every column's
   * exact text, and the `_graft_attrs.json` sidecar with the fixture
@@ -59,7 +60,7 @@ class ChainGoldenSpec extends AnyFunSuite with SharedSpark {
   test("every chain's products match CHAINS_FP.json at x1") {
     val root = Files.createTempDirectory("chains_fp")
     val actual = mapper.createObjectNode()
-    try for (c <- ChainFixtures.all) {
+    try for (c <- ChainFixtures.all ++ ChainFixtures.ingest) {
       val dir = Files.createDirectories(root.resolve(c.label.replace('/', '_')))
       def p(n: String) = dir.resolve(n).toString
       c.gen(spark, 1.0, p)
