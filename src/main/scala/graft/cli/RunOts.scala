@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.core.Meta
-import graft.io.{Config, Netcdf3, Readers, Rsk, Sink}
+import graft.io.{Config, Dialects, Netcdf3, Readers, Rsk, Sink}
 import graft.ops.{Burst, Clip, ProfileTrims, Qaqc, Spectra, Trims}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -112,9 +112,8 @@ object RunOts {
   }
 
   // the Config charset policy (UTF-8, Latin-1 fallback, BOM strip): real
-  // instrument exports carry degree signs and µ in their headers, which a
-  // US-ASCII decode replaces with U+FFFD and breaks the header-keyed
-  // renames (TROLL "Temperature (°C)", EXO "µS/cm")
+  // instrument exports carry degree signs and µ, which a US-ASCII decode
+  // replaces with U+FFFD
   private def readText(path: String): String =
     graft.io.Config.readTextFile(path)
 
@@ -239,11 +238,10 @@ object RunOts {
       // only when no instrument is configured
       val base = input.stripSuffix(".vel")
       val datPath = java.nio.file.Paths.get(base + ".dat")
-      val df = graft.io.Dialects.readArgonautProfile(spark,
+      val df = Dialects.readArgonautProfile(spark,
         readText(input), readText(base + ".snr"), readText(base + ".std"),
         readText(base + ".ctl"),
-        if (java.nio.file.Files.exists(datPath)) Some(readText(base + ".dat"))
-        else None)
+        if (java.nio.file.Files.exists(datPath)) Some(base + ".dat") else None)
       writeRaw(df, identity, output, meta, meta,
         s"Ingested $input (Argonaut profiles).")
       return
@@ -341,9 +339,7 @@ object RunOts {
         // renames must precede CF metadata: cfAttrs is keyed by EPIC names
         Readers.withCfMetadata(applyRenames(d, meta))
       } else if (lower.endsWith(".tid")) {
-        graft.io.Seagauge.readTid(spark, new String(readBytes(input), "US-ASCII"))
-          .withColumn("time", to_timestamp(col("time"), "MM/dd/yyyy HH:mm:ss"))
-          .withColumnRenamed("p_dbar", "P_1").withColumnRenamed("temp_c", "T_28")
+        Dialects.read(spark, input, Dialects.tid)
       } else if (isNetcdfPath(input)) {
         // re-open a netCDF product of either family — netCDF-4/HDF5
         // (incl. chunked/DEFLATE) or classic CDF-1/CDF-5 — the reference's
@@ -363,38 +359,12 @@ object RunOts {
         writeRaw(graft.io.Lisst.readVolumeConcentration(spark, text), identity,
           output + "_vc", meta, meta, s"Ingested $input (LISST vc rings).")
         return
-      } else instrument match {
-        // instrument-keyed CSV dialects (the reference's per-instrument
-        // csv2cdf entry points, stglib/core/runcmd.py:527-599); anything
-        // unmatched falls to the generic EPIC-rename CSV framework
-        case "exo" => Readers.readExoCsv(spark, input,
-          skipRows = meta.int("skiprows").getOrElse(8))
-        case "hobo" => Readers.readHoboCsv(spark, input,
-          skipRows = meta.int("skiprows").getOrElse(1))
-        case "tcm" => graft.io.Dialects.readTcm(spark, readText(input),
-          skipRows = meta.int("skiprows").getOrElse(1))
-        case "marotte" => graft.io.Dialects.readMarotte(spark, readText(input))
-        case "eco" =>
-          // counts column position differs per ECO product (PAR vs NTU)
-          val idx = meta.int("eco_counts_col").getOrElse(
-            if (meta.str("INST_TYPE").exists(_.toUpperCase.contains("PAR"))) 2
-            else 3)
-          graft.io.Dialects.readEco(spark, readText(input), idx)
-        case "troll" => graft.io.Dialects.readAquatroll(spark, readText(input),
-          skipRows = meta.int("skiprows").getOrElse(69))
-        case "mc" => graft.io.Dialects.readMicrocat(spark, readText(input))
-        case "argonaut" => graft.io.Dialects.readArgonautDat(spark, readText(input))
-        case "tb" => graft.io.Dialects.readTruBlue(spark, readText(input))
-        case "glx" => graft.io.Dialects.readGeolux(spark, readText(input))
-        case "met" =>
-          // Campbell TOA5 files announce themselves on line 1; Mayfly logs
-          // carry a fixed preamble
-          val text = readText(input)
-          if (text.startsWith("\"TOA5\"") || text.startsWith("TOA5"))
-            graft.io.Dialects.readCampbell(spark, text)
-          else graft.io.Dialects.readMayfly(spark, text,
-            skipRows = meta.int("skiprows").getOrElse(7))
-        case _ => Readers.readInstrumentCsv(spark, input, meta)
+      } else {
+        // instrument-keyed text dialects (the reference's per-instrument
+        // csv2cdf entry points, stglib/core/runcmd.py:527-599); any other
+        // instrument falls to the generic EPIC-rename CSV framework
+        Dialects.of(spark, instrument, meta, input)
+          .fold(Readers.readInstrumentCsv(spark, input, meta))(Dialects.read(spark, input, _))
       }
     writeRaw(df, identity, output, meta, Meta(meta.attrs ++ sidecarExtra),
       s"Ingested $input.")

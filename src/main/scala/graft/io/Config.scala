@@ -31,8 +31,12 @@ object Config {
     * real deployment files carry degree signs and are edited on varied
     * platforms; the JVM default charset (ASCII under a C locale) must
     * not decide whether a config parses. */
-  def readTextFile(path: String): String = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+  def readTextFile(path: String): String =
+    decodeText(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
+
+  /** `bytes` decoded under [[readTextFile]]'s policy: UTF-8, else Latin-1,
+    * with a leading BOM stripped. */
+  def decodeText(bytes: Array[Byte]): String = {
     val text = try {
       java.nio.charset.StandardCharsets.UTF_8.newDecoder()
         .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)

@@ -10,8 +10,11 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
  * readers share one shape: parse header/config → read the tabular section →
  * rename raw columns to the EPIC/CF vocabulary → attach per-variable
  * attributes → timestamp column. This module provides that shape on
- * spark.read.csv; binary formats (PD0/81R/MAT5) layer a decoder in front
- * (deferred to a later round — see SURVEY §7.2 step 8).
+ * spark.read.csv for the generic EPIC-named CSV, plus the CF metadata and
+ * netCDF re-open every reader shares; the instrument dialects with their
+ * own header blocks (EXO, HOBO, TOA5, ...) are declarations read by
+ * [[Dialects.read]], and binary formats (PD0/81R/MAT5) layer a decoder in
+ * front.
  */
 object Readers {
 
@@ -85,96 +88,6 @@ object Readers {
         d.withColumn(name, col(name).as(name, md))
       }
     }
-
-  /** First `n` lines of a (possibly multi-GB) file, read driver-side
-    * through a bounded Hadoop stream — only the bytes holding those lines
-    * are ever read, so this is O(header block), not O(file). */
-  def headLines(spark: SparkSession, path: String, n: Int): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try {
-      val br = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-      Iterator.continually(br.readLine()).takeWhile(_ != null).take(n).toVector
-    } finally in.close()
-  }
-
-  /** YSI EXO sonde CSV (stglib/exo.py:9-137): a fixed-size header block
-    * precedes the column row; column names vary in casing across KOR
-    * software versions → lowercased, then date+time columns merged.
-    *
-    * Scale shape: the preamble + column row are read DRIVER-SIDE via a
-    * bounded stream ([[headLines]] — the reference's skiprows), and the
-    * data pass is a plain splittable line scan, so a multi-GB export never
-    * has to fit in one task (the previous `wholetext` read did). Preamble
-    * lines are excluded from the data scan by exact content match —
-    * unambiguous for these formats, where metadata/header lines are never
-    * valid data rows. */
-  def readExoCsv(spark: SparkSession, path: String, skipRows: Int = 8): DataFrame = {
-    val head = headLines(spark, path, skipRows + 1)
-    require(head.size == skipRows + 1, s"file shorter than its header block: $path")
-    // the reference lowercases then replaces " "->"_" and "/"->"_per_"
-    // (stglib/exo.py:51,93-94) — the EPIC rename map is keyed by these
-    // normalized names (temp_°c, spcond_µs_per_cm, odo_%_sat, ...)
-    val header = head.last.split(",")
-      .map(_.trim.toLowerCase.replace(" ", "_").replace("/", "_per_"))
-    val data = spark.read.text(path).withColumnRenamed("value", "line")
-      .filter(length(trim(col("line"))) > 0)
-      .filter(!col("line").isin(head: _*))
-      .select(split(col("line"), ",").as("f"))
-    val cols = header.zipWithIndex.map { case (name, i) =>
-      element_at(col("f"), i + 1).as(name)
-    }
-    var df = data.select(cols.toIndexedSeq: _*)
-    // merge the date + time columns (position/casing varies)
-    val dateVar = header.find(_.contains("date"))
-    val timeVar = header.find(h => h.contains("time") && !h.contains("fract"))
-    (dateVar, timeVar) match {
-      case (Some(d), Some(t)) =>
-        df = df.withColumn("time",
-          to_timestamp(concat_ws(" ", col(d), col(t)), "M/d/yyyy H:mm:ss"))
-          .drop(d, t)
-      case _ =>
-    }
-    // numeric casts for everything except time
-    df.columns.filter(_ != "time").foldLeft(df)((acc, c) =>
-      acc.withColumn(c, col(c).cast("double")))
-  }
-
-  /** Onset HOBO CSV (stglib/hobo.py:11-45): serial-number title row, then
-    * data columns whose names encode units; sniff known patterns and rename
-    * (ds_rename_vars, stglib/hobo.py:95-154). */
-  val hoboRenames: Map[String, String] = Map(
-    "AbsPres_kPa" -> "AbsPres_dbar", "AbsPresBarom_kPa" -> "AbsPresBarom_mbar",
-    "Temp_C" -> "T_28", "condlo_uScm" -> "SpC_48_lo", "condhi_uScm" -> "SpC_48_hi")
-
-  def readHoboCsv(spark: SparkSession, path: String,
-                  names: Seq[String] = Seq("#", "DateTime", "AbsPres_kPa", "Temp_C"),
-                  skipRows: Int = 1): DataFrame = {
-    // same scale shape as readExoCsv: bounded driver-side head for the
-    // title/header rows, splittable line scan for the data
-    val head = headLines(spark, path, skipRows + 1)
-    require(head.size == skipRows + 1, s"file shorter than its header block: $path")
-    val lines = spark.read.text(path).withColumnRenamed("value", "line")
-      .filter(length(trim(col("line"))) > 0)
-      .filter(!col("line").isin(head: _*))
-      .select(split(col("line"), ",").as("f"))
-    val cols = names.zipWithIndex.map { case (name, i) =>
-      element_at(col("f"), i + 1).as(name)
-    }
-    var df = lines.select(cols.toIndexedSeq: _*)
-    df = df.withColumn("time", to_timestamp(col("DateTime"), "MM/dd/yy hh:mm:ss a"))
-      .drop("DateTime", "#")
-    df = df.columns.filter(_ != "time").foldLeft(df)((acc, c) =>
-      acc.withColumn(c, col(c).cast("double")))
-    // unit-aware renames: kPa pressures stored as dbar after /10
-    var out = df
-    if (out.columns.contains("AbsPres_kPa"))
-      out = out.withColumn("AbsPres_kPa", col("AbsPres_kPa") / 10.0)
-    hoboRenames.foldLeft(out) { case (d, (from, to)) =>
-      if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d
-    }
-  }
 
   /** shift_time + ClockError applied at ingest (stglib/core/utils.py:997-1029). */
   def applyClockError(df: DataFrame, timeCol: String, meta: Meta): DataFrame =

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * SBE 26plus Seagauge readers (stglib/sg/): `.hex` metadata scrape
- * (sgutils.read_hex), `.tid` tide series (tid2cdf.read_tid), `.wb` wave
- * bursts (sgutils.read_wb). Pressure converts psia → dbar as
- * `P/14.503773800722*10` (tid2cdf.py:46).
+ * (sgutils.read_hex) and `.wb` wave bursts (sgutils.read_wb); the `.tid`
+ * tide series (tid2cdf.read_tid) is [[Dialects.tid]]. Pressure converts
+ * psia → dbar as `P/14.503773800722*10` (tid2cdf.py:46).
  */
 object Seagauge {
 
@@ -40,21 +40,6 @@ object Seagauge {
         m("SGNumberOfWaveBursts") = col(5)
     }
     m.toMap
-  }
-
-  final case class TidRow(sample: Long, time: String, p_dbar: Double,
-                          temp_c: Double)
-
-  /** read_tid: whitespace rows (sample, date, time, P[psia], T); pressure
-    * converted to dbar. */
-  def readTid(spark: SparkSession, text: String): DataFrame = {
-    import spark.implicits._
-    val rows = text.linesIterator.filter(_.trim.nonEmpty).map { line =>
-      val c = line.trim.split("\\s+")
-      TidRow(c(0).toLong, c(1) + " " + c(2), c(3).toDouble * PsiaToDbar,
-        c(4).toDouble)
-    }.toSeq
-    spark.createDataset(rows).toDF()
   }
 
   final case class WbRow(burst: Long, startTime: Long, sample: Long,

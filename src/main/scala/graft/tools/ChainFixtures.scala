@@ -396,12 +396,12 @@ object ChainFixtures {
       f"    ${i + 1} 01/01/2024 ${hms(i * 360)}  ${14.503773800722 + i}%.12f  12.${i}"
     } :+ "", charset = "US-ASCII")
 
-  private def genExoText(s: SparkSession, m: Double, p: String => String): Unit =
+  private def genExoText(charset: String)(s: SparkSession, m: Double, p: String => String): Unit =
     writeText(p("exo.csv"), (1 to 8).map(k => s"KOR export metadata line $k,,") ++
       Seq("Date (MM/DD/YYYY),Time (HH:mm:ss),Time (Fract Sec),Temp \u00b0C," +
         "SpCond \u00b5S/cm,Turbidity NTU") ++ rows(m) { i =>
         f"1/15/2024,${i / 4}:${i % 4 * 15}%02d:00,0,${21.31 + 0.01 * i}%.2f,48012.2,${10.0 * i}%.1f"
-      } :+ "")
+      } :+ "", charset)
 
   private def genHoboText(s: SparkSession, m: Double, p: String => String): Unit =
     writeText(p("hobo.csv"), Seq("Plot Title: 10973214 \u00b0 logger",
@@ -556,7 +556,8 @@ object ChainFixtures {
     ingestCase("tb", genTruBlue, "tb.csv"),
     ingestCase("argonaut", genArgonautDat, "arg.dat"),
     ingestCase("sg", genTid, "sg.tid"),
-    ingestCase("exo", genExoText, "exo.csv"),
+    ingestCase("exo", genExoText("UTF-8"), "exo.csv"),
+    ingestCase("exo_latin1", genExoText("ISO-8859-1"), "exo.csv"),
     ingestCase("hobo", genHoboText, "hobo.csv"),
   )
 }

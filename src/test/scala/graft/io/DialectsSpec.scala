@@ -5,12 +5,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class DialectsSpec extends AnyFunSuite with SharedSpark {
 
+  /** `text` in a temp file, read as dialect `d`. */
+  private def read(text: String, d: Dialects.Dialect) = {
+    val f = java.io.File.createTempFile("dialect", ".txt")
+    f.deleteOnExit()
+    java.nio.file.Files.writeString(f.toPath, text)
+    Dialects.read(spark, f.getAbsolutePath, d)
+  }
+
   test("Marotte csv: title line skipped, 9 fixed columns, timestamp parse") {
     val csv = """MAROTTE HS title line, ignore
                 |2024-03-01 00:00:00,0.12,184.2,0.15,0.09,12.1,185.0,3.61,18.4
                 |2024-03-01 00:00:01,0.13,184.9,0.16,0.10,12.0,185.5,3.61,18.4
                 |""".stripMargin
-    val df = Dialects.readMarotte(spark, csv)
+    val df = read(csv, Dialects.marotte)
     assert(df.count() == 2)
     val r = df.orderBy("time").collect()(0)
     assert(r.getTimestamp(0).toInstant.toString == "2024-03-01T00:00:00Z")
@@ -26,7 +34,7 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
       "\"\",\"\",\"Smp\",\"Smp\"",
       "\"2024-03-01 00:00:00\",10,4.512,61.2",
       "\"2024-03-01 00:00:01\",11,4.513,60.8").mkString("\n")
-    val df = Dialects.readGeolux(spark, dat)
+    val df = read(dat, Dialects.toa5)
     assert(df.count() == 2)
     assert(df.columns.toSet == Set("time", "RECORD", "distance", "amplitude"))
     val r = df.orderBy("time").collect()(1)
@@ -41,7 +49,7 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
                 |2024-03-01 00:00:00,5.2,184.0,-5.19,-0.36
                 |2024-03-01 00:00:30,5.4,186.0,-5.37,-0.56
                 |""".stripMargin
-    val df = Dialects.readTcm(spark, txt)
+    val df = read(txt, Dialects.tcm(1))
     assert(df.count() == 2)
     val r = df.orderBy("time").collect()(0)
     assert(r.getDouble(df.columns.indexOf("speed")) == 5.2)
@@ -53,7 +61,7 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
       "Date and Time in UTC,Temp,Turb",
       "2024-03-01 00:00:00,18.5,12.1",
       "2024-03-01 00:15:00,-9999,12.2")).mkString("\n")
-    val df = Dialects.readMayfly(spark, txt)
+    val df = read(txt, Dialects.mayfly(7))
     assert(df.count() == 2)
     val rows = df.orderBy("time").collect()
     assert(rows(0).getDouble(df.columns.indexOf("Temp")) == 18.5)
@@ -62,25 +70,22 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
 
   test("ECO NTU/PAR tab-separated with counts column selection") {
     val par = "05/01/24\t12:00:00\t512\n05/01/24\t12:00:01\t514\n"
-    val dfPar = Dialects.readEco(spark, par, countsIdx = 2)
+    val dfPar = read(par, Dialects.eco(2))
     assert(dfPar.count() == 2)
     assert(dfPar.orderBy("time").collect()(0).getDouble(1) == 512.0)
     val ntu = "05/01/24\t12:00:00\t700\t123\t456\n"
-    val dfNtu = Dialects.readEco(spark, ntu, countsIdx = 3)
+    val dfNtu = read(ntu, Dialects.eco(3))
     assert(dfNtu.collect()(0).getDouble(1) == 123.0)
   }
 
-  test("MicroCAT .asc with header scrape") {
+  test("MicroCAT .asc: * header and prompt lines skipped") {
     val txt = """* SBE37-SM V 2.6b  SERIAL NO. 1234  01 Mar 2024  00:00:00
                 |* sample interval = 60 seconds
                 |*S>
                 | 18.7301, 4.23450, 29.9182, 01 Mar 2024, 00:00:00
                 | 18.7302, 4.23455, 29.9183, 01 Mar 2024, 00:01:00
                 |""".stripMargin
-    val hdr = Dialects.microcatHeader(txt)
-    assert(hdr("serial_number") == "1234")
-    assert(hdr("sample_interval") == "60")
-    val df = Dialects.readMicrocat(spark, txt)
+    val df = read(txt, Dialects.microcat)
     assert(df.count() == 2)
     val r = df.orderBy("time").collect()(0)
     assert(r.getDouble(df.columns.indexOf("temp")) == 18.7301)
@@ -92,7 +97,7 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
       "Date and Time (UTC),Temperature (C),Actual Conductivity (\u00b5S/cm),Pressure (PSI)",
       "2024-03-01 00:00:00,18.5,30123.0,14.7",
       "2024-03-01 00:01:00,18.6,30150.0,14.8")).mkString("\n")
-    val df = Dialects.readAquatroll(spark, txt, skipRows = 3)
+    val df = read(txt, Dialects.troll(3))
     assert(df.columns.toSet == Set("time", "temperature", "conductivity", "pressure"))
     assert(df.count() == 2)
     assert(df.orderBy("time").collect()(0).getDouble(
@@ -107,8 +112,7 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
                 |1,TB,0,2024-03-01 00:00:00,0.0,10.13,18.2
                 |2,TB,0,2024-03-01 00:10:00,600.0,10.14,18.3
                 |""".stripMargin
-    assert(Dialects.truBlueHeader(txt)("serial_number") == "998877")
-    val df = Dialects.readTruBlue(spark, txt)
+    val df = read(txt, Dialects.truBlue)
     assert(df.count() == 2)
     val r = df.orderBy("time").collect()(1)
     assert(r.getDouble(df.columns.indexOf("P_1")) == 10.14)
@@ -119,29 +123,13 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
                 | 2024 2 1 0 0 0 0.12 -0.03 21.5
                 | 2024 2 1 0 30 0 0.15 -0.01 22.0
                 |""".stripMargin
-    val df = Dialects.readArgonautDat(spark, dat)
+    val df = read(dat, Dialects.argonautDat)
     assert(df.count() == 2)
     val r = df.orderBy("time").collect()(0)
     assert(r.getTimestamp(df.columns.indexOf("time")).toInstant.toString
       == "2024-02-01T00:00:00Z")
     assert(r.getDouble(df.columns.indexOf("VelX")) == 0.12)
     assert(r.getDouble(df.columns.indexOf("SNR1")) == 21.5)
-  }
-
-  test("AreaComp CSV: 4 preamble lines skipped, numeric columns") {
-    val txt = """AreaComp 3.1
-                |Station: TEST
-                |Units: m
-                |generated 2024-02-01
-                |Stage,Area,Width
-                |0.5,12.0,30.0
-                |1.0,25.5,31.0
-                |""".stripMargin
-    val df = Dialects.readAreacomp(spark, txt)
-    assert(df.count() == 2)
-    assert(df.columns.toSeq == Seq("Stage", "Area", "Width"))
-    val r = df.orderBy("Stage").collect()(1)
-    assert(r.getDouble(1) == 25.5)
   }
 
   test("Argonaut profile set: .vel/.snr/.std long-format, .ctl geometry," +
@@ -171,7 +159,11 @@ class DialectsSpec extends AnyFunSuite with SharedSpark {
     val dat = Seq("Year Month Day Hour Minute Second Level Flow",
       "2024 2 1 0 0 0 3.25 12.0", "2024 2 1 0 10 0 3.35 12.5",
       "2024 2 1 0 20 0 3.45 13.0").mkString("\n")
-    val df = Dialects.readArgonautProfile(spark, vel, snr, std, ctl, Some(dat))
+    val datFile = java.io.File.createTempFile("argonaut", ".dat")
+    datFile.deleteOnExit()
+    java.nio.file.Files.writeString(datFile.toPath, dat)
+    val df = Dialects.readArgonautProfile(spark, vel, snr, std, ctl,
+      Some(datFile.getAbsolutePath))
     assert(df.count() == 6) // 3 times x 2 bins
     val cols = df.columns
     val r = df.filter("bin = 1").orderBy("time").collect()(0)

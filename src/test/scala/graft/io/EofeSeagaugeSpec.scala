@@ -64,7 +64,10 @@ class EofeSeagaugeSpec extends AnyFunSuite with SharedSpark {
     val tid = """    1 01/01/2024 00:00:00  14.503773800722  12.1
                 |    2 01/01/2024 00:06:00  29.007547601444  12.2
                 |""".stripMargin
-    val df = Seagauge.readTid(spark, tid)
+    val f = java.io.File.createTempFile("seagauge", ".tid")
+    f.deleteOnExit()
+    java.nio.file.Files.writeString(f.toPath, tid)
+    val df = Dialects.read(spark, f.getAbsolutePath, Dialects.tid)
     val rows = df.collect()
     assert(rows.length == 2)
     assert(math.abs(rows(0).getDouble(2) - 10.0) < 1e-9)  // 1 atm-ish → 10 dbar

@@ -12,7 +12,7 @@ class ExoHoboSpec extends AnyFunSuite with SharedSpark {
     w.println("1/15/2024,0:00:00,21.31,48012.2,3.4")
     w.println("1/15/2024,0:15:00,21.35,48013.8,3.6")
     w.close()
-    val df = Readers.readExoCsv(spark, f.getAbsolutePath)
+    val df = Dialects.read(spark, f.getAbsolutePath, Dialects.exo(8))
     assert(df.count() == 2)
     assert(df.columns.contains("time"))
     assert(df.columns.exists(_.startsWith("temp")))
@@ -32,7 +32,7 @@ class ExoHoboSpec extends AnyFunSuite with SharedSpark {
     }
     w.close()
     withConf("spark.sql.files.maxPartitionBytes" -> "2048") {
-      val df = Readers.readExoCsv(spark, f.getAbsolutePath)
+      val df = Dialects.read(spark, f.getAbsolutePath, Dialects.exo(8))
       assert(df.rdd.getNumPartitions > 1, "text scan should split the file")
       assert(df.count() == 500)
       assert(df.select("time").distinct().count() == 500) // every line parsed
@@ -47,7 +47,7 @@ class ExoHoboSpec extends AnyFunSuite with SharedSpark {
     w.println("1,01/15/24 12:00:00 AM,101.325,21.5")
     w.println("2,01/15/24 12:15:00 AM,101.300,21.4")
     w.close()
-    val df = Readers.readHoboCsv(spark, f.getAbsolutePath)
+    val df = Dialects.read(spark, f.getAbsolutePath, Dialects.hobo(1))
     assert(df.count() == 2)
     assert(df.columns.toSet == Set("time", "AbsPres_dbar", "T_28"))
     val r = df.orderBy("time").head()

@@ -113,6 +113,20 @@ class AuditAllSpec extends AnyFunSuite with SharedSpark {
     assert(sites == 1, s"$sites Sink.writeParquet( call sites in RunOts")
   }
 
+  test("text dialects reach Spark through one splittable scan, not a driver String") {
+    // a file decoded whole on the driver and sent back as a LocalRelation
+    // is bounded by driver memory and read by one task
+    def lines(f: String) = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft", f)).toArray(Array.empty[String]).toSeq
+    val lookups = lines("cli/RunOts.scala")
+      .filter(l => l.contains("Dialects.") && !l.contains("readArgonautProfile"))
+    assert(lookups.nonEmpty, "RunOts no longer looks dialects up")
+    val viaText = lookups.filter(l => l.contains("readText") || l.contains("readBytes"))
+    assert(viaText.isEmpty, s"dialect reads through a driver String: $viaText")
+    val local = lines("io/Dialects.scala").filter(_.contains("createDataset"))
+    assert(local.isEmpty, s"Dialects builds a LocalRelation: $local")
+  }
+
   /** (file, enclosing `def`) of every line of `root`'s Scala files that
     * matches `re`. */
   private def sites(root: String, re: scala.util.matching.Regex): Seq[(String, String)] = {
