@@ -13,21 +13,10 @@ package graft.kernels
  * cascaded into second-order sections.
  */
 object Butterworth {
+  import Diwasp.C
 
   /** One second-order section: b0,b1,b2,a1,a2 (a0 normalized to 1). */
   final case class Sos(b0: Double, b1: Double, b2: Double, a1: Double, a2: Double)
-
-  private case class C(re: Double, im: Double) {
-    def +(o: C) = C(re + o.re, im + o.im)
-    def -(o: C) = C(re - o.re, im - o.im)
-    def *(o: C) = C(re * o.re - im * o.im, re * o.im + im * o.re)
-    def /(o: C) = {
-      val d = o.re * o.re + o.im * o.im
-      C((re * o.re + im * o.im) / d, (im * o.re - re * o.im) / d)
-    }
-    def *(s: Double) = C(re * s, im * s)
-    def conj = C(re, -im)
-  }
 
   /** Butterworth low-pass SOS cascade, order n (even), cutoff wc [Hz], fs [Hz]. */
   def lowpass(n: Int, wc: Double, fs: Double): Array[Sos] = {
