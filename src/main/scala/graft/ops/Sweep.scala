@@ -113,8 +113,12 @@ private[graft] object Sweep {
   }
 
   /** A [[Node]] planned: it requires its child laid out as `in` and reports
-    * the layout `out` declares, as wide as its child. `run` runs on the
-    * driver, so a task that captures the plan goes without it. */
+    * the layout `out` declares, as wide as its child. That width is an upper
+    * bound, as it is for Spark's own range exchange: ranging k < width
+    * distinct keys fills at most k partitions, so at most k groups reach a
+    * per-group fan-out ([[Spectra.perGroup]]) that takes this layout as it
+    * is, one task each, and no kernel parallelism is lost. `run` runs on
+    * the driver, so a task that captures the plan goes without it. */
   private final case class Exec(output: Seq[Attribute], in: Layout, out: Option[Layout],
       @transient run: RDD[InternalRow] => RDD[InternalRow], child: SparkPlan) extends UnaryExecNode {
     override def nodeName: String = "Sweep"

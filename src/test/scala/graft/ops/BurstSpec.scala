@@ -163,6 +163,35 @@ class BurstSpec extends AnyFunSuite with SharedSpark {
     Spread.release(spark)
   }
 
+  test("a cut wider than the cluster fans out as it is, each burst once") {
+    // the cut's declared width 16 is an upper bound: the range exchange of
+    // 10 rows makes at most 10 partitions and its 3 bursts fill 3 of them,
+    // so the fan-out keeps the layout and loses no parallelism
+    import spark.implicits._
+    withConf("spark.sql.shuffle.partitions" -> "16") {
+      val df = (0 until 10).map(i => (i.toLong, i * 0.5)).toDF("t", "x")
+      val bursts = Burst.fromContinuous(df, Seq("t"), Nil, 3, "burst", "sample")
+      assert(exchanges(bursts.queryExecution.executedPlan) == Seq((REPARTITION_BY_NUM, 16)))
+      assert(bursts.rdd.getNumPartitions <= 10)
+      val calls = spark.sparkContext.longAccumulator("bursts")
+      def sums(d: DataFrame) = Spectra.perGroup(d.select(col("burst").as("_1"),
+          col("sample").as("_2"), col("x").as("_3")).as[(Long, Long, Double)]) { (k, rows) =>
+        calls.add(1); Iterator.single((k, rows.map(_._3).sum))
+      }
+      val fanned = sums(bursts)
+      assert(exchanges(fanned.queryExecution.executedPlan) ==
+        exchanges(bursts.queryExecution.executedPlan))
+      val got = fanned.collect().sorted.toSeq
+      assert(calls.value == 3)
+      val plain = sums(spark.createDataFrame(bursts.rdd, bursts.schema))
+      assert(shuffles(plain.queryExecution.executedPlan).map(_.shuffleOrigin) ==
+        Seq(REPARTITION_BY_NUM))
+      assert(got == plain.collect().sorted.toSeq)
+      assert(got == Seq((0L, 1.5), (1L, 6.0), (2L, 10.5)))
+    }
+    Spread.release(spark)
+  }
+
   test("a coalescable repartition on the key still gets the fan-out's own exchange") {
     import spark.implicits._
     val ds = (0 until 400).map(i => (i / 50L, i % 50L, i * 1.0)).toDF("_1", "_2", "_3")
