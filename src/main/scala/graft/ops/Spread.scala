@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.columnar.DefaultCachedBatchSerializer
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -81,13 +83,19 @@ object Spread {
     p
   }
 
-  /** `rows`, copied (a plan may reuse one row buffer) and persisted
-    * MEMORY_AND_DISK until [[release]] of `spark`: [[shared]] for the rows
-    * an exec node reads more than once (a sweep's ranged input). */
-  private[graft] def kept(spark: SparkSession, rows: RDD[InternalRow]): RDD[InternalRow] = {
-    val p = rows.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
-    registry.synchronized(keptRows += spark -> p)
-    p
+  /** `rows`, laid out as `attrs`, kept in Spark's columnar cache format
+    * (the encoder InMemoryRelation uses) and persisted MEMORY_AND_DISK until
+    * [[release]] of `spark`: [[shared]] for the rows an exec node reads more
+    * than once (a sweep's ranged input). Each partition's rows come back in
+    * one reused buffer, so a reader copies any row it holds past `next()`. */
+  private[graft] def kept(spark: SparkSession, rows: RDD[InternalRow],
+                          attrs: Seq[Attribute]): RDD[InternalRow] = {
+    val codec = new DefaultCachedBatchSerializer
+    val conf = spark.sessionState.conf
+    val batches = codec.convertInternalRowToCachedBatch(rows, attrs,
+      StorageLevel.MEMORY_AND_DISK, conf).persist(StorageLevel.MEMORY_AND_DISK)
+    registry.synchronized(keptRows += spark -> batches)
+    codec.convertCachedBatchToInternalRow(batches, attrs, attrs, conf)
   }
 
   // strong refs are deliberate: CacheManager already pins the cached data

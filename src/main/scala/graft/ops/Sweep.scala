@@ -32,8 +32,10 @@ import org.apache.spark.sql.types.StructType
  *     wide or wider ([[laidOut]], e.g. a sweep's output). The exec requires
  *     that layout of its child, so the planner checks it: the partitions
  *     read in index order are the series in order.
- *  2. The exec persists its child's rows ([[Spread.kept]]: both passes read
- *     them once; [[Spread.release]] frees them), `summarize` reduces each
+ *  2. The exec persists its child's rows in the columnar cache format
+ *     ([[Spread.kept]]: both passes read them once; [[Spread.release]] frees
+ *     them; a row read back is valid until the iterator's next row, so a
+ *     summary or pass copies any row it keeps), `summarize` reduces each
  *     partition to one value, and the driver collects them, one per
  *     partition, in partition order. This summary job runs when the action
  *     first asks for the pass's partitions.
@@ -71,9 +73,10 @@ private[graft] object Sweep {
       if (laidOut(df, in, width)) df
       else df.repartitionByRange(width, in.range.map(col): _*)
         .sortWithinPartitions(in.sort.map(col): _*)
+    val child = ranged.queryExecution.analyzed
     GraftColumnBridge.ofPlan(spark, Node(DataTypeUtils.toAttributes(schema), in, out,
-      rows => new Passes(Spread.kept(spark, rows), summarize, reads, pass),
-      ranged.queryExecution.analyzed))
+      rows => new Passes(Spread.kept(spark, rows, child.output), summarize, reads, pass),
+      child))
   }
 
   /** Whether `df`'s plan ranges its rows on `layout.range` into `width` or
