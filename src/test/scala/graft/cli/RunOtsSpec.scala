@@ -879,7 +879,7 @@ class RunOtsSpec extends AnyFunSuite with SharedSpark {
     }
     val meta = graft.core.Meta(Map.empty[String, Any])
 
-    // exo: header block + casing + date/time merge via readExoCsv
+    // exo: header block + casing + date/time merge (Dialects.exo)
     val exo = put("exo.csv",
       (1 to 8).map(i => s"KOR export metadata line $i").mkString("\n") +
       "\nDate (MM/DD/YYYY),Time (HH:mm:ss),Temp \u00b0C,SpCond \u00b5S/cm\n" +
@@ -889,7 +889,7 @@ class RunOtsSpec extends AnyFunSuite with SharedSpark {
     val e = spark.read.parquet(exoOut)
     assert(e.count() == 2 && e.columns.exists(_.startsWith("temp")))
 
-    // tcm (Lowell): DateTime/Speed/Bearing/Vel-N/Vel-E via readTcm
+    // tcm (Lowell): DateTime/Speed/Bearing/Vel-N/Vel-E (Dialects.tcm)
     val tcm = put("tcm_CR.txt",
       "ISO 8601 Time,Speed (cm/s),Bearing (degrees),Velocity-N (cm/s),Velocity-E (cm/s)\n" +
       "2024-03-01T00:00:00.000,12.5,184.0,-12.4,1.1\n" +

@@ -39,6 +39,25 @@ class ExoHoboSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("EXO and HOBO: a Latin-1 header drops out of the data scan, names decoded") {
+    def latin1(lines: String*) = {
+      val f = java.io.File.createTempFile("latin1", ".csv")
+      f.deleteOnExit()
+      java.nio.file.Files.write(f.toPath, lines.map(_ + "\n").mkString.getBytes("ISO-8859-1"))
+      f.getAbsolutePath
+    }
+    val exo = Dialects.read(spark, latin1((1 to 8).map(i => s"KOR export metadata line $i") ++
+      Seq("Date (MM/DD/YYYY),Time (HH:mm:ss),Temp °C,SpCond µS/cm",
+        "1/15/2024,0:00:00,21.31,48012.2", "1/15/2024,0:15:00,21.35,48013.8"): _*),
+      Dialects.exo(8))
+    assert(exo.columns.toSeq == Seq("temp_°c", "spcond_µs_per_cm", "time"))
+    assert(exo.count() == 2)
+    val hobo = Dialects.read(spark, latin1("Plot Title: 10973214 ° logger",
+      "#,Date Time,Abs Pres kPa,Temp °C", "1,01/15/24 12:00:00 AM,101.325,21.5"),
+      Dialects.hobo(1))
+    assert(hobo.count() == 1)
+  }
+
   test("HOBO: title row skipped, kPa -> dbar, EPIC renames") {
     val f = java.io.File.createTempFile("hobo", ".csv")
     val w = new java.io.PrintWriter(f)
